@@ -11,10 +11,15 @@ the reference pushing ``$gte/$lte`` filters into mongod.
 
 from __future__ import annotations
 
+import functools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from mongo_to_clickhouse_spark import cache
 
 TABLES = (
     "region",
@@ -29,89 +34,27 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Analyzed-scan cache: `spark.read.parquet` costs ~80 ms per call (parquet
-# footer + schema resolution round-trips) and the ts-dtype probe another
-# ~30 ms, which multiplied by 2-4 tables per query was the dominant FIXED
-# cost of every short query (measured: 20 reads = 1.6 s while the whole
-# query runs 0.3 s). DataFrames are immutable logical plans, so the
-# resolved+normalized scan is safely reusable across queries. The cache
-# entry pins its SparkSession, so an id() key can never alias a new
-# session (the pinned object stays alive — one entry per (session, dir,
-# table), so growth is bounded by tables × dirs × live sessions; call
-# clear_scan_cache() to release sessions you've stopped). The parquet
-# file's (mtime_ns, size) is stored with each entry, so an in-place
-# fixture overwrite invalidates the cached scan instead of silently
-# serving the old schema. Filters/projections applied by callers layer
-# on top and still push down to the scan.
-_SCAN_CACHE: dict[
-    tuple[int, str, str],
-    tuple[tuple[int, int], SparkSession, DataFrame, DataFrame, bool],
-] = {}
+def cached_work_dir(spark, op, sf_dir, tables, build):
+    """Return a memoized work dir for (op, sf_dir), building it with
+    ``build(root_dir)`` on first use or when any source table in
+    ``tables`` changed on disk (the stale dir is deleted).
 
+    The sink/layout-demo queries stage a rewritten copy of a fixture
+    table here (date-partitioned events for DPP, the small-files layout
+    for compaction, …), so repeated invocations — bench loops, parity
+    sweeps — reuse the first write instead of re-shuffling the table
+    and accreting full copies in TMPDIR."""
 
-def clear_scan_cache() -> None:
-    """Drop every cached scan (and the SparkSession references they pin).
-    Tests that stop sessions or rewrite fixture files in place can call
-    this; normal pipelines never need to."""
-    _SCAN_CACHE.clear()
-    # the autoscale knob derivations memoize corpus counts per
-    # (sf_dir, table); an in-place fixture rewrite must invalidate those
-    # too or a derived knob could be computed from the old row count
-    from mongo_to_clickhouse_spark.operators.autoscale import _COUNT_CACHE
+    def make():
+        root = tempfile.mkdtemp(prefix=f"{op}-")
+        build(root)
+        return root
 
-    _COUNT_CACHE.clear()
-    # same hazard for the memoized embedding width (ADVICE r10): a
-    # fixture rewritten in place with a different vector dimension must
-    # not keep serving stale per-dim unrolled columns
-    from mongo_to_clickhouse_spark.queries.vectorops import _EMB_DIM_CACHE
-
-    _EMB_DIM_CACHE.clear()
-
-
-# Materialized-layout cache for the sink/layout-demo queries that stage a
-# rewritten copy of a fixture table (date-partitioned events for DPP, the
-# small-files layout for compaction, …): repeated invocations — bench
-# loops, parity sweeps — reuse the first write instead of re-shuffling the
-# table and accreting full copies in TMPDIR. Keyed by the source tables'
-# (mtime_ns, size) so an in-place fixture rewrite rebuilds; the stale dir
-# is deleted on rebuild.
-_WORK_DIR_CACHE: dict[tuple, tuple[tuple, str]] = {}
-
-
-def cached_work_dir(op, sf_dir, tables, build):
-    """Return a per-process memoized work dir for (op, sf_dir), building
-    it with ``build(root_dir)`` on first use or when any source table in
-    ``tables`` changed on disk."""
-    import shutil
-    import tempfile
-    import uuid
-
-    stats = tuple(
-        (t, os.stat(table_path(sf_dir, t)).st_mtime_ns,
-         os.stat(table_path(sf_dir, t)).st_size)
-        for t in tables
+    return cache.get(
+        spark, sf_dir, f"work_dir/{op}", make, tables,
+        release=functools.partial(shutil.rmtree, ignore_errors=True),
     )
-    key = (op, sf_dir)
-    hit = _WORK_DIR_CACHE.get(key)
-    if hit is not None and hit[0] == stats and os.path.isdir(hit[1]):
-        return hit[1]
-    if hit is not None:
-        shutil.rmtree(hit[1], ignore_errors=True)
-    root = tempfile.mkdtemp(prefix=f"{op}-{uuid.uuid4().hex[:8]}-")
-    build(root)
-    _WORK_DIR_CACHE[key] = (stats, root)
-    return root
-
-
-def clear_work_dir_cache() -> None:
-    """Delete every cached layout dir (tests / disk-pressure hook)."""
-    import shutil
-
-    for _, root in _WORK_DIR_CACHE.values():
-        shutil.rmtree(root, ignore_errors=True)
-    _WORK_DIR_CACHE.clear()
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -121,12 +64,19 @@ def table_path(sf_dir: str, name: str) -> str:
 def _scan(
     spark: SparkSession, sf_dir: str, name: str
 ) -> tuple[DataFrame, DataFrame, bool]:
-    """Returns (raw scan, normalized scan, events_ts_is_bigint)."""
-    key = (id(spark), sf_dir, name)
-    st = os.stat(table_path(sf_dir, name))
-    stat_key = (st.st_mtime_ns, st.st_size)
-    hit = _SCAN_CACHE.get(key)
-    if hit is None or hit[0] != stat_key:
+    """Returns (raw scan, normalized scan, events_ts_is_bigint).
+
+    Memoized per (session, sf_dir, table) in ``cache``:
+    `spark.read.parquet` costs ~80 ms per call (parquet footer + schema
+    resolution round-trips) and the ts-dtype probe another ~30 ms, which
+    multiplied by 2-4 tables per query was the dominant FIXED cost of
+    every short query (measured: 20 reads = 1.6 s while the whole query
+    runs 0.3 s). DataFrames are immutable logical plans, so the
+    resolved+normalized scan is safely reusable across queries;
+    filters/projections applied by callers layer on top and still push
+    down to the scan."""
+
+    def build():
         raw = spark.read.parquet(table_path(sf_dir, name))
         norm, is_bigint = raw, False
         if name == "events" and dict(raw.dtypes).get("ts") == "bigint":
@@ -135,9 +85,9 @@ def _scan(
             # µs exactly like DuckDB reading the same file.
             is_bigint = True
             norm = raw.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-        hit = (stat_key, spark, raw, norm, is_bigint)
-        _SCAN_CACHE[key] = hit
-    return hit[2], hit[3], hit[4]
+        return raw, norm, is_bigint
+
+    return cache.get(spark, sf_dir, f"scan/{name}", build, (name,))
 
 
 def load_table(
@@ -174,14 +124,3 @@ def load_table(
             )
         ).withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
     return norm.filter(F.col("ts").between(*ts_range))
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view (mirrors the DuckDB
-    oracle, which pre-registers views of the same names)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

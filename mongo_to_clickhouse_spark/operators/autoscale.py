@@ -10,7 +10,7 @@ corpus grows). This module is that derivation, done EXACTLY and in
 lock-step in both engines:
 
 - the Spark plan reads n once per (sf_dir, table) — a column-pruned
-  parquet count, memoized for the session lifetime — and bakes the
+  parquet count, memoized in ``cache`` — and bakes the
   derived knob into the plan as a literal (so the physical plan stays
   pruned and codegen-able, with no scalar-subquery gating in the hot
   path);
@@ -30,13 +30,11 @@ correctly-rounded double sqrt never rounds across an integer).
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import SparkSession
 
-# (abspath(sf_dir), table[, "distinct:col"]) -> exact count; fixtures
-# are immutable parquet dirs, so counts never change under a live session
-_COUNT_CACHE: dict[tuple, int] = {}
+from mongo_to_clickhouse_spark import cache
+from mongo_to_clickhouse_spark.io import load_table
 
 
 def corpus_count(spark: SparkSession, sf_dir: str, table: str) -> int:
@@ -44,24 +42,16 @@ def corpus_count(spark: SparkSession, sf_dir: str, table: str) -> int:
     is a function of. Memoized; the count itself is a column-pruned
     parquet scan (statistics-only at the format level), control-plane
     by construction (one scalar to the driver)."""
-    key = (os.path.abspath(sf_dir), table)
-    if key not in _COUNT_CACHE:
-        from mongo_to_clickhouse_spark.io import load_table
-
-        _COUNT_CACHE[key] = load_table(spark, sf_dir, table).count()
-    return _COUNT_CACHE[key]
+    return cache.get(
+        spark, sf_dir, f"count/{table}",
+        lambda: load_table(spark, sf_dir, table).count(), (table,),
+    )
 
 
 def count_sql(table: str) -> str:
     """The oracle-side mirror of corpus_count: same relation, same n."""
     return f"(SELECT COUNT(*) FROM {table})"
 
-
-# Historical: the round-11 build gated the fan-out on corpus count so
-# graded-sf plans stayed byte-identical. Kept only as the legacy name
-# some tests/docs reference; the optimization round made the fan-out
-# unconditional (see kernel_fanout).
-KERNEL_FANOUT_GATE = 20_000
 
 # Rows per task for a ~1 ms/row Python kernel: ~4 s of compute per
 # task — large enough to amortize Python-worker startup and Arrow
@@ -107,19 +97,11 @@ def distinct_count(
     statistic some derivations need (round 11: dedup_embedding_cosine's
     sub-block count divides n by |labels|·target). Memoized like
     corpus_count; same control-plane posture."""
-    key = (os.path.abspath(sf_dir), table, f"distinct:{col}")
-    if key not in _COUNT_CACHE:
-        from mongo_to_clickhouse_spark.io import load_table
-
-        _COUNT_CACHE[key] = (
-            load_table(spark, sf_dir, table).select(col).distinct().count()
-        )
-    return _COUNT_CACHE[key]
-
-
-def distinct_count_sql(table: str, col: str) -> str:
-    """Oracle-side mirror of distinct_count."""
-    return f"(SELECT COUNT(DISTINCT {col}) FROM {table})"
+    return cache.get(
+        spark, sf_dir, f"distinct/{table}.{col}",
+        lambda: load_table(spark, sf_dir, table).select(col).distinct().count(),
+        (table,),
+    )
 
 
 def _clamp(v: int, lo: int, hi: int) -> int:

@@ -27,6 +27,8 @@ import tempfile
 
 from pyspark.sql import DataFrame
 
+from mongo_to_clickhouse_spark import cache
+
 
 def reliable_checkpoint(
     df: DataFrame, preserve_partitioning: bool = False
@@ -80,46 +82,20 @@ def reliable_checkpoint(
 barrier = reliable_checkpoint
 
 
-def barrier_view(df: DataFrame, name: str) -> str:
-    """``barrier`` + temp view registration."""
-    df = barrier(df)
-    df.createOrReplaceTempView(name)
-    return name
-
-
-# Memoized barrier views: the materialized (doc_id, tokens/shingles/
-# window-hash) relations are pure functions of one fixture table, but
-# every query invocation used to re-run the checkpoint WRITE (~0.3-1.1 s
-# each at sf0.1) — the dominant fixed cost of the whole gram/minhash
-# family under bench loops and parity sweeps. Keyed like io._SCAN_CACHE:
-# (session id, sf_dir, view name) + the source tables' (mtime_ns, size),
-# so in-place fixture rewrites rebuild and a pinned session can never
-# alias a new one. The cached DataFrame re-reads its checkpoint files on
-# reuse; the temp view is re-registered on every call so interleaved
-# sf_dirs in one session always see their own data.
-_BARRIER_VIEW_CACHE: dict[tuple, tuple] = {}
-
-
 def cached_barrier(spark, sf_dir, name, build, tables=("documents",),
                    preserve_partitioning=False):
-    """Memoized ``barrier``: ``build()`` → checkpointed DataFrame,
-    rebuilt only when a source table in ``tables`` changes on disk."""
-    import os
-
-    from mongo_to_clickhouse_spark.io import table_path
-
-    stats = tuple(
-        (t, os.stat(table_path(sf_dir, t)).st_mtime_ns,
-         os.stat(table_path(sf_dir, t)).st_size)
-        for t in tables
+    """``barrier(build())`` memoized in ``cache``, rebuilt when a source
+    table in ``tables`` changes on disk. The materialized (doc_id,
+    tokens/shingles/window-hash) relations are pure functions of the
+    fixture, and a checkpoint WRITE costs ~0.3-1.1 s at sf0.1 — the
+    dominant fixed cost of the gram/minhash family under repeated
+    calls. The cached DataFrame re-reads its checkpoint files on reuse."""
+    key = f"barrier/{name}" + ("/copart" if preserve_partitioning else "")
+    return cache.get(
+        spark, sf_dir, key,
+        lambda: barrier(build(), preserve_partitioning=preserve_partitioning),
+        tables,
     )
-    key = (id(spark), sf_dir, name, preserve_partitioning)
-    hit = _BARRIER_VIEW_CACHE.get(key)
-    if hit is None or hit[0] != stats:
-        hit = (stats, spark,
-               barrier(build(), preserve_partitioning=preserve_partitioning))
-        _BARRIER_VIEW_CACHE[key] = hit
-    return hit[2]
 
 
 def cached_barrier_view(spark, sf_dir, name, build, tables=("documents",),
@@ -131,9 +107,3 @@ def cached_barrier_view(spark, sf_dir, name, build, tables=("documents",),
         preserve_partitioning=preserve_partitioning,
     ).createOrReplaceTempView(name)
     return name
-
-
-def clear_barrier_view_cache() -> None:
-    """Drop every cached barrier view (tests that stop sessions or
-    rewrite fixtures in place)."""
-    _BARRIER_VIEW_CACHE.clear()

@@ -151,7 +151,7 @@ def source_jsonl_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "overwrite"
         ).json(os.path.join(root, "docs"))
 
-    root = cached_work_dir("jsonl-scan", sf_dir, ("documents",), build)
+    root = cached_work_dir(spark, "jsonl-scan", sf_dir, ("documents",), build)
     docs = spark.read.schema(
         "doc_id bigint, text string, lang string, source string,"
         " n_chars bigint"
@@ -717,7 +717,7 @@ def source_orc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "overwrite"
         ).orc(os.path.join(root, "docs"))
 
-    root = cached_work_dir("orc-scan", sf_dir, ("documents",), build)
+    root = cached_work_dir(spark, "orc-scan", sf_dir, ("documents",), build)
     docs = spark.read.schema(
         "doc_id bigint, text string, lang string, source string,"
         " n_chars bigint"
@@ -757,7 +757,7 @@ def source_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(root, "docs")
         )
 
-    root = cached_work_dir("csv-scan", sf_dir, ("documents",), build)
+    root = cached_work_dir(spark, "csv-scan", sf_dir, ("documents",), build)
     docs = (
         spark.read.schema(
             "doc_id bigint, text string, lang string, source string,"
@@ -814,7 +814,8 @@ def source_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(root, "docs", "gen=2")
         )
 
-    root = cached_work_dir("schema-merge", sf_dir, ("documents",), build)
+    root = cached_work_dir(spark, "schema-merge", sf_dir, ("documents",),
+                           build)
     merged = spark.read.option("mergeSchema", True).parquet(
         os.path.join(root, "docs")
     )

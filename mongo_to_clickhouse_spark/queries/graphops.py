@@ -29,6 +29,14 @@ _PR_BASE = 150_000       # (1 - damping) in micro units
 # deterministic and identical in both engines (ranks stay positive)
 
 
+def _copart_parts(est_rows: int) -> int:
+    """Hash partitions (at least 2) for a co-partitioned graph barrier of
+    ``est_rows`` rows, none over ``graph_copart_rows_per_part``."""
+    from mongo_to_clickhouse_spark import config as _cfg
+
+    return max(2, -(-est_rows // _cfg.TUNING.graph_copart_rows_per_part))
+
+
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{_PR_TOPK} PageRank nodes of the trade graph.
 
@@ -100,7 +108,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     est_rows = 2 * corpus_count(spark, sf_dir, "lineitem")
     preserve = est_rows >= _cfg.TUNING.graph_copart_min_rows
-    parts = max(2, est_rows // _cfg.TUNING.graph_copart_rows_per_part)
+    parts = _copart_parts(est_rows)
     # (src, dst, degree) materialized once per (session, sf_dir): the
     # degree join happens at build time, not once per round
     adj = cached_barrier(
@@ -264,7 +272,7 @@ def _tri_adj_view(spark: SparkSession, sf_dir: str) -> str:
         ))
         preserve = False
     else:
-        parts = max(2, est_rows // _cfg.TUNING.graph_copart_rows_per_part)
+        parts = _copart_parts(est_rows)
         build = lambda: spark.sql(_triangle_adj_sql(  # noqa: E731
             "(SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem)"
         )).repartition(parts, "a")

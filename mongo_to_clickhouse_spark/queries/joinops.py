@@ -899,7 +899,7 @@ def join_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
         )
 
     out = _os.path.join(
-        cached_work_dir("dpp", sf_dir, ("events",), _build), "events"
+        cached_work_dir(spark, "dpp", sf_dir, ("events",), _build), "events"
     )
     fact = spark.read.parquet(out)
     # make the pruning observable at fixture scale: restrict the dim to
@@ -978,9 +978,8 @@ def join_runtime_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             for k, v in saved.items():
                 spark.conf.set(k, v)
 
-    out = _os.path.join(
-        cached_work_dir("bloom", sf_dir, ("lineitem", "orders"), _build), "agg"
-    )
+    out = _os.path.join(cached_work_dir(
+        spark, "bloom", sf_dir, ("lineitem", "orders"), _build), "agg")
     return spark.read.parquet(out).orderBy("l_returnflag")
 
 

@@ -104,7 +104,6 @@ MULTIMODAL_DECODE_STUB_SQL = """
 
 
 from mongo_to_clickhouse_spark.operators.autoscale import (  # noqa: E402
-    KERNEL_FANOUT_GATE as _DECODE_REPARTITION_DOCS,
     kernel_fanout as _decode_fanout,
 )
 

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from mongo_to_clickhouse_spark import cache
 from mongo_to_clickhouse_spark.config import TUNING
 from mongo_to_clickhouse_spark.functions.vectors import (
     cosine_with_norms,
@@ -4533,19 +4534,16 @@ def _rq_stride(spark: SparkSession, sf_dir: str) -> int:
     return cent_stride(corpus_count(spark, sf_dir, "embeddings"))
 
 
-_EMB_DIM_CACHE: dict[str, int] = {}
-
-
 def _emb_dim(spark: SparkSession, sf_dir: str) -> int:
     """Embedding width for this fixture (a one-row control-plane probe,
-    memoized) — the scalarized kernels unroll per-dim columns."""
-    key = os.path.abspath(sf_dir)
-    if key not in _EMB_DIM_CACHE:
-        _EMB_DIM_CACHE[key] = int(
-            load_table(spark, sf_dir, "embeddings")
-            .selectExpr("size(embedding) AS d").first().d
-        )
-    return _EMB_DIM_CACHE[key]
+    memoized in ``cache``) — the scalarized kernels unroll per-dim
+    columns."""
+    return cache.get(
+        spark, sf_dir, "emb_dim",
+        lambda: int(load_table(spark, sf_dir, "embeddings")
+                    .selectExpr("size(embedding) AS d").first().d),
+        ("embeddings",),
+    )
 
 
 def _rq_body(pts_rel: str) -> str:

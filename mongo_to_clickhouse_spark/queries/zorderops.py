@@ -71,7 +71,7 @@ def sink_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     out = os.path.join(
-        cached_work_dir("zsink", sf_dir, ("events",), _build), "events_z"
+        cached_work_dir(spark, "zsink", sf_dir, ("events",), _build), "events_z"
     )
     return (
         spark.read.parquet(out)
@@ -150,7 +150,7 @@ def sink_compaction_binpack(spark: SparkSession, sf_dir: str) -> DataFrame:
         compact_binpack(spark, small, os.path.join(root, "packed"))
 
     packed = os.path.join(
-        cached_work_dir("compact", sf_dir, ("events",), _build), "packed"
+        cached_work_dir(spark, "compact", sf_dir, ("events",), _build), "packed"
     )
     return (
         spark.read.parquet(packed)
@@ -221,7 +221,7 @@ def sink_hilbert_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     out = os.path.join(
-        cached_work_dir("hsink", sf_dir, ("events",), _build), "events_h"
+        cached_work_dir(spark, "hsink", sf_dir, ("events",), _build), "events_h"
     )
     return (
         spark.read.parquet(out)

@@ -23,6 +23,7 @@ SURVEY §7.4 item 1.
 
 from __future__ import annotations
 
+import logging
 import os
 import time
 
@@ -32,6 +33,8 @@ from pyspark.sql import functions as F
 from mongo_to_clickhouse_spark.config import TenantConfig
 from mongo_to_clickhouse_spark.sinks import dlq as dlq_mod
 from mongo_to_clickhouse_spark.plans.pipeline import route_split
+
+log = logging.getLogger(__name__)
 
 # Reference retry policy (src/main.rs:40-41, 736-740): 5 attempts,
 # 1000 ms initial delay, exponential doubling. The delay is configurable so
@@ -102,4 +105,6 @@ def dual_write_batch(
             initial_delay_sec=tenant.initial_retry_delay_sec,
         )
     except Exception:  # noqa: BLE001 — any sink error → DLQ, then continue
+        log.error("tenant %s batch %d: sink write failed, batch captured "
+                  "to the DLQ", tenant.name, batch_id, exc_info=True)
         dlq_mod.append_failed_batch(batch_df, batch_id, tenant)

@@ -10,7 +10,7 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from mongo_to_clickhouse_spark.io import clear_scan_cache
+from mongo_to_clickhouse_spark import cache
 from mongo_to_clickhouse_spark.queries.pipelineops import (
     SEQ_PACK_LEN,
     pipeline_length_bucketing,
@@ -83,7 +83,7 @@ def _write_docs(tmp_path, texts):
 
 
 def test_skyline_identical_points_all_survive(spark, tmp_path):
-    clear_scan_cache()
+    cache.clear()
     # orders 1 and 2 are IDENTICAL on (price, day): neither dominates
     # the other (Borzsonyi non-strict dominance needs a strict edge),
     # so both survive. 3 ties the price but is older -> dominated.
@@ -98,7 +98,7 @@ def test_skyline_identical_points_all_survive(spark, tmp_path):
 
 
 def test_skyline_equal_price_newest_survives(spark, tmp_path):
-    clear_scan_cache()
+    cache.clear()
     # same price, distinct days: only the most recent survives; a
     # strictly cheaper but newer point also survives.
     rows = [(1, 100.0, "P", 3), (2, 100.0, "P", 7), (3, 80.0, "P", 9)]
@@ -115,7 +115,7 @@ def test_skyline_equal_price_newest_survives(spark, tmp_path):
 
 
 def test_welch_single_row_side_yields_null_stats(spark, tmp_path):
-    clear_scan_cache()
+    cache.clear()
     # one even event_id (side a: n=1) + many odd (side b): the Bessel
     # denominator n_a*(n_a-1) vanishes -> t/df/significant must be
     # explicit NULLs while counts and means still report.
@@ -144,7 +144,7 @@ def test_welch_single_row_side_yields_null_stats(spark, tmp_path):
 
 
 def test_welch_healthy_sides_still_compute(spark, tmp_path):
-    clear_scan_cache()
+    cache.clear()
     # balanced halves with a real mean gap: t is finite and non-NULL
     values = [1.0 + (i % 5) * 0.1 if i % 2 == 0
               else 2.0 + (i % 5) * 0.1 for i in range(200)]
@@ -160,7 +160,7 @@ def test_welch_healthy_sides_still_compute(spark, tmp_path):
 
 
 def test_neyman_saturated_stratum_surplus_redistributed(spark, tmp_path):
-    clear_scan_cache()
+    cache.clear()
     # TINY stratum: 10 orders with huge spread -> Neyman weight wants
     # far more than its 10 rows; the water-fill takes all 10 and pours
     # the surplus into BIG (400 modestly-varying orders).
@@ -204,7 +204,7 @@ def _write_orders4(tmp_path, rows):
 
 
 def test_length_bucketing_overlong_docs_nonnegative(spark, tmp_path):
-    clear_scan_cache()
+    cache.clear()
     # 5 docs at 400 tokens (> SEQ_PACK_LEN=256) + 5 at 10 tokens: the
     # old baseline (n_docs*256 - SUM(real_tokens)) went negative; the
     # truncation model keeps every pad/waste figure >= 0.

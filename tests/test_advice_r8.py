@@ -16,7 +16,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from mongo_to_clickhouse_spark.io import clear_scan_cache
+from mongo_to_clickhouse_spark import cache
 from mongo_to_clickhouse_spark.queries.statsops import (
     EVENTS_POWER_LAW_HILL_SQL,
     events_power_law_hill,
@@ -99,7 +99,7 @@ def test_code_detect_keyword_branch_fires_on_low_symbol_code(
     )
     prose = "the quick brown fox jumps over the lazy dog every day"
     sf = _write_documents(tmp_path, [kw_only, prose])
-    clear_scan_cache()
+    cache.clear()
     got = {r.source: r for r in text_code_detect(spark, sf).collect()}
     assert got["web"].kw_hits == 4
     assert got["web"].n_code == 1  # kw_only flagged, prose not
@@ -117,7 +117,7 @@ def test_code_detect_boundary_is_a_real_word_boundary(spark, tmp_path):
     sf = _write_documents(
         tmp_path, ["classic definite varnish interior revarnished"]
     )
-    clear_scan_cache()
+    cache.clear()
     r = text_code_detect(spark, sf).collect()[0]
     assert r.kw_hits == 0
     assert r.n_code == 0
@@ -158,7 +158,7 @@ def test_rolling_corr_zero_fills_gap_days(spark, tmp_path):
         (4, 2, "purchase", 50.0, 20),
     ]
     sf = _write_events(tmp_path, rows)
-    clear_scan_cache()
+    cache.clear()
     out = window_rolling_corr_pair(spark, sf).collect()
     assert len(out) == 21  # full calendar spine, not 2 observed days
     by_day = {r.day_idx - out[0].day_idx: r for r in out}
@@ -190,7 +190,7 @@ def test_hill_small_corpus_uses_realized_k(spark, tmp_path):
             rows.append((eid, uid, "view", 1.0, 0))
             eid += 1
     sf = _write_events(tmp_path, rows)
-    clear_scan_cache()
+    cache.clear()
     out = events_power_law_hill(spark, sf).collect()
     assert len(out) == 1
     r = out[0]

@@ -10,22 +10,20 @@ import dataclasses
 
 import pytest
 
+from mongo_to_clickhouse_spark import cache
 from mongo_to_clickhouse_spark import config as cfg
-from mongo_to_clickhouse_spark.operators.materialize import (
-    clear_barrier_view_cache,
-)
 
 
 @pytest.fixture
 def forced_gate(monkeypatch):
-    clear_barrier_view_cache()
+    cache.clear()
     monkeypatch.setattr(
         cfg, "TUNING",
         dataclasses.replace(cfg.TUNING, graph_copart_min_rows=1,
                             graph_copart_rows_per_part=100),
     )
     yield
-    clear_barrier_view_cache()
+    cache.clear()
 
 
 SF = "/root/testdata/sf0.001"
@@ -34,12 +32,27 @@ SF = "/root/testdata/sf0.001"
 def test_gated_tri_adj_joins_without_adjacency_exchange(
     spark, forced_gate
 ):
-    from mongo_to_clickhouse_spark.queries.graphops import _tri_adj_view
+    from mongo_to_clickhouse_spark.operators.autoscale import distinct_count
+    from mongo_to_clickhouse_spark.queries.graphops import (
+        TRIANGLE_KNN_K,
+        _copart_parts,
+        _tri_adj_view,
+    )
+
+    # partition counts round UP: no partition holds more than
+    # graph_copart_rows_per_part (100 here) rows
+    assert _copart_parts(1) == _copart_parts(200) == 2
+    assert _copart_parts(201) == 3
+    est_rows = 2 * TRIANGLE_KNN_K * distinct_count(
+        spark, SF, "lineitem", "l_suppkey")
 
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         _tri_adj_view(spark, SF)
+        # the checkpoint keeps the co-partitioned count
+        assert (spark.table("tri_adj").rdd.getNumPartitions()
+                == _copart_parts(est_rows))
         j = spark.sql(
             "SELECT w1.a, w1.b, w2.b AS b2 FROM tri_adj w1 "
             "JOIN tri_adj w2 ON w1.a = w2.a AND w1.b < w2.b"
@@ -64,7 +77,7 @@ def test_gated_results_identical(spark, forced_gate):
     }
     # rebuild ungated (the fixture's monkeypatch is still active, so
     # restore the real tuning explicitly for the control build)
-    clear_barrier_view_cache()
+    cache.clear()
     real = cfg._load_tuning()
     assert real.graph_copart_min_rows >= 2_000_000
     import mongo_to_clickhouse_spark.config as cfg_mod
@@ -80,4 +93,4 @@ def test_gated_results_identical(spark, forced_gate):
             )
     finally:
         cfg_mod.TUNING = saved
-        clear_barrier_view_cache()
+        cache.clear()

@@ -26,6 +26,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from mongo_to_clickhouse_spark import cache
+
 # ---------------------------------------------------------------------------
 # the pinned map: query id -> [(test module, test function), ...]
 # ---------------------------------------------------------------------------
@@ -163,13 +165,7 @@ def _write_values(tmp_path, values, days=None):
 
 
 def _fresh_caches():
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
-
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
 
 
 def _round_half_away(x: float) -> int:

@@ -216,15 +216,29 @@ def test_pair_blocks_derivation_steps():
     assert pair_blocks(10**9, 10) == 4096  # clamp engages
 
 
-def test_emb_dim_cache_cleared_by_clear_scan_cache():
+def test_emb_dim_cache_cleared_by_clear(spark, tmp_path):
     """ADVICE r10: an in-place fixture rewrite with a different embedding
-    dimension must not serve stale per-dim unrolled columns."""
-    from mongo_to_clickhouse_spark import io as io_mod
-    from mongo_to_clickhouse_spark.queries import vectorops
+    dimension must not serve stale per-dim unrolled columns; ``clear()``
+    drops the memoized width."""
+    import os
 
-    vectorops._EMB_DIM_CACHE["sentinel"] = 123
-    io_mod.clear_scan_cache()
-    assert "sentinel" not in vectorops._EMB_DIM_CACHE
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mongo_to_clickhouse_spark import cache
+    from mongo_to_clickhouse_spark.queries.vectorops import _emb_dim
+
+    pq.write_table(
+        pa.table({"embedding": pa.array([[0.5] * 3], pa.list_(pa.float32()))}),
+        os.path.join(str(tmp_path), "embeddings.parquet"),
+    )
+    cache.clear()
+    assert _emb_dim(spark, str(tmp_path)) == 3
+    assert cache.entries("emb_dim") == 1
+    cache.clear()
+    assert cache.entries("emb_dim") == 0
+    assert _emb_dim(spark, str(tmp_path)) == 3
+    assert cache.stats("emb_dim").builds == 1
 
 
 def test_compare_detailed_short_circuit_reports_none():

@@ -10,6 +10,7 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from mongo_to_clickhouse_spark import cache
 from mongo_to_clickhouse_spark.queries.graphops import graph_kcore_onion
 from mongo_to_clickhouse_spark.queries.sampleops import (
     sample_neyman_allocation,
@@ -270,16 +271,11 @@ def test_auc_hand_computed(spark, tmp_path):
 def test_pmi_planted_collocation(spark, tmp_path):
     import math
 
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.corpusops import (
         text_collocations_pmi,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     # two bigram types, 6 occurrences each, words never cross-attached:
     # PMI = ln(c12*N / (c1*c2)) = ln(6*12 / 36) = ln 2 for both pairs
     rows = [(i, "new york", "en", 8) for i in range(6)]
@@ -299,16 +295,11 @@ def test_pmi_planted_collocation(spark, tmp_path):
 
 
 def test_acf_period_two_series(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.statsops import (
         events_autocorrelation,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     # 14 days alternating 10/20 events: mean 15, centered ±5.
     # lag 1: 13 pairs, each product -25 -> floor(-325/350*1e6) = -928572
     # lag 2: 12 pairs, each product +25 -> floor(+300/350*1e6) = +857142
@@ -346,10 +337,6 @@ def test_acf_period_two_series(spark, tmp_path):
 def test_mmr_matches_numpy_reference(spark, tmp_path):
     import numpy as np
 
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.vectorops import (
         MMR_POOL,
         MMR_PROBES,
@@ -357,8 +344,7 @@ def test_mmr_matches_numpy_reference(spark, tmp_path):
         sim_mmr_diversify,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     # 12 vectors incl. a planted near-duplicate pair (ids 3, 4) that
     # pure relevance would pick back-to-back; the numpy reference
     # replays the same integer-micro greedy rounds.
@@ -544,16 +530,11 @@ def _write_daily_events(tmp_path, day_counts):
 
 
 def test_theil_sen_robust_to_outlier_day(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.statsops import (
         events_theil_sen_trend,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     # counts 10,12,14,...,24 (+2/day) with day 3 exploded to 500:
     # the pairwise-slope median stays exactly 2/day where OLS would not
     counts = [10 + 2 * d for d in range(8)]
@@ -588,16 +569,11 @@ def _write_docs_text(tmp_path, rows):
 
 
 def test_ngram_novelty_first_vs_copy(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.corpusops import (
         text_ngram_novelty,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     base = " ".join(f"w{i}" for i in range(12))       # 5 distinct 8-grams
     fresh = " ".join(f"v{i}" for i in range(12))
     rows = [(0, base, "a"), (1, base, "a"), (2, fresh, "a")]
@@ -638,16 +614,11 @@ def test_mix_entropy_uniform_and_skewed(spark, tmp_path):
 
 
 def test_bitmap_rollup_union_semantics(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.sketchops import (
         agg_bitmap_rollup_merge,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     # align the fixture start to the epoch-week grid so "days 0..6"
     # IS one rollup week (week = epoch_day DIV 7)
     epoch_days = (_T0 - dt.datetime(1970, 1, 1)).days
@@ -711,16 +682,11 @@ def _write_embeddings(tmp_path, vecs, labels):
 
 
 def test_centroid_classifier_confusion(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.evalops import (
         eval_centroid_classifier,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     # label 0 clusters near (1,0), label 1 near (0,1); one label-0
     # point planted AT (0,1) -> exactly one off-diagonal cell
     vecs = [(1.0, 0.05), (1.0, -0.05), (0.95, 0.0),
@@ -743,14 +709,9 @@ def test_centroid_classifier_confusion(spark, tmp_path):
 
 def test_mrr_perfect_on_identical_vectors(spark, tmp_path):
     from mongo_to_clickhouse_spark.config import TUNING
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.evalops import eval_retrieval_mrr
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     # all vectors identical: every sim ties at 1.0, the true NN and the
     # candidate ranking both tie-break by lowest id, so the NN is
     # always retrieved at rank 1 -> MRR exactly 1.0
@@ -773,16 +734,11 @@ def test_mrr_perfect_on_identical_vectors(spark, tmp_path):
 
 
 def test_weekly_profile_mean_and_variance(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.statsops import (
         events_seasonality_weekly,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     # day d and d+7 share a dow; counts 10 vs 20 -> mean 15, population
     # variance 25 for every dow cell
     counts = [10] * 7 + [20] * 7
@@ -802,12 +758,11 @@ def test_weekly_profile_mean_and_variance(spark, tmp_path):
 
 
 def test_filter_overlap_masks(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
     from mongo_to_clickhouse_spark.queries.pipelineops import (
         pipeline_filter_overlap_matrix,
     )
 
-    clear_scan_cache()
+    cache.clear()
     long_clean = " ".join(f"tok{i}" for i in range(20))          # passes all
     short_en = "just a few words here"                           # short only
     stop_heavy = "the a of and to in " * 4 + "x y z " * 2        # stops+rep?
@@ -833,17 +788,12 @@ def test_filter_overlap_masks(spark, tmp_path):
 
 
 def test_vocab_curve_zipf_head(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.tokenizerops import (
         VOCAB_CURVE_KS,
         tokenizer_vocab_coverage_curve,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     # 64 head types with 100 occurrences each; 200 tail singletons.
     # top-64 covers 6400/6600; any K >= 264 covers everything.
     text_head = " ".join(f"h{i:02d}" for i in range(64))
@@ -868,13 +818,12 @@ def test_vocab_curve_zipf_head(spark, tmp_path):
 
 
 def test_interval_coalesce_merges_overlaps(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
     from mongo_to_clickhouse_spark.queries.relational_ext import (
         COALESCE_SPAN_US,
         window_interval_coalesce,
     )
 
-    clear_scan_cache()
+    cache.clear()
     # user 1: events at 0s and 100s (overlap -> one span covering
     # 100s + 300s); user 2: events at 0s and 1000s (disjoint -> two
     # full spans)
@@ -908,16 +857,11 @@ def test_interval_coalesce_merges_overlaps(spark, tmp_path):
 
 
 def test_rvq_error_ladder_descends(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.vectorops import (
         emb_residual_quantize,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     # two tight clusters split at id 50; the derived codebook (round 10:
     # K = clamp(isqrt(120), 8, 4096) = 10 donors at stride 12) places
     # donors inside BOTH clusters, so level-1 residuals are tiny and mse
@@ -949,16 +893,11 @@ def test_rvq_error_ladder_descends(spark, tmp_path):
 
 def test_range_search_counts_within_radius(spark, tmp_path):
     from mongo_to_clickhouse_spark.config import TUNING
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.vectorops import (
         sim_range_search_radius,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     # identical 64-dim vectors: every candidate sim = 1.0 >= tau, and
     # every probe's bucket holds everyone else
     n = max(TUNING.ann_probes + 5, 16)
@@ -979,16 +918,11 @@ def test_range_search_counts_within_radius(spark, tmp_path):
 
 
 def test_substring_apply_removes_copy_keeps_owner(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.dedupops import (
         dedup_substring_apply,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     # doc 1 and doc 2 are verbatim copies (12 tokens; every 8-token
     # window duplicated, coverage = all 12 tokens). The min-doc owner
     # (1) keeps its text; doc 2 is fully excised. doc 3 is untouched.
@@ -1015,16 +949,11 @@ def test_substring_apply_removes_copy_keeps_owner(spark, tmp_path):
 
 
 def test_closeness_path_graph(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.graphops import (
         graph_closeness_sampled,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     # path 1-2-3-4-5-6; sources = the 4 smallest nodes {1,2,3,4}.
     # harmonic(2) = 1/1 + 1/1 + 1/2 (+ 0 for itself) = 2.5
     # harmonic(3) = 1/2 + 1/1 + 1/1 = 2.5; ties broken by node id.
@@ -1057,12 +986,11 @@ def test_closeness_path_graph(spark, tmp_path):
 
 
 def test_ht_self_consistent_at_uniform_pi(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
     from mongo_to_clickhouse_spark.queries.sampleops import (
         sample_horvitz_thompson,
     )
 
-    clear_scan_cache()
+    cache.clear()
     # all docs: n_chars 200 -> pi = 0.1; 7 tokens each -> each sampled
     # doc contributes exactly 7*2000/200 = 70 tokens (7e7 micro)
     text = "a b c d e f g"
@@ -1082,16 +1010,11 @@ def test_ht_self_consistent_at_uniform_pi(spark, tmp_path):
 
 
 def test_budget_select_takes_densest_prefix(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.pipelineops import (
         pipeline_budget_prefix_select,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     # 10 docs x 10 tokens = 100 total; budget 10% = 10 tokens. Doc 5 is
     # the only all-distinct doc (density 1e6) -> selected alone (the
     # next doc's exclusive cum = 10, not < 10).
@@ -1113,12 +1036,11 @@ def test_budget_select_takes_densest_prefix(spark, tmp_path):
 
 
 def test_ipv4_roundtrip_and_octets(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
     from mongo_to_clickhouse_spark.queries.clickhouseops import (
         scalar_ipv4_ops,
     )
 
-    clear_scan_cache()
+    cache.clear()
     values = [1.0] * 8
     sf = _write_events(tmp_path, values)   # user_id = i % 7
     rows = scalar_ipv4_ops(spark, sf).collect()
@@ -1160,12 +1082,11 @@ def _write_typed_events(tmp_path, seq):
 
 
 def test_entropy_rate_deterministic_chain_is_zero(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
     from mongo_to_clickhouse_spark.queries.statsops import (
         events_entropy_rate,
     )
 
-    clear_scan_cache()
+    cache.clear()
     # every transition deterministic (a->b->a->b...): all p = 1,
     # -ln 1 = 0 -> entropy rate exactly 0
     seq = []
@@ -1185,12 +1106,11 @@ def test_entropy_rate_deterministic_chain_is_zero(spark, tmp_path):
 def test_entropy_rate_uniform_binary_is_ln2(spark, tmp_path):
     import math
 
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
     from mongo_to_clickhouse_spark.queries.statsops import (
         events_entropy_rate,
     )
 
-    clear_scan_cache()
+    cache.clear()
     # from every state the next event is a or b with exactly p = 1/2
     # (period-4 pattern a a b b: transitions a->a, a->b, b->b, b->a
     # each occur equally often) -> H = ln 2
@@ -1213,16 +1133,11 @@ def test_entropy_rate_uniform_binary_is_ln2(spark, tmp_path):
 
 
 def test_assortativity_star_is_negative(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.graphops import (
         graph_degree_assortativity,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     # star hub 1 with leaves 2..6: every edge joins degree 5 to degree
     # 1 -> perfectly disassortative, r = -1
     pairs, oid = [], 0
@@ -1249,12 +1164,11 @@ def test_assortativity_star_is_negative(spark, tmp_path):
 
 
 def test_ltv_curve_accumulates(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
     from mongo_to_clickhouse_spark.queries.analytics import (
         events_cohort_ltv_curve,
     )
 
-    clear_scan_cache()
+    cache.clear()
     # one cohort of 2 users; purchases of $1.00 in week 0 and $2.00 in
     # week 1 per user -> cum cents 200, 600; LTV/user 1.0, 3.0 dollars
     week = 7 * 24 * 3600
@@ -1294,16 +1208,11 @@ def test_ltv_curve_accumulates(spark, tmp_path):
 
 def test_quant_recall_perfect_on_axis_vectors(spark, tmp_path):
     from mongo_to_clickhouse_spark.config import TUNING
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.evalops import (
         eval_quantization_recall,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     # scaled copies of a few distinct directions: int8 quantization of
     # v and 2v yields the SAME codes, so quantized and exact rankings
     # agree -> recall exactly 1.0 for every probe
@@ -1328,16 +1237,11 @@ def test_quant_recall_perfect_on_axis_vectors(spark, tmp_path):
 
 
 def test_moments_rollup_exact_mean_var(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.sketchops import (
         agg_moments_rollup_merge,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     # week-aligned start; day 0: values {1, 3} (mean 2, var 1);
     # day 7: values {2, 2} (var 0). total: {1,3,2,2} mean 2, var 0.5
     epoch_days = (_T0 - dt.datetime(1970, 1, 1)).days
@@ -1375,12 +1279,11 @@ def test_moments_rollup_exact_mean_var(spark, tmp_path):
 
 
 def test_resample_linear_interpolation(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
     from mongo_to_clickhouse_spark.queries.statsops import (
         events_resample_interpolate,
     )
 
-    clear_scan_cache()
+    cache.clear()
     # one type, one day: value 10.0 at 00:30, 20.0 at 03:30. Hour
     # boundaries 1, 2, 3 fall inside: interpolated 11.666.., 15, 18.333..
     day0 = dt.datetime(2024, 6, 1)
@@ -1416,12 +1319,11 @@ def test_resample_linear_interpolation(spark, tmp_path):
 
 
 def test_fifo_matched_equals_min_supply_demand(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
     from mongo_to_clickhouse_spark.queries.joinops import (
         window_fifo_allocation,
     )
 
-    clear_scan_cache()
+    cache.clear()
     # part 1: lots 10+20 against issues 5+5+15 -> matched 25,
     #   5 unmatched supply (FIFO pairs: lot1->i1,i2; lot1+lot2->i3)
     # part 2: lots 10 against issues 40 -> matched 10, 30 short
@@ -1470,16 +1372,11 @@ def test_fifo_matched_equals_min_supply_demand(spark, tmp_path):
 
 
 def test_unigram_viterbi_prefers_whole_word_piece(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.tokenizerops import (
         tokenizer_unigram_viterbi,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     # corpus = the single word "abab" x10: ln p('abab') = ln(10/110)
     # beats 2*ln p('ab') = 2*ln(20/110), so Viterbi keeps the whole
     # word as ONE piece
@@ -1492,17 +1389,12 @@ def test_unigram_viterbi_prefers_whole_word_piece(spark, tmp_path):
 
 
 def test_unigram_viterbi_char_conservation(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.tokenizerops import (
         UNI_MAXLEN,
         tokenizer_unigram_viterbi,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     # any Viterbi segmentation partitions each (truncated) word exactly:
     # sum over pieces of len*count == sum over words of min(len, cap)*freq
     texts = ["hello world", "hello there world", "a hello longishword",
@@ -1530,16 +1422,11 @@ def test_unigram_viterbi_char_conservation(spark, tmp_path):
 
 def test_greedy_search_identical_vectors_finds_nn(spark, tmp_path):
     from mongo_to_clickhouse_spark.config import TUNING
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.vectorops import (
         sim_greedy_graph_search,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     # identical vectors: the knn graph links everyone to the smallest
     # ids, so one hop from the max-id entry reaches each probe's exact
     # NN (the smallest other id)
@@ -1561,10 +1448,9 @@ def test_greedy_search_identical_vectors_finds_nn(spark, tmp_path):
 
 
 def test_welch_identical_halves_insignificant(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
     from mongo_to_clickhouse_spark.queries.statsops import agg_ttest_welch
 
-    clear_scan_cache()
+    cache.clear()
     # consecutive (even, odd) pairs share each value -> identical
     # samples, t exactly 0
     values = [float(10 + ((i // 2) % 5)) for i in range(400)]
@@ -1575,10 +1461,9 @@ def test_welch_identical_halves_insignificant(spark, tmp_path):
 
 
 def test_welch_shifted_halves_significant(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
     from mongo_to_clickhouse_spark.queries.statsops import agg_ttest_welch
 
-    clear_scan_cache()
+    cache.clear()
     # A around 10, B around 20, tiny within-group variance
     values = [
         (10.0 + (i % 4) * 0.1) if i % 2 == 0 else (20.0 + (i % 4) * 0.1)
@@ -1596,10 +1481,9 @@ def test_welch_shifted_halves_significant(spark, tmp_path):
 
 
 def test_top_paths_planted_journey(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
     from mongo_to_clickhouse_spark.queries.statsops import events_top_paths
 
-    clear_scan_cache()
+    cache.clear()
     # 10 users each do signup -> view -> purchase (one dominant path,
     # plus no other 3-window), 3 users do view -> view -> error
     seq = []
@@ -1625,12 +1509,11 @@ def test_top_paths_planted_journey(spark, tmp_path):
 
 
 def test_ocr_filter_reason_bits(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
     from mongo_to_clickhouse_spark.queries.textops import (
         text_ocr_noise_filter,
     )
 
-    clear_scan_cache()
+    cache.clear()
     clean = "this is a perfectly normal sentence with usual words"
     digits = "4711 0815 99999 123456 777 88 999 000 111 222"
     symbols = "@@@ ### $$$ %%% ^^^ &&& *** ((( ))) !!!"
@@ -1655,12 +1538,11 @@ def test_ocr_filter_reason_bits(spark, tmp_path):
 
 
 def test_dataset_diff_classes(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
     from mongo_to_clickhouse_spark.queries.sampleops import (
         profile_dataset_diff,
     )
 
-    clear_scan_cache()
+    cache.clear()
     # ids 1..100: %17==0 dropped (17,34,51,68,85 -> 5 removed);
     # %13==0 and not dropped changed (13,26,39,52,65,78,91 -> 7);
     # %19==0 spawn new ids (19,38,57,76,95 -> 5 added)
@@ -1681,12 +1563,11 @@ def test_dataset_diff_classes(spark, tmp_path):
 
 
 def test_skyline_dominance(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
     from mongo_to_clickhouse_spark.queries.relational_ext import (
         window_skyline_pareto,
     )
 
-    clear_scan_cache()
+    cache.clear()
     # one group; points (price, day): (100, 5) dominates (90, 3) and
     # (100, 4); (50, 9) survives on recency; (120, 1) survives on price
     pts = [(1, 100.0, 5), (2, 90.0, 3), (3, 100.0, 4),
@@ -1716,18 +1597,13 @@ def test_skyline_dominance(spark, tmp_path):
 
 
 def test_isotropy_uniform_vs_collapsed(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.vectorops import (
         emb_isotropy_profile,
     )
 
     import numpy as np
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     # perfectly isotropic 4-dim: identical variance per axis ->
     # ratio 1e6, eff_dims = 4
     rng = np.random.RandomState(5)
@@ -1748,12 +1624,11 @@ def test_isotropy_uniform_vs_collapsed(spark, tmp_path):
 
 
 def test_wilson_brackets_rate(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
     from mongo_to_clickhouse_spark.queries.statsops import (
         agg_wilson_interval,
     )
 
-    clear_scan_cache()
+    cache.clear()
     # 100 events, 30 above the cut -> rate 0.3; Wilson 95% approx
     # [0.218, 0.397]
     values = [9.0 if i < 30 else 1.0 for i in range(100)]
@@ -1767,16 +1642,11 @@ def test_wilson_brackets_rate(spark, tmp_path):
 
 
 def test_mad_flags_only_the_spike(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.statsops import (
         events_anomaly_mad_daily,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     # 15 days of counts 10/11 alternating with one 300-event spike:
     # median 10-11, MAD 0-1... use counts 10,12 alternating so MAD=1
     counts = [10 if d % 2 == 0 else 12 for d in range(15)]
@@ -1794,16 +1664,11 @@ def test_mad_flags_only_the_spike(spark, tmp_path):
 
 
 def test_concurrency_peak_counts_overlaps(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.statsops import (
         events_concurrency_peak,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     # hour-aligned start; 3 events within one 5-min span -> peak 3;
     # a lone event 2 hours later -> peak 1 in its hour
     t0 = dt.datetime(2024, 6, 2)
@@ -1833,12 +1698,11 @@ def test_concurrency_peak_counts_overlaps(spark, tmp_path):
 
 
 def test_km_no_censoring_hand_computed(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
     from mongo_to_clickhouse_spark.queries.statsops import (
         events_survival_km,
     )
 
-    clear_scan_cache()
+    cache.clear()
     # 4 users return after 1h, 1h, 2h, 3h; a 5th user never returns
     # (censored at the horizon). KM: S(1)= (5-2)/5 = .6 (n=5, d=2),
     # S(2)= .6*(3-1)/3 = .4, S(3)= .4*(2-1)/2 = .2
@@ -1874,12 +1738,11 @@ def test_km_no_censoring_hand_computed(spark, tmp_path):
 
 
 def test_length_bucketing_waste_arithmetic(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
     from mongo_to_clickhouse_spark.queries.pipelineops import (
         pipeline_length_bucketing,
     )
 
-    clear_scan_cache()
+    cache.clear()
     # 10 docs of 10 tokens (bucket 16: pad 6 each) and 5 docs of 20
     # tokens (bucket 32: pad 12 each); baseline pads everyone to 256
     short = " ".join(f"s{i}" for i in range(10))
@@ -1898,12 +1761,11 @@ def test_length_bucketing_waste_arithmetic(spark, tmp_path):
 
 
 def test_fk_integrity_counts_orphans(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
     from mongo_to_clickhouse_spark.queries.sampleops import (
         profile_fk_integrity,
     )
 
-    clear_scan_cache()
+    cache.clear()
     sf = str(tmp_path)
     # minimal star: 2 nations; customer 3 points to a MISSING nation;
     # all other edges clean
@@ -1967,16 +1829,9 @@ def test_fk_integrity_counts_orphans(spark, tmp_path):
 
 
 def test_ari_perfect_agreement_on_exact_dups(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
-    from mongo_to_clickhouse_spark.queries.dedupops import _CC_LABELS_CACHE
     from mongo_to_clickhouse_spark.queries.evalops import eval_cluster_ari
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
-    _CC_LABELS_CACHE.clear()
+    cache.clear()
     # two pairs of verbatim duplicates + two singletons: LSH banding
     # and exact Jaccard both cluster exactly the duplicate pairs, so
     # the two labelings are identical -> ARI = 1.0. ids avoid %50==0
@@ -2001,16 +1856,11 @@ def test_ari_perfect_agreement_on_exact_dups(spark, tmp_path):
 
 
 def test_silhouette_separated_vs_mixed(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.evalops import (
         eval_label_silhouette,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     # label 0 tight around (10, 0); label 1 tight around (0, 10):
     # silhouettes near 1. label 2 sits ON label 0's centroid: near -1
     # or low
@@ -2046,16 +1896,11 @@ def test_silhouette_separated_vs_mixed(spark, tmp_path):
 
 
 def test_rolling_slope_linear_ramp(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.statsops import (
         events_rolling_slope,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     # counts 10, 13, 16, ... (+3/day): every full frame's OLS slope is
     # exactly 3
     counts = [10 + 3 * d for d in range(12)]
@@ -2073,18 +1918,11 @@ def test_rolling_slope_linear_ramp(spark, tmp_path):
 
 
 def test_minhash_error_zero_on_identical_docs(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
-    from mongo_to_clickhouse_spark.queries.dedupops import _CC_LABELS_CACHE
     from mongo_to_clickhouse_spark.queries.evalops import (
         eval_minhash_estimate_error,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
-    _CC_LABELS_CACHE.clear()
+    cache.clear()
     # identical docs: exact J = 1 and ALL signature positions match ->
     # estimate exactly 1 -> zero error
     a = " ".join(f"tok{i}" for i in range(25))
@@ -2098,18 +1936,11 @@ def test_minhash_error_zero_on_identical_docs(spark, tmp_path):
 
 
 def test_dedup_rate_attributes_removals_to_source(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.dedupops import (
-        _CC_LABELS_CACHE,
         dedup_rate_by_source,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
-    _CC_LABELS_CACHE.clear()
+    cache.clear()
     # source 'mirror': 3 verbatim copies -> 2 removed; source 'clean':
     # 2 distinct docs -> 0 removed
     dup = " ".join(f"dup{i}" for i in range(25))
@@ -2143,16 +1974,11 @@ def test_dedup_rate_attributes_removals_to_source(spark, tmp_path):
 
 
 def test_em_soft_marginalizes_over_paths(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.tokenizerops import (
         tokenizer_unigram_em_soft,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     # corpus "ab" x12: pieces {a, b, ab} all get seed p = 1/3. The two
     # segmentations are [ab] (mass 1/3) and [a][b] (mass 1/9), so the
     # posterior path split is 3:1 - soft EM counts BOTH (Viterbi would
@@ -2172,17 +1998,12 @@ def test_em_soft_marginalizes_over_paths(spark, tmp_path):
 
 
 def test_em_soft_character_mass_conserved(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.tokenizerops import (
         UNI_MAXLEN,
         tokenizer_unigram_em_soft,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     # every segmentation covers all characters, so expected piece
     # lengths sum to the (truncated) corpus character mass up to the
     # deterministic per-stage truncation loss
@@ -2205,10 +2026,6 @@ def test_em_soft_matches_float_forward_backward(spark, tmp_path):
     import math
     from collections import Counter, defaultdict
 
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.tokenizerops import (
         UNI_MAXLEN,
         UNI_MIN_FREQ,
@@ -2216,8 +2033,7 @@ def test_em_soft_matches_float_forward_backward(spark, tmp_path):
         tokenizer_unigram_em_soft,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     import numpy as np
 
     rng = np.random.RandomState(17)
@@ -2294,16 +2110,11 @@ def test_em_soft_matches_float_forward_backward(spark, tmp_path):
 
 
 def test_global_percentiles_exact_ranks(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.relational_ext import (
         agg_exact_global_percentiles,
     )
 
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     # values 1..200 dollars: rank-k value is exactly k dollars, so
     # p50 = 100.00, p90 = 180.00, p95 = 190.00, p99 = 198.00
     values = [float(i + 1) for i in range(200)]

@@ -10,7 +10,7 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from mongo_to_clickhouse_spark.io import clear_scan_cache
+from mongo_to_clickhouse_spark import cache
 from mongo_to_clickhouse_spark.queries.bizops import agg_daily_corr_matrix
 from mongo_to_clickhouse_spark.queries.clickhouseops import agg_topk_weighted
 from mongo_to_clickhouse_spark.queries.core import source_orc_scan
@@ -60,7 +60,7 @@ def test_orc_roundtrip_preserves_tricky_strings(spark, tmp_path):
         'plain',
     ]
     _docs(texts, str(tmp_path))
-    clear_scan_cache()
+    cache.clear()
     got = source_orc_scan(spark, str(tmp_path)).collect()
     assert len(got) == 1
     r = got[0]
@@ -142,7 +142,7 @@ def test_curriculum_stages_easy_to_hard(spark, tmp_path):
     # rank quartiles, 2 docs each, difficulty ranges non-overlapping
     texts = [" ".join(["a" * (k + 1)] * 3) for k in range(8)]
     _docs(texts, str(tmp_path))
-    clear_scan_cache()
+    cache.clear()
     got = [
         (r.stage, r.n_docs, r.sum_tokens,
          r.min_difficulty_milli, r.max_difficulty_milli)
@@ -167,7 +167,7 @@ def test_hdr_quantile_small_and_log_buckets(spark, tmp_path):
                                      pa.float64())}
     )
     pq.write_table(li, os.path.join(str(tmp_path), "lineitem.parquet"))
-    clear_scan_cache()
+    cache.clear()
     got = {r.q_ppm: (r.bucket_idx, r.est_cents_lower, r.n_values)
            for r in agg_hdr_histogram_quantile(spark, str(tmp_path)).collect()}
     assert got == {500000: (5, 5, 10), 950000: (10, 10, 10),
@@ -184,7 +184,7 @@ def test_hdr_quantile_log_bucket_lower_bound(spark, tmp_path):
     # relative-error contract of the true 1000
     li = pa.table({"l_extendedprice": pa.array([10.00], pa.float64())})
     pq.write_table(li, os.path.join(str(tmp_path), "lineitem.parquet"))
-    clear_scan_cache()
+    cache.clear()
     rows = agg_hdr_histogram_quantile(spark, str(tmp_path)).collect()
     assert all((r.bucket_idx, r.est_cents_lower) == (159, 992)
                for r in rows)
@@ -256,7 +256,7 @@ def test_pretraining_manifest_funnel(spark, tmp_path):
         "one two three four five six seven",
     ]
     _docs(texts, str(tmp_path))
-    clear_scan_cache()
+    cache.clear()
     rows = pipeline_pretraining_manifest(spark, str(tmp_path)).collect()
     assert rows, "manifest must emit at least one shard row"
     assert all((r.n_raw, r.n_quality, r.n_deduped) == (5, 3, 2)
@@ -282,7 +282,7 @@ def test_group_kfold_no_leakage(spark, tmp_path):
         }
     )
     pq.write_table(t, os.path.join(str(tmp_path), "documents.parquet"))
-    clear_scan_cache()
+    cache.clear()
     rows = sample_group_kfold(spark, str(tmp_path)).collect()
     assert all(r.max_folds_per_source == 1 for r in rows)
     assert sum(r.n_docs for r in rows) == 12
@@ -302,7 +302,7 @@ def test_html_extract_roundtrip_hostile_text(spark, tmp_path):
         "plain text",
     ]
     _docs(texts, str(tmp_path))
-    clear_scan_cache()
+    cache.clear()
     rows = text_html_extract(spark, str(tmp_path)).collect()
     assert len(rows) == 1
     r = rows[0]

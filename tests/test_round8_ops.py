@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import math
 
+from mongo_to_clickhouse_spark import cache
 from mongo_to_clickhouse_spark.queries.dedupops import (
     N_BANDS,
     dedup_incremental_minhash,
@@ -209,7 +210,6 @@ def test_topk_sliding_leaderboard_and_window(spark, tmp_path):
     (>=6h later) neither burst is visible."""
     import datetime as dt
 
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
     from mongo_to_clickhouse_spark.queries.bizops import events_topk_sliding
 
     t0 = dt.datetime(2024, 3, 1)
@@ -220,7 +220,7 @@ def test_topk_sliding_leaderboard_and_window(spark, tmp_path):
         rows.append((eid, t0 + dt.timedelta(hours=3), 8, "view", 1.0)); eid += 1
     rows.append((eid, t0 + dt.timedelta(hours=10), 9, "view", 1.0)); eid += 1
     _plant_events(rows, str(tmp_path))
-    clear_scan_cache()
+    cache.clear()
     out = events_topk_sliding(spark, str(tmp_path)).collect()
     by_hour = {}
     for r in out:
@@ -242,7 +242,6 @@ def test_seasonal_residual_flags_offpattern_spike_only(spark, tmp_path):
     injected day and NOT the periodic peaks."""
     import datetime as dt
 
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
     from mongo_to_clickhouse_spark.queries.bizops import (
         events_anomaly_seasonal_residual,
     )
@@ -262,7 +261,7 @@ def test_seasonal_residual_flags_offpattern_spike_only(spark, tmp_path):
             rows.append((eid, t0 + dt.timedelta(days=d), 1, "view", 1.0))
             eid += 1
     _plant_events(rows, str(tmp_path))
-    clear_scan_cache()
+    cache.clear()
     out = events_anomaly_seasonal_residual(spark, str(tmp_path)).collect()
     # day_idx is absolute epoch days in both engines
     spike_abs = (t0 + dt.timedelta(days=spike_day)
@@ -288,7 +287,6 @@ def test_time_to_convert_exact_ranks(spark, tmp_path):
     p90 = 9h, p99 = 10h (lower-rank type-1 definition)."""
     import datetime as dt
 
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
     from mongo_to_clickhouse_spark.queries.analytics import (
         funnel_time_to_convert,
     )
@@ -301,7 +299,7 @@ def test_time_to_convert_exact_ranks(spark, tmp_path):
         eid += 1
     rows.append((eid, t0, 99, "signup", 0.0))  # never converts
     _plant_events(rows, str(tmp_path))
-    clear_scan_cache()
+    cache.clear()
     got = {r.p: r for r in funnel_time_to_convert(spark, str(tmp_path)).collect()}
     hour_us = 3_600_000_000
     assert got[50].delay_us == 5 * hour_us
@@ -322,7 +320,6 @@ def test_hll_sliding_window_semantics_and_accuracy(spark, tmp_path):
     envelope (1.04/sqrt(64)) of the exact trailing distinct."""
     import datetime as dt
 
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
     from mongo_to_clickhouse_spark.queries.sketchops import (
         agg_hll_sliding_distinct,
     )
@@ -340,7 +337,7 @@ def test_hll_sliding_window_semantics_and_accuracy(spark, tmp_path):
         rows.append((eid, t0 + dt.timedelta(days=10), u, "view", 1.0))
         eid += 1
     _plant_events(rows, str(tmp_path))
-    clear_scan_cache()
+    cache.clear()
     out = {r.day_idx: r.hll_mau7_e4 / 10000.0
            for r in agg_hll_sliding_distinct(spark, str(tmp_path)).collect()}
     days = sorted(out)

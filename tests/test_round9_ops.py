@@ -9,6 +9,8 @@ import tempfile
 
 import pyspark.sql.functions as F
 
+from mongo_to_clickhouse_spark import cache
+
 
 # ---------------------------------------------------------------------------
 # stream_ivf_index_upsert
@@ -97,10 +99,6 @@ def test_wordpiece_kernel_trunc_and_parity(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.tokenizerops import (
         TOKENIZER_WORDPIECE_APPLY_SQL,
         WP_MAXLEN,
@@ -122,8 +120,7 @@ def test_wordpiece_kernel_trunc_and_parity(spark, tmp_path):
         }
     )
     pq.write_table(tbl, os.path.join(str(tmp_path), "documents.parquet"))
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     got = {r.piece: r.n_occurrences
            for r in tokenizer_wordpiece_apply(spark, str(tmp_path)).collect()}
     assert got.get("[TRUNC]", 0) >= 1
@@ -138,7 +135,7 @@ def test_wordpiece_kernel_trunc_and_parity(spark, tmp_path):
         TOKENIZER_WORDPIECE_APPLY_SQL,
     )
     assert problems == [], problems
-    clear_barrier_view_cache()
+    cache.clear()
 
 
 # ---------------------------------------------------------------------------
@@ -212,7 +209,6 @@ def _write_docs9(tmp_path, texts, sources=None):
 
 
 def test_unordered_funnel_any_order_within_window(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
     from mongo_to_clickhouse_spark.queries.analytics import (
         events_funnel_unordered,
     )
@@ -231,7 +227,7 @@ def test_unordered_funnel_any_order_within_window(spark, tmp_path):
         (8, 3, "click", 1.0, 1),
     ]
     sf = _write_events9(tmp_path, rows)
-    clear_scan_cache()
+    cache.clear()
     out = events_funnel_unordered(spark, sf).collect()
     assert len(out) == 1
     r = out[0]
@@ -245,7 +241,6 @@ def test_unordered_funnel_window_slides_not_anchored_first(
 ):
     # the completing window must NOT need to start at the user's FIRST
     # event: noise at t=0, then all three steps in minutes 120-140
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
     from mongo_to_clickhouse_spark.queries.analytics import (
         events_funnel_unordered,
     )
@@ -257,14 +252,13 @@ def test_unordered_funnel_window_slides_not_anchored_first(
         (4, 1, "view", 1.0, 140),
     ]
     sf = _write_events9(tmp_path, rows)
-    clear_scan_cache()
+    cache.clear()
     r = events_funnel_unordered(spark, sf).collect()[0]
     assert r.n_converted == 1
     assert r.fastest_span_us == 20 * 60 * 1_000_000
 
 
 def test_did_estimator_planted_cells(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
     from mongo_to_clickhouse_spark.queries.bizops import (
         events_did_estimator,
     )
@@ -280,7 +274,7 @@ def test_did_estimator_planted_cells(spark, tmp_path):
         (7, 1, "view", 27.0, 2 * day), (8, 1, "view", 27.0, 3 * day),
     ]
     sf = _write_events9(tmp_path, rows)
-    clear_scan_cache()
+    cache.clear()
     r = events_did_estimator(spark, sf).collect()[0]
     # micro-CENTS means: value 10.0 -> 1000 cents -> 1e9 micro
     assert r.control_pre_micro == 1_000_000_000
@@ -291,14 +285,13 @@ def test_did_estimator_planted_cells(spark, tmp_path):
 
 
 def test_ess_importance_uniform_weights_are_full_ess(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
     from mongo_to_clickhouse_spark.queries.sampleops import (
         sample_ess_importance,
     )
 
     # 4 docs x 10 tokens each: uniform weights -> ESS/n = 1.0 exactly
     sf = _write_docs9(tmp_path, ["tok " * 10] * 4)
-    clear_scan_cache()
+    cache.clear()
     rows = {r.source: r for r in
             sample_ess_importance(spark, sf).collect()}
     assert rows["__total__"].ess_frac_ppm == 1_000_000
@@ -306,7 +299,6 @@ def test_ess_importance_uniform_weights_are_full_ess(spark, tmp_path):
 
 
 def test_chunk_overlap_ragged_last_chunk(spark, tmp_path):
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
     from mongo_to_clickhouse_spark.queries.pipelineops import (
         CHUNK_STRIDE,
         CHUNK_TOKS,
@@ -319,7 +311,7 @@ def test_chunk_overlap_ragged_last_chunk(spark, tmp_path):
         tmp_path, [" ".join(f"w{i}" for i in range(33)),  # 33 tokens
                    "a b c d e"]
     )
-    clear_scan_cache()
+    cache.clear()
     r = pipeline_chunk_overlap(spark, sf).collect()[0]
     assert (CHUNK_TOKS, CHUNK_STRIDE) == (32, 24)
     assert r.n_docs == 2
@@ -334,10 +326,6 @@ def test_ngram_sweep_monotone_and_planted_hit(spark, tmp_path):
     13-gram with train doc 5 -> contaminated at EVERY n <= 13; train
     doc 6 shares only a 5-gram run -> flagged at n=4 but not n=8/13.
     Contamination counts must be non-increasing in n."""
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
-    from mongo_to_clickhouse_spark.operators.materialize import (
-        clear_barrier_view_cache,
-    )
     from mongo_to_clickhouse_spark.queries.corpusops import (
         decontaminate_ngram_sweep,
     )
@@ -351,8 +339,7 @@ def test_ngram_sweep_monotone_and_planted_hit(spark, tmp_path):
     texts = [bench_txt, fillers[0], fillers[1], fillers[2], fillers[3],
              full_copy, short_copy]
     sf = _write_docs9(tmp_path, texts)
-    clear_scan_cache()
-    clear_barrier_view_cache()
+    cache.clear()
     rows = {r.n: r for r in
             decontaminate_ngram_sweep(spark, sf).collect()}
     assert set(rows) == {4, 8, 13}
@@ -361,7 +348,7 @@ def test_ngram_sweep_monotone_and_planted_hit(spark, tmp_path):
     assert rows[13].n_contaminated == 1
     assert (rows[4].n_contaminated >= rows[8].n_contaminated
             >= rows[13].n_contaminated)
-    clear_barrier_view_cache()
+    cache.clear()
 
 
 def test_rag_manifest_geometry_and_cancellation(spark, tmp_path):
@@ -369,7 +356,6 @@ def test_rag_manifest_geometry_and_cancellation(spark, tmp_path):
     signed weights fully cancel ('cw' and 'aq' hash to the same bucket
     with opposite signs) takes the all-ones signature (2^P - 1) instead
     of vanishing from the ledger."""
-    from mongo_to_clickhouse_spark.io import clear_scan_cache
     from mongo_to_clickhouse_spark.queries.pipelineops import (
         RAG_PLANES,
         pipeline_rag_ingest_manifest,
@@ -378,7 +364,7 @@ def test_rag_manifest_geometry_and_cancellation(spark, tmp_path):
     # doc 0: exactly the cancelling pair -> 1 chunk, sig 255
     # doc 1: 5 ordinary tokens -> 1 chunk
     sf = _write_docs9(tmp_path, ["cw aq", "alpha beta gamma delta eps"])
-    clear_scan_cache()
+    cache.clear()
     rows = pipeline_rag_ingest_manifest(spark, sf).collect()
     assert len(rows) == 1
     r = rows[0]

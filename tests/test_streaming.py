@@ -4,6 +4,7 @@ checkpoint resume without duplication, multi-tenant fanout."""
 
 from __future__ import annotations
 
+import logging
 import os
 
 import pyarrow.parquet as pq
@@ -121,7 +122,7 @@ def test_stream_output_equals_batch_values(spark, tmp_path):
     assert all(r[2].startswith("2024") for r in streamed)
 
 
-def test_dlq_capture_and_replay(spark, tmp_path):
+def test_dlq_capture_and_replay(spark, tmp_path, caplog):
     t = _tenant(tmp_path)
     _stage_events(t.source_path)
     customer = load_table(spark, SRC, "customer")
@@ -129,12 +130,20 @@ def test_dlq_capture_and_replay(spark, tmp_path):
     def always_fail(df, batch_id):
         raise RuntimeError("sink down")
 
+    caplog.set_level(logging.ERROR, logger="mongo_to_clickhouse_spark.sinks")
     q = run_tenant_stream(
         spark, t, customer, available_now=True, fail_injector=always_fail
     )
     q.awaitTermination(120)
 
     assert not os.path.isdir(t.sink_main_path)  # nothing reached the sink
+    # every capture leaves a record naming tenant and batch, with the cause
+    captures = [r for r in caplog.records
+                if r.name == "mongo_to_clickhouse_spark.sinks.writers"]
+    assert captures
+    for r in captures:
+        assert r.args[0] == t.name and isinstance(r.args[1], int)
+        assert r.exc_info and "sink down" in str(r.exc_info[1])
     dlq = spark.read.parquet(t.dlq_path)
     total, main_n, optout_n = _expected_counts(spark)
     assert dlq.count() == total
