@@ -11,14 +11,18 @@ executor time across 32 tasks for a 4-row BPE merge table — worker
 startup, not work). ``literal_rows_df`` builds the same relation as one
 array-of-structs literal exploded inline: a single-task, zero-Python,
 zero-shuffle JVM plan whose values and schema are identical
-(every field is ``lit(value).cast(field_type)``).
+(every field is ``lit(value).cast(field_type)``). The cast would
+coerce a value of the wrong type silently (1.7 → 1 for an int field),
+so every row is first checked with the type verifier
+``createDataFrame`` uses, and a bad value raises the same
+``PySparkTypeError``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructType, _make_type_verifier
 
 
 def literal_rows_df(
@@ -31,6 +35,9 @@ def literal_rows_df(
     ``StructType``."""
     st = (schema if isinstance(schema, StructType)
           else StructType.fromDDL(schema))
+    verify = _make_type_verifier(st)
+    for row in rows:
+        verify(row)
     if not rows:
         return spark.range(0, 1, 1, 1).where(F.lit(False)).select(
             *[F.lit(None).cast(f.dataType).alias(f.name)

@@ -21,6 +21,7 @@ import math
 import zlib
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -1340,6 +1341,17 @@ def feature_extract_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 "features": feats,
             }
         )
+
+
+_POPCOUNT8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.int32)
+
+
+def popcount64(x: np.ndarray) -> np.ndarray:
+    """Set bits per element of an int64 array, over all 64 bits (the
+    numpy mirror of SQL ``bit_count``, for the phash Hamming verify):
+    an 8-bit table lookup on each of the 8 bytes, summed."""
+    b = np.ascontiguousarray(x, dtype=np.int64).view(np.uint8)
+    return _POPCOUNT8[b].reshape(*np.shape(x), 8).sum(axis=-1, dtype=np.int32)
 
 
 def extract_features(media: DataFrame) -> DataFrame:

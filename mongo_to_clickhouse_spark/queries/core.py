@@ -185,14 +185,18 @@ SOURCE_JSONL_SCAN_SQL = """
 
 def source_dim_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The opt-out dimension load (/root/reference/src/main.rs:771-793):
-    latest-version row per email."""
+    latest-version row per email, a window row_number argmax (the
+    Spark-idiomatic form of the reference's tuple-IN subquery). Also
+    registered as dedup_latest_version."""
     return optout_active(_dim(spark, sf_dir))
 
 
 def sink_clickhouse_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Output relation of the bulk INSERT (id, statement, timestamp,
-    hashed_value) (/root/reference/src/main.rs:890-900). ``created_at`` is
-    sink-side now() — non-deterministic, excluded from the compared shape."""
+    hashed_value) (/root/reference/src/main.rs:890-900): the rows whose
+    hash is NOT in the opt-out set, a broadcast left-anti join (also
+    registered as routing_optout_anti_join). ``created_at`` is sink-side
+    now() — non-deterministic, excluded from the compared shape."""
     return cdc_transform(
         load_table(spark, sf_dir, "events"), load_table(spark, sf_dir, "customer")
     )
@@ -404,11 +408,6 @@ ROUTING_OPTOUT_SEMI_JOIN_SQL = f"""
 """
 
 
-def routing_optout_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rows whose hash is NOT in the set → broadcast left-anti join."""
-    return sink_clickhouse_insert(spark, sf_dir)
-
-
 def join_tuple_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(email, version) IN (SELECT email, MAX(version) ... GROUP BY email)
     (/root/reference/src/main.rs:774) — Catalyst rewrites to LeftSemi."""
@@ -505,13 +504,6 @@ AGG_MAX_PER_GROUP_SQL = f"""
 """
 
 
-def dedup_latest_version(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Latest-version-per-key argmax — window row_number implementation
-    (the Spark-idiomatic form of the reference's tuple-IN subquery)."""
-    return optout_active(_dim(spark, sf_dir))
-
-
-DEDUP_LATEST_VERSION_SQL = ACTIVE_DIM_SQL
 SOURCE_DIM_QUERY_SQL = ACTIVE_DIM_SQL
 
 
@@ -1019,13 +1011,13 @@ QUERIES: dict[str, tuple] = {
         ROUTING_OPTOUT_SEMI_JOIN_SQL,
     ),
     "routing_optout_anti_join": (
-        routing_optout_anti_join,
+        sink_clickhouse_insert,
         SINK_CLICKHOUSE_INSERT_SQL,
     ),
     "join_tuple_in_subquery": (join_tuple_in_subquery, JOIN_TUPLE_IN_SUBQUERY_SQL),
     "join_fact_dim_equi": (join_fact_dim_equi, JOIN_FACT_DIM_EQUI_SQL),
     "agg_max_per_group": (agg_max_per_group, AGG_MAX_PER_GROUP_SQL),
-    "dedup_latest_version": (dedup_latest_version, DEDUP_LATEST_VERSION_SQL),
+    "dedup_latest_version": (source_dim_query, SOURCE_DIM_QUERY_SQL),
     "agg_count_by_key": (agg_count_by_key, AGG_COUNT_BY_KEY_SQL),
     "scalar_email_localpart": (scalar_email_localpart, SCALAR_EMAIL_LOCALPART_SQL),
     "scalar_sha256_anonymize": (

@@ -4,7 +4,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from mongo_to_clickhouse_spark.config import TUNING
 from mongo_to_clickhouse_spark.io import load_table
@@ -21,6 +20,7 @@ from mongo_to_clickhouse_spark.operators.multimodal import (
     extract_features,
     frame_sample,
     media_table,
+    popcount64,
     resize_media,
 )
 from mongo_to_clickhouse_spark.plans.backfill import backfill_output
@@ -1037,9 +1037,8 @@ def _probe_expr(nbits: int) -> str:
 def _phash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized (doc_id, features, sig) relation: one Arrow
     feature-extraction pass + the mean-centered sign signature, behind
-    a reliable checkpoint so every consumer (the relational probe/build
-    self-join AND the cogroup kernel twin) reads the kernel output
-    once."""
+    a reliable checkpoint so multimodal_phash_dedup's probe and build
+    sides read the kernel output once."""
     from mongo_to_clickhouse_spark.operators.materialize import (
         cached_barrier,
     )
@@ -1082,73 +1081,101 @@ def _phash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual-hash image dedup — the aHash/pHash pipeline shape over
     the multimodal feature tier: per payload, a mean-centered sign
-    signature ({FEATURE_DIM} bits) from the extracted features;
-    candidates ONLY from signature buckets expanded by single-bit
-    multi-probe (Hamming ≤ 1 — no all-pairs space); candidates verified
-    by exact integer-micro feature L1 distance. Returns the candidate
-    pairs nearest-first with their Hamming/L1 distances and the verify
-    verdict (`confirmed`) — the report a dedup run reviews to tune the
-    verify bound.
+    signature (FEATURE_DIM bits plus the derived parity bits) from the
+    extracted features; candidates ONLY from signature buckets expanded
+    by single-bit multi-probe (Hamming ≤ 1 — no all-pairs space);
+    candidates verified by exact integer-micro feature L1 distance.
+    Returns the _PHASH_TOPK nearest candidate pairs, nearest-first, with
+    their Hamming/L1 distances and the verify verdict (`confirmed`) —
+    the report a dedup run reviews to tune the verify bound.
 
-    Scale posture: ONE Arrow pass extracts features (mapInPandas,
-    behind a checkpoint so the probe/build self-join reads the kernel
-    output once); the candidate join is an equi-join on the signature
-    (9 probes per payload — identity + 8 single-bit flips); bucket
-    population scales as N/2^bits, so real deployments raise the bit
-    width (64-bit pHash) exactly like LSH raises bands. The verify is
-    exact because features are 6-dp rounded: ×1e6 round-trips to
-    integers identically in both engines."""
+    Plan: the probe→build candidate generation is a cogroup on the
+    signature bucket, and ONE Arrow kernel per bucket computes every
+    Hamming + L1 verify as vectorized numpy (int64 |Δ| sums, 64-bit
+    popcount), emitting only the bucket's top _PHASH_TOPK — so the
+    final global TakeOrdered sees buckets·_PHASH_TOPK rows instead of
+    every candidate pair materialized through a join. Per-bucket top-K
+    under the total (l1, a, b) order preserves the global top-K, and
+    hamming/L1 are pure integers, so the rows equal the oracle's
+    probe/build self-join.
+
+    Scale posture: ONE Arrow pass extracts features behind the memoized
+    sigs barrier; bucket population scales as N/2^bits and the derived
+    width keeps expected occupancy ≤ the target. A signature bucket must
+    fit one executor; the build side is capped at PHASH_BUCKET_CAP per
+    bucket under a deterministic multiplicative-spread rank (the
+    worst-case skewed-signature guardrail), applied inside the kernel.
+    The verify is exact because features are 6-dp rounded: ×1e6
+    round-trips to integers identically in both engines."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
+
     sigs = _phash_sigs(spark, sf_dir)
-    # SCALARIZED verify inputs: the feature arrays are projected into
-    # per-dim DOUBLE columns on the n-row relations BEFORE the pair
-    # join, so the per-PAIR L1 is pure scalar arithmetic inside
-    # whole-stage codegen. Array-typed per-pair expressions (fold OR
-    # unrolled element_at) measured 19-30 s over sf1's 9M candidate
-    # pairs vs ~1 s scalarized (functions/vectors.py module notes).
-    f_a = [f"element_at(features, {k + 1}) AS fa{k}"
-           for k in range(FEATURE_DIM)]
-    f_b = [f"element_at(features, {k + 1}) AS fb{k}"
-           for k in range(FEATURE_DIM)]
     probes = sigs.selectExpr(
         "doc_id AS a_doc",
-        *f_a,
+        "features AS fa",
         "sig AS sa",
         _probe_expr(_phash_bits(spark, sf_dir)),
     )
-    # build side CAPPED at PHASH_BUCKET_CAP per signature bucket under a
-    # deterministic multiplicative-spread rank: with an 8-bit signature,
-    # bucket population is ~n/256 and the probe join quadratic (the
-    # sf0.5 rehearsal measured 20x runtime at 5x rows). The derived
-    # signature width (np CTE / _phash_bits) keeps expected occupancy
-    # ≤ the target at every corpus size; the cap stays as the
-    # worst-case (skewed-signature) guardrail.
-    w_cap = Window.partitionBy("sb").orderBy(
-        F.expr("(b_doc * 2654435761) % 1000000007"), "b_doc"
+    build = sigs.selectExpr("doc_id AS b_doc", "features AS fb",
+                            "sig AS sb")
+
+    out_schema = T.StructType(
+        [
+            T.StructField("a_doc", T.LongType()),
+            T.StructField("b_doc", T.LongType()),
+            T.StructField("hamming", T.IntegerType()),
+            T.StructField("l1_micro", T.LongType()),
+        ]
     )
-    build = (
-        sigs.selectExpr("doc_id AS b_doc", *f_b, "sig AS sb")
-        .withColumn("__bn", F.row_number().over(w_cap))
-        .filter(F.col("__bn") <= PHASH_BUCKET_CAP)
-        .drop("__bn")
-    )
-    pairs = probes.join(
-        build,
-        (F.col("probe") == F.col("sb")) & (F.col("a_doc") < F.col("b_doc")),
-    )
-    l1 = " + ".join(
-        f"abs(CAST(round((fa{k} - fb{k}) * 1e6) AS BIGINT))"
-        for k in range(FEATURE_DIM)
+
+    def kernel(key, pdf_a, pdf_b):  # noqa: ARG001
+        empty = pd.DataFrame(
+            {"a_doc": pd.Series(dtype="int64"),
+             "b_doc": pd.Series(dtype="int64"),
+             "hamming": pd.Series(dtype="int32"),
+             "l1_micro": pd.Series(dtype="int64")}
+        )
+        if len(pdf_a) == 0 or len(pdf_b) == 0:
+            return empty
+        b_ids = pdf_b["b_doc"].to_numpy().astype(np.int64)
+        spread = (b_ids * 2654435761) % 1000000007
+        cap = np.lexsort((b_ids, spread))[:PHASH_BUCKET_CAP]
+        b_ids = b_ids[cap]
+        fb = np.stack(pdf_b["fb"].to_numpy()[cap]).astype(np.float64)
+        sb = pdf_b["sb"].to_numpy()[cap].astype(np.int64)
+        a_ids = pdf_a["a_doc"].to_numpy().astype(np.int64)
+        fa = np.stack(pdf_a["fa"].to_numpy()).astype(np.float64)
+        sa = pdf_a["sa"].to_numpy().astype(np.int64)
+        d = (fa[:, None, :] - fb[None, :, :]) * 1e6
+        # SQL round() is half-away-from-zero; np.rint is half-even
+        l1 = np.abs(
+            (np.sign(d) * np.floor(np.abs(d) + 0.5)).astype(np.int64)
+        ).sum(axis=2)
+        ham = popcount64(np.bitwise_xor(sa[:, None], sb[None, :]))
+        keep = a_ids[:, None] < b_ids[None, :]
+        ai, bi = np.nonzero(keep)
+        if len(ai) == 0:
+            return empty
+        lv = l1[ai, bi]
+        order = np.lexsort((b_ids[bi], a_ids[ai], lv))[:_PHASH_TOPK]
+        return pd.DataFrame(
+            {
+                "a_doc": a_ids[ai][order],
+                "b_doc": b_ids[bi][order],
+                "hamming": ham[ai, bi][order],
+                "l1_micro": lv[order],
+            }
+        )
+
+    pairs = (
+        probes.groupBy("probe")
+        .cogroup(build.groupBy("sb"))
+        .applyInPandas(kernel, out_schema)
     )
     return (
-        pairs.selectExpr(
-            "a_doc",
-            "b_doc",
-            "bit_count(sa ^ sb) AS hamming",
-            f"({l1}) AS l1_micro",
-        )
-        .withColumn(
-            "confirmed", F.col("l1_micro") <= PHASH_L1_MICRO
-        )
+        pairs.withColumn("confirmed", F.col("l1_micro") <= PHASH_L1_MICRO)
         .orderBy("l1_micro", "a_doc", "b_doc")
         .limit(_PHASH_TOPK)
     )
@@ -1221,102 +1248,6 @@ def _phash_duck_sql() -> str:
 
 
 MULTIMODAL_PHASH_DEDUP_SQL = _phash_duck_sql()
-
-
-def multimodal_phash_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The phash dedup with the PRODUCTION per-bucket kernel: the
-    probe→build candidate generation becomes a cogroup on the signature
-    bucket and ONE Arrow kernel per bucket computes every Hamming + L1
-    verify as vectorized numpy (int64 |Δ| sums, 256-entry popcount
-    table), emitting only the bucket's top-{_PHASH_TOPK} — so the final
-    global TakeOrdered sees buckets·{_PHASH_TOPK} rows instead of every
-    candidate pair materialized through a join. Registered alongside
-    the relational form the way sim_knn_graph_matmul sits beside
-    sim_knn_graph_lsh; results are bit-identical (hamming/L1 are pure
-    integers; per-bucket top-K under the total (l1, a, b) order
-    preserves the global top-K), so it shares the relational twin's
-    oracle.
-
-    Scale posture: a signature bucket must fit one executor — the same
-    contract the relational twin's cap guards (production widens the
-    hash). Same memoized sigs barrier; same deterministic spread-rank
-    cap, applied inside the kernel."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    sigs = _phash_sigs(spark, sf_dir)
-    probes = sigs.selectExpr(
-        "doc_id AS a_doc",
-        "features AS fa",
-        "sig AS sa",
-        _probe_expr(_phash_bits(spark, sf_dir)),
-    )
-    build = sigs.selectExpr("doc_id AS b_doc", "features AS fb",
-                            "sig AS sb")
-
-    out_schema = T.StructType(
-        [
-            T.StructField("a_doc", T.LongType()),
-            T.StructField("b_doc", T.LongType()),
-            T.StructField("hamming", T.IntegerType()),
-            T.StructField("l1_micro", T.LongType()),
-        ]
-    )
-    popcnt = np.array([bin(i).count("1") for i in range(256)],
-                      dtype=np.int32)
-
-    def kernel(key, pdf_a, pdf_b):  # noqa: ARG001
-        empty = pd.DataFrame(
-            {"a_doc": pd.Series(dtype="int64"),
-             "b_doc": pd.Series(dtype="int64"),
-             "hamming": pd.Series(dtype="int32"),
-             "l1_micro": pd.Series(dtype="int64")}
-        )
-        if len(pdf_a) == 0 or len(pdf_b) == 0:
-            return empty
-        b_ids = pdf_b["b_doc"].to_numpy().astype(np.int64)
-        spread = (b_ids * 2654435761) % 1000000007
-        cap = np.lexsort((b_ids, spread))[:PHASH_BUCKET_CAP]
-        b_ids = b_ids[cap]
-        fb = np.stack(pdf_b["fb"].to_numpy()[cap]).astype(np.float64)
-        sb = pdf_b["sb"].to_numpy()[cap].astype(np.int64)
-        a_ids = pdf_a["a_doc"].to_numpy().astype(np.int64)
-        fa = np.stack(pdf_a["fa"].to_numpy()).astype(np.float64)
-        sa = pdf_a["sa"].to_numpy().astype(np.int64)
-        d = (fa[:, None, :] - fb[None, :, :]) * 1e6
-        # SQL round() is half-away-from-zero; np.rint is half-even
-        l1 = np.abs(
-            (np.sign(d) * np.floor(np.abs(d) + 0.5)).astype(np.int64)
-        ).sum(axis=2)
-        x = np.bitwise_xor(sa[:, None], sb[None, :])
-        # two-byte popcount: signatures are ≤ _PHASH_MAX_BITS (16) wide
-        ham = popcnt[x & 255] + popcnt[(x >> 8) & 255]
-        keep = a_ids[:, None] < b_ids[None, :]
-        ai, bi = np.nonzero(keep)
-        if len(ai) == 0:
-            return empty
-        lv = l1[ai, bi]
-        order = np.lexsort((b_ids[bi], a_ids[ai], lv))[:_PHASH_TOPK]
-        return pd.DataFrame(
-            {
-                "a_doc": a_ids[ai][order],
-                "b_doc": b_ids[bi][order],
-                "hamming": ham[ai, bi][order],
-                "l1_micro": lv[order],
-            }
-        )
-
-    pairs = (
-        probes.groupBy("probe")
-        .cogroup(build.groupBy("sb"))
-        .applyInPandas(kernel, out_schema)
-    )
-    return (
-        pairs.withColumn("confirmed", F.col("l1_micro") <= PHASH_L1_MICRO)
-        .orderBy("l1_micro", "a_doc", "b_doc")
-        .limit(_PHASH_TOPK)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2287,10 +2218,9 @@ QUERIES: dict[str, tuple] = {
         pipeline_filter_overlap_matrix,
         PIPELINE_FILTER_OVERLAP_MATRIX_SQL,
     ),
-    # bit-identical integer hamming/L1 + order-preserving per-bucket
-    # top-K => shares the relational form's oracle
+    # both ids stay in the driver contract; one oracle, one function
     "multimodal_phash_kernel": (
-        multimodal_phash_kernel,
+        multimodal_phash_dedup,
         MULTIMODAL_PHASH_DEDUP_SQL,
     ),
     "multimodal_phash_dedup": (

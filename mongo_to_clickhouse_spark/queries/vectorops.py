@@ -1487,11 +1487,12 @@ def emb_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     2⁶³-overflow case the BIGINT form fails is pinned in
     tests/test_vector_stats.py).
 
-    Scale posture: explode cost is d²/2 rows per vector — for 100 TB of
-    embeddings prefer d·(d+1)/2 ≈ 2 k COLUMNS via a single agg of
-    products (same math, no explode); the exploded form is used here
-    because it keeps the (i,j) keys data — one partial-aggregated
-    shuffle to 2,080 groups either way."""
+    Scale posture: explode cost is d²/2 rows per vector, partial-
+    aggregated map-side into one shuffle to 2,080 groups. Both registry
+    ids and the PCA loadings use this one plan: the columnar and
+    grouped forms cost more at fixture scale (PARITY_r04.md), and the
+    Arrow-batch matmul form, though faster warm, wrapped its per-batch
+    int64 MᵀM before exact_sum_decimal could widen it."""
     emb = load_table(spark, sf_dir, "embeddings")
     # spread vectors across tasks BEFORE the d²/2 explode: the source is
     # a handful of parquet splits, so the whole 2,080×-row blow-up and
@@ -1539,194 +1540,6 @@ def emb_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(acc(F.col("mi"))).alias("si"),
         F.sum(acc(F.col("mj"))).alias("sj"),
         F.sum(acc(F.col("mi")) * F.col("mj")).alias("sij"),
-    )
-    num = (F.col("n") * F.col("sij") - F.col("si") * F.col("sj")).cast("double")
-    den = (F.col("n").cast("double") * 1e6) * (F.col("n").cast("double") * 1e6)
-    return cells.select(
-        "i", "j", F.round(num / den, 9).alias("cov")
-    ).orderBy("i", "j")
-
-
-def emb_covariance_columnar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Columnar twin of ``emb_covariance``: the fully-columnar form —
-    ONE aggregation computing all d + d·(d+1)/2 power sums as separate
-    columns (count, Σmᵢ, Σmᵢmⱼ), then a stack() unpivot of the single
-    result row back to the (i, j, cov) long form. Same integer
-    micro-unit math ⇒ bit-identical output.
-
-    MEASURED VERDICT (local[32]): zero explode and a one-row shuffle,
-    but the ~4 k generated aggregate expressions plus the 10 k-expression
-    stack unpivot cost ~35 s of CONSTANT plan-build/analysis/codegen
-    (py4j column construction + Catalyst) vs ~1 s total for the exploded
-    form at sf0.1 — "fewer shuffled rows" is not the only axis; plan
-    complexity is a real cost at d² columns. Kept as documentation and
-    for the bit-identity test; the registered ID stays the exploded
-    form — see PARITY_r04.md for all three measurements."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    # control-plane: embedding dim from one row (schema-level constant)
-    d = len(emb.select("embedding").head()[0])
-    micro = F.transform(
-        F.col("embedding"),
-        lambda v: F.round(v.cast("double") * 1e6).cast("bigint"),
-    )
-    base = emb.select(micro.alias("m"))
-    aggs = [F.count("*").alias("n")]
-    aggs += [
-        F.sum(F.element_at("m", i + 1)).alias(f"s{i}") for i in range(d)
-    ]
-    aggs += [
-        F.sum(F.element_at("m", i + 1) * F.element_at("m", j + 1)).alias(
-            f"p{i}_{j}"
-        )
-        for i in range(d)
-        for j in range(i, d)
-    ]
-    row = base.agg(*aggs)
-    cells = ", ".join(
-        f"{i}, {j}, s{i}, s{j}, p{i}_{j}"
-        for i in range(d)
-        for j in range(i, d)
-    )
-    long = row.selectExpr(
-        "n", f"stack({d * (d + 1) // 2}, {cells}) AS (i, j, si, sj, sij)"
-    )
-    num = (F.col("n") * F.col("sij") - F.col("si") * F.col("sj")).cast("double")
-    den = (F.col("n").cast("double") * 1e6) * (F.col("n").cast("double") * 1e6)
-    return long.select(
-        F.col("i").cast("int").alias("i"),
-        F.col("j").cast("int").alias("j"),
-        F.round(num / den, 9).alias("cov"),
-    ).orderBy("i", "j")
-
-
-def emb_covariance_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped-by-dimension covariance — the middle point between the
-    exploded (d²/2 rows/vector, 4 expressions) and fully-columnar
-    (0 explode, ~4 k expressions) forms: explode each vector to d rows
-    (i, mᵢ, m), aggregate per dimension i the d product sums
-    Σmᵢmⱼ as COLUMNS (~70 expressions total), then a d-entry stack
-    unpivot + a broadcast self-join of the d-row Σmⱼ table. Bit-identical
-    integer micro-unit math.
-
-    Scale posture: the Generate emits d rows/vector instead of d²/2
-    (32× less for d=64) and partial aggregation still happens map-side
-    into d groups; the shuffle is d groups × (d+2) columns ≈ the same
-    2 k cells as ever. Plan-compile cost stays trivial (~70 exprs). The
-    64-row aggregate is checkpointed once so the Σmⱼ side doesn't
-    re-scan the input.
-
-    MEASURED (sf0.1, local[32]): 1.95 s vs the exploded form's 0.99 s —
-    the checkpoint + broadcast join add ~1 s of fixed overhead that the
-    32×-smaller Generate doesn't win back at fixture scale, so the
-    registered ID stays the exploded form; at real embedding-corpus
-    scale (where Generate row count dominates and the fixed second of
-    control-plane is noise) this is the plan to switch to."""
-    from mongo_to_clickhouse_spark.operators.materialize import reliable_checkpoint
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    # control-plane: embedding dim from one row (schema-level constant)
-    d = len(emb.select("embedding").head()[0])
-    micro = F.transform(
-        F.col("embedding"),
-        lambda v: F.round(v.cast("double") * 1e6).cast("bigint"),
-    )
-    # spread vectors across tasks BEFORE the d-way explode (same measured
-    # rationale as emb_covariance: the source is a handful of splits)
-    base = emb.repartition(
-        spark.sparkContext.defaultParallelism, "vec_id"
-    ).select(micro.alias("m"))
-    ex = base.select(F.posexplode("m").alias("i", "mi"), "m")
-    aggs = [F.count("*").alias("n"), F.sum("mi").alias("s")]
-    aggs += [
-        F.sum(F.col("mi") * F.element_at("m", j + 1)).alias(f"p{j}")
-        for j in range(d)
-    ]
-    g = reliable_checkpoint(ex.groupBy("i").agg(*aggs))  # d rows
-    cells = ", ".join(f"{j}, p{j}" for j in range(d))
-    long = (
-        g.selectExpr("i", "n", "s AS si", f"stack({d}, {cells}) AS (j, sij)")
-        .where(F.col("j") >= F.col("i"))
-    )
-    sj = g.select(F.col("i").alias("j"), F.col("s").alias("sj"))
-    out = long.join(F.broadcast(sj), "j")
-    num = (F.col("n") * F.col("sij") - F.col("si") * F.col("sj")).cast("double")
-    den = (F.col("n").cast("double") * 1e6) * (F.col("n").cast("double") * 1e6)
-    return out.select(
-        F.col("i").cast("int").alias("i"),
-        F.col("j").cast("int").alias("j"),
-        F.round(num / den, 9).alias("cov"),
-    ).orderBy("i", "j")
-
-
-def emb_covariance_matmul(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fourth covariance formulation, REGISTERED alongside the exploded
-    form: per-Arrow-batch numpy partial sums via ``mapInPandas`` — each
-    batch contributes (n_b, Σm, MᵀM) computed as ONE int64 BLAS-free
-    integer matmul, emitting just d·(d+1)/2 upper-triangle rows per
-    batch; one final (i, j) aggregate merges the partials. The sums are
-    the same exact micro-unit integers as the exploded plan, so the
-    result is bit-identical and this id shares emb_covariance's DuckDB
-    oracle verbatim.
-
-    This is the 100 TB plan of record for dense second moments: no
-    Generate at all (the exploded form writes d²/2 shuffle rows PER
-    VECTOR; here the map side emits 2,080 rows PER BATCH ≈ per 10⁴
-    vectors — a ~10⁴× shuffle-volume reduction), the kernel is
-    Arrow-batched vectorized numpy (not per-row Python), and partial
-    aggregation is explicit instead of relying on map-side combine of
-    an exploded stream.
-
-    int64 safety: |m| ≤ ~2e6 micro ⇒ per-batch MᵀM entries ≤
-    rows_b·4e12 ≈ 4e16 at the 10k default Arrow batch; the cross-batch
-    SUM holds to ~10⁶ vectors like every power sum here (and widens via
-    EngineTuning.exact_sum_decimal identically)."""
-    import numpy as np
-    import pandas as pd
-
-    def partial_moments(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            x = (
-                np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                * 1e6
-            )
-            # SQL round() is half-AWAY-from-zero; np.rint is half-even —
-            # emulate the SQL semantics exactly
-            m = (np.sign(x) * np.floor(np.abs(x) + 0.5)).astype(np.int64)
-            p = m.T @ m                      # exact int64 matmul
-            s = m.sum(axis=0, dtype=np.int64)
-            iu, ju = np.triu_indices(m.shape[1])
-            yield pd.DataFrame(
-                {
-                    "i": iu.astype(np.int32),
-                    "j": ju.astype(np.int32),
-                    "n": np.full(iu.size, m.shape[0], dtype=np.int64),
-                    "si": s[iu],
-                    "sj": s[ju],
-                    "sij": p[iu, ju],
-                }
-            )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    parts = emb.select("vec_id", "embedding").repartition(
-        spark.sparkContext.defaultParallelism, "vec_id"
-    ).mapInPandas(
-        partial_moments,
-        "i int, j int, n long, si long, sj long, sij long",
-    )
-    # Derived widening, same rationale as emb_covariance (the per-batch
-    # int64 partials are value-bounded and safe; only the cross-batch
-    # merge and the n·Σxy closed form need width).
-    wide = _acc_for(spark, sf_dir) != "BIGINT"
-    acc = (
-        (lambda c: c.cast("decimal(38,0)")) if wide else (lambda c: c)
-    )
-    cells = parts.groupBy("i", "j").agg(
-        F.sum("n").alias("n"),
-        F.sum(acc(F.col("si"))).alias("si"),
-        F.sum(acc(F.col("sj"))).alias("sj"),
-        F.sum(acc(F.col("sij"))).alias("sij"),
     )
     num = (F.col("n") * F.col("sij") - F.col("si") * F.col("sj")).cast("double")
     den = (F.col("n").cast("double") * 1e6) * (F.col("n").cast("double") * 1e6)
@@ -2287,10 +2100,7 @@ def _pca_loadings(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     broadcast literal is byte-stable."""
     import numpy as np
 
-    # optimization round 2: collect from the matmul twin — bit-identical
-    # result (shared oracle), ~28 s less executor time than the exploded
-    # form's d²/2-rows-per-vector Generate at sf0.1
-    cov_rows = emb_covariance_matmul(spark, sf_dir).collect()  # O(d²)
+    cov_rows = emb_covariance(spark, sf_dir).collect()  # O(d²)
     d = max(r["j"] for r in cov_rows) + 1
     cov = np.zeros((d, d))
     for r in cov_rows:
@@ -3586,8 +3396,7 @@ def dedup_semdedup_matmul(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer vectors — exact: |v| ≤ ~2e6 micro ⇒ entries ≤ 64·4e12 ≈
     2.6e14), then the min-id-keeps drop rule as a vectorized triangular
     mask. Registered alongside the relational pair-join form
-    (dedup_semdedup) the way emb_covariance_matmul sits beside
-    emb_covariance: same assignment barrier, same accounting output,
+    (dedup_semdedup): same assignment barrier, same accounting output,
     ~|cluster|² work done at memory bandwidth instead of per-pair
     higher-order lambdas.
 
@@ -4855,8 +4664,8 @@ QUERIES: dict[str, tuple] = {
         DECONTAMINATE_EMBEDDING_COSINE_SQL,
     ),
     "emb_covariance": (emb_covariance, EMB_COVARIANCE_SQL),
-    # bit-identical exact sums => shares the exploded form's oracle
-    "emb_covariance_matmul": (emb_covariance_matmul, EMB_COVARIANCE_SQL),
+    # both ids stay in the driver contract; one oracle, one function
+    "emb_covariance_matmul": (emb_covariance, EMB_COVARIANCE_SQL),
     "emb_pca_project": (emb_pca_project, EMB_PCA_PROJECT_SQL),
     "emb_pca_power_iteration": (
         emb_pca_power_iteration,

@@ -16,12 +16,15 @@ fixed historical variant (historical_data/src/main.rs:808-817) — SURVEY
 from __future__ import annotations
 
 import glob
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mongo_to_clickhouse_spark.config import TenantConfig
+
+log = logging.getLogger(__name__)
 
 
 def _partition_path(tenant: TenantConfig, batch_id: int) -> str:
@@ -83,6 +86,8 @@ def retry_failed_batches(
                 fail_injector(dlq.filter(F.col("batch_id") == bid), bid)
             ok_ids.append(bid)
         except Exception:  # noqa: BLE001 — still failing: keep queued
+            log.error("tenant %s batch %d: DLQ replay failed, batch stays "
+                      "queued", tenant.name, bid, exc_info=True)
             continue
     if not ok_ids:
         return 0
@@ -98,6 +103,8 @@ def retry_failed_batches(
                 .parquet(base)
             )
     except Exception:  # noqa: BLE001 — sink down mid-replay: keep all queued
+        log.error("tenant %s batches %s: DLQ replay sink write failed, all "
+                  "stay queued", tenant.name, ok_ids, exc_info=True)
         return 0
     for bid in ok_ids:
         _drop_partition(tenant, bid)

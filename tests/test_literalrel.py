@@ -4,6 +4,7 @@ the 32-slice parallelize cost ~45 s of executor time for a 4-row BPE
 result at local[32])."""
 
 import pytest
+from pyspark.errors import PySparkTypeError
 
 from mongo_to_clickhouse_spark.operators.literalrel import literal_rows_df
 
@@ -44,3 +45,23 @@ def test_small_payload_plans_no_python_stage(spark):
     for node in ("BatchEvalPython", "ArrowEvalPython", "MapInArrow",
                  "Scan ExistingRDD"):
         assert node not in plan
+
+
+@pytest.mark.parametrize(
+    "rows, schema",
+    [
+        ([(1.7,)], "v int"),
+        ([(True,)], "v bigint"),
+        ([("12",)], "v int"),
+        ([(1, "a"), (2.5, "b")], "r int, pair string"),  # second row bad
+        ([(j, j, 0.5) for j in range(30)] + [(30, 30, "x")],  # RDD path
+         "i bigint, j bigint, x double"),
+    ],
+)
+def test_bad_literal_values_raise_like_createDataFrame(spark, rows, schema):
+    # the lit().cast() build would coerce these silently (1.7 -> 1,
+    # True -> 1, "12" -> 12); createDataFrame rejects them, so must this
+    with pytest.raises(PySparkTypeError):
+        spark.createDataFrame(rows, schema)
+    with pytest.raises(PySparkTypeError):
+        literal_rows_df(spark, rows, schema)

@@ -13,6 +13,42 @@ ORACLE_IDS = sorted(k for k, (_f, sql) in REG.items() if sql is not None)
 ROWS_ONLY_IDS = sorted(k for k, (_f, sql) in REG.items() if sql is None)
 
 
+# Ids that share an oracle with another id yet keep their own function,
+# because the point of the id is a different path to the same rows.
+SHARED_ORACLE_OWN_PATH = {
+    "source_jsonl_scan": "JSONL staging round trip of the documents table",
+    "source_csv_scan": "quoted multiLine CSV round trip of the same table",
+    "source_orc_scan": "ORC stripe round trip of the same table",
+    "stream_pipeline_cdc": "live readStream drain of the batch CDC insert",
+    "stream_dlq_retry_loop": "DLQ capture then replay of the same drain",
+    "source_changestream": "change-stream tail drain of the same insert",
+    "checkpoint_resume_token": "two drains resumed from one checkpoint",
+    "stream_microbatch_assembly": "one drain over two staged micro-batches",
+    "stream_dedup_by_key": "dropDuplicates with state kept forever",
+    "stream_dedup_within_watermark": "dropDuplicatesWithinWatermark state",
+}
+
+
+def test_shared_oracle_ids_share_one_function():
+    """Registry ids whose oracle SQL is identical must map to the SAME
+    function — one implementation per oracle — unless the id is listed
+    above with the reason it is a distinct path."""
+    by_sql: dict[str, list[str]] = {}
+    for qid in ORACLE_IDS:
+        by_sql.setdefault(REG[qid][1], []).append(qid)
+    shared = [ids for ids in by_sql.values() if len(ids) > 1]
+    dupes = []
+    for ids in shared:
+        fns = {REG[q][0] for q in ids if q not in SHARED_ORACLE_OWN_PATH}
+        if len(fns) > 1:
+            dupes.append(sorted(q for q in ids
+                                if q not in SHARED_ORACLE_OWN_PATH))
+    assert not dupes, f"one oracle, several implementations: {dupes}"
+    # every exception must still be one: no stale allow-list entries
+    in_shared = {q for ids in shared for q in ids}
+    assert set(SHARED_ORACLE_OWN_PATH) <= in_shared
+
+
 @pytest.fixture(scope="module")
 def duck(sf_dir):
     con = duck_connection(sf_dir)

@@ -39,3 +39,24 @@ def test_identical_payloads_confirmed_first(spark, tmp_path):
     # no other pair may be confirmed: distinct digests give unrelated
     # features far beyond the L1 bound
     assert all(not r["confirmed"] for r in rows[1:])
+
+
+def test_popcount64_counts_every_bit():
+    # the phash Hamming verify must hold at every signature width the
+    # phash_max_bits knob allows, not just the low 16 bits
+    import numpy as np
+
+    from mongo_to_clickhouse_spark.operators.multimodal import popcount64
+
+    rng = np.random.RandomState(5)
+    vals = np.concatenate([
+        rng.randint(0, 2**62, size=200, dtype=np.int64),
+        np.array([0, 1, 2**16, 2**16 + 1, 2**20 - 1, 2**31, 2**62 + 7,
+                  2**63 - 1, -1, -(2**40)], dtype=np.int64),
+    ])
+    grid = vals.reshape(10, 21)
+    got = popcount64(grid)
+    assert got.shape == grid.shape
+    want = [bin(int(v) & (2**64 - 1)).count("1") for v in vals]
+    assert got.ravel().tolist() == want
+    assert got[grid > 2**16].min() >= 1

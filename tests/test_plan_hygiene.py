@@ -237,7 +237,7 @@ _CONTROL_PLANE_WHITELIST = {
     # d×d covariance of a fixed embedding dim: O(d²) rows, independent of
     # corpus size — the MLlib RowMatrix control-plane split for PCA
     ("queries/vectorops.py",
-     "emb_covariance_matmul(spark, sf_dir).collect()"),
+     "emb_covariance(spark, sf_dir).collect()"),
     # distinct failed batch ids in the DLQ: bounded by batch count, not rows
     ("sinks/dlq.py", 'dlq.select("batch_id").distinct().collect()'),
     # stream upsert accounting: one row per micro-batch (3), collected so

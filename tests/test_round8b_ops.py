@@ -272,26 +272,6 @@ def test_stream_upsert_consistent_with_batch_family(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# multimodal_phash_kernel
-# ---------------------------------------------------------------------------
-
-
-def test_phash_kernel_twin_is_bit_identical(spark, sf_dir):
-    """The cogroup kernel must reproduce the relational twin's rows
-    EXACTLY (hamming/L1 are integers; per-bucket top-K under the total
-    (l1, a, b) order preserves the global top-K)."""
-    from mongo_to_clickhouse_spark.queries.pipelineops import (
-        multimodal_phash_dedup,
-        multimodal_phash_kernel,
-    )
-
-    rel = [tuple(r) for r in multimodal_phash_dedup(spark, sf_dir).collect()]
-    ker = [tuple(r) for r in multimodal_phash_kernel(spark, sf_dir).collect()]
-    assert rel == ker
-    assert len(rel) > 0
-
-
-# ---------------------------------------------------------------------------
 # window_rolling_corr_pair
 # ---------------------------------------------------------------------------
 

@@ -148,10 +148,18 @@ def test_dlq_capture_and_replay(spark, tmp_path, caplog):
     total, main_n, optout_n = _expected_counts(spark)
     assert dlq.count() == total
 
-    # replay with the sink still down: batch must STAY queued
+    # replay with the sink still down: batch must STAY queued, and each
+    # kept batch leaves a record naming tenant and batch, with the cause
     active = optout_active(optout_dim(customer))
+    caplog.clear()
     assert retry_failed_batches(spark, t, active, fail_injector=always_fail) == 0
     assert spark.read.parquet(t.dlq_path).count() == total
+    kept = [r for r in caplog.records
+            if r.name == "mongo_to_clickhouse_spark.sinks.dlq"]
+    assert kept
+    for r in kept:
+        assert r.args[0] == t.name and isinstance(r.args[1], int)
+        assert r.exc_info and "sink down" in str(r.exc_info[1])
 
     # sink recovers: replay drains the queue and the data lands routed
     drained = retry_failed_batches(spark, t, active)

@@ -11,8 +11,6 @@ from mongo_to_clickhouse_spark.queries.statsops import events_anomaly_zscore
 from mongo_to_clickhouse_spark.queries.vectorops import (
     PCA_K,
     emb_covariance,
-    emb_covariance_columnar,
-    emb_covariance_grouped,
     emb_pca_project,
     pca_project_frame,
 )
@@ -37,15 +35,16 @@ def test_covariance_matches_numpy(spark, sf_dir):
         assert abs(ref[r.i, r.j] - r.cov) < 1e-8, (r.i, r.j)
 
 
-def test_covariance_variants_bit_identical(spark, tmp_path):
-    # the three physical strategies (exploded d²/2 rows, grouped d rows,
-    # fully-columnar zero-explode) must agree BIT-for-bit — same integer
-    # micro-unit math, three plans. Small d keeps the columnar form's
-    # O(d²)-expression plan-compile cost trivial in the suite.
+def test_covariance_matches_oracle_on_planted_fixture(spark, tmp_path):
+    # a planted d=8, n=200 fixture outside the graded tables: the single
+    # covariance plan must hash-match its DuckDB oracle row for row
     import os
 
+    import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
+
+    from tests.oracle_harness import compare
 
     rng = np.random.RandomState(11)
     d, n = 8, 200
@@ -63,18 +62,17 @@ def test_covariance_variants_bit_identical(spark, tmp_path):
     sf = str(tmp_path)
 
     from mongo_to_clickhouse_spark.queries.vectorops import (
-        emb_covariance_matmul,
+        EMB_COVARIANCE_SQL,
     )
 
-    ref = [(r.i, r.j, r.cov) for r in emb_covariance(spark, sf).collect()]
-    assert len(ref) == d * (d + 1) // 2
-    for variant in (
-        emb_covariance_grouped,
-        emb_covariance_columnar,
-        emb_covariance_matmul,
-    ):
-        got = [(r.i, r.j, r.cov) for r in variant(spark, sf).collect()]
-        assert got == ref, variant.__name__
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{sf}/embeddings.parquet')"
+    )
+    df = emb_covariance(spark, sf)
+    assert df.count() == d * (d + 1) // 2
+    assert compare(df, con, EMB_COVARIANCE_SQL) == []
 
 
 def test_pca_components_orthonormal_and_ordered(spark, sf_dir):
@@ -142,17 +140,22 @@ def test_exact_sum_decimal_survives_planted_overflow(spark, tmp_path, monkeypatc
     # Σmi·mj = 385e18 > 2^63 — the BIGINT accumulator cannot represent
     # it (ANSI overflow error, or a silent wrap with ANSI off), while
     # the DECIMAL(38,0) form returns the exact covariance
-    # (n·Σxy − Σx·Σy)/(n·1e6)² = 8.25e20 / 1e14 = 8,250,000.
-    from mongo_to_clickhouse_spark.queries import vectorops
+    # (n·Σxy − Σx·Σy)/(n·1e6)² = 8.25e20 / 1e14 = 8,250,000 — under
+    # BOTH covariance registry ids (they share one oracle).
+    from mongo_to_clickhouse_spark.queries import registry, vectorops
 
     sf = _write_embeddings(
         tmp_path / "ovf", [[1000.0 * k, 1000.0 * k] for k in range(1, 11)]
     )
     monkeypatch.setattr(vectorops, "EXACT_SUM_DECIMAL", True)
-    rows = {
-        (r["i"], r["j"]): r["cov"] for r in emb_covariance(spark, sf).collect()
-    }
-    assert rows == {(0, 0): 8250000.0, (0, 1): 8250000.0, (1, 1): 8250000.0}
+    reg = registry()
+    for qid in ("emb_covariance", "emb_covariance_matmul"):
+        rows = {
+            (r["i"], r["j"]): r["cov"] for r in reg[qid][0](spark, sf).collect()
+        }
+        assert rows == {
+            (0, 0): 8250000.0, (0, 1): 8250000.0, (1, 1): 8250000.0
+        }, qid
 
     monkeypatch.setattr(vectorops, "EXACT_SUM_DECIMAL", False)
     try:
