@@ -225,6 +225,12 @@ class EngineTuning:
     graph_copart_min_rows: int = 2_000_000
     graph_copart_rows_per_part: int = 500_000
 
+    def __post_init__(self) -> None:
+        # pHash signatures are BIGINT bit sets in both engines
+        if self.phash_max_bits > 63:
+            raise ValueError(
+                f"phash_max_bits must be at most 63, got {self.phash_max_bits}")
+
 
 def _load_tuning() -> EngineTuning:
     raw = os.environ.get("SPARK_GRAFT_TUNING", "")

@@ -1,6 +1,6 @@
 """Physical-plan structural metadata — fingerprints and cost counters.
 
-One shared implementation for bench.py, scripts/plan_audit.py, and
+One shared implementation for bench.py, scripts/profiler.py, and
 tests/test_plan_budget.py so the three never drift on what a "shuffle"
 means.
 

@@ -1025,12 +1025,18 @@ def _phash_bits(spark: SparkSession, sf_dir: str) -> int:
     return phash_bits(corpus_count(spark, sf_dir, "documents"))
 
 
+def _sig_bit(k: str) -> str:
+    """Signature bit k as BIGINT: an INT ``shiftleft(1, k)`` wraps at
+    k ≥ 31, while the oracle's ``1 << k`` is BIGINT."""
+    return f"shiftleft(CAST(1 AS BIGINT), {k})"
+
+
 def _probe_expr(nbits: int) -> str:
     """Multi-probe set: identity + every single-bit flip of the
     (derived-width) signature."""
     return (
         f"explode(concat(array(sig), transform(sequence(0, {nbits - 1}),"
-        " k -> sig ^ shiftleft(1, k)))) AS probe"
+        f" k -> sig ^ {_sig_bit('k')}))) AS probe"
     )
 
 
@@ -1054,9 +1060,9 @@ def _phash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).selectExpr(
             "doc_id",
             "features",
-            f"""aggregate(sequence(0, {FEATURE_DIM - 1}), 0,
+            f"""aggregate(sequence(0, {FEATURE_DIM - 1}), 0L,
                  (acc, k) -> acc + IF(element_at(features, k + 1) > m,
-                                      shiftleft(1, k), 0)) AS sig""",
+                                      {_sig_bit('k')}, 0L)) AS sig""",
         )
         extra = _phash_bits(spark, sf_dir) - FEATURE_DIM
         if extra == 0:
@@ -1066,11 +1072,11 @@ def _phash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
         return base.selectExpr(
             "doc_id",
             "features",
-            f"""sig + aggregate(sequence(0, {extra - 1}), 0,
+            f"""sig + aggregate(sequence(0, {extra - 1}), 0L,
                  (acc, j) -> acc + IF(
                      (CAST(round(element_at(features, j + 1) * 1e6)
                            AS BIGINT) DIV {_PARITY_STEP}) % 2 = 1,
-                     shiftleft(1, {FEATURE_DIM} + j), 0)) AS sig""",
+                     {_sig_bit(f'{FEATURE_DIM} + j')}, 0L)) AS sig""",
         )
 
     return cached_barrier(

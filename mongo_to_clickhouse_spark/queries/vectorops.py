@@ -2092,15 +2092,13 @@ def emb_pca_power_matfree(spark: SparkSession, sf_dir: str) -> DataFrame:
 EMB_PCA_POWER_MATFREE_SQL = _pca_matfree_sql("duck")
 
 
-def _pca_loadings(spark: SparkSession, sf_dir: str) -> list[list[float]]:
+def _pca_loadings(cov_rows) -> list[list[float]]:
     """Driver-side eigh of the DISTRIBUTED covariance (emb_covariance's
-    plan) — the RowMatrix.computePrincipalComponents split. O(d²)
-    control-plane rows collected; sign fixed per component
-    (largest-|coefficient| entry made positive); 9-dp rounding so the
-    broadcast literal is byte-stable."""
+    collected O(d²) rows) — the RowMatrix.computePrincipalComponents
+    split. Sign fixed per component (largest-|coefficient| entry made
+    positive); 9-dp rounding so the broadcast literal is byte-stable."""
     import numpy as np
 
-    cov_rows = emb_covariance(spark, sf_dir).collect()  # O(d²)
     d = max(r["j"] for r in cov_rows) + 1
     cov = np.zeros((d, d))
     for r in cov_rows:
@@ -2117,14 +2115,16 @@ def _pca_loadings(spark: SparkSession, sf_dir: str) -> list[list[float]]:
 
 
 def pca_project_frame(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, comps: list[list[float]] | None = None
 ) -> DataFrame:
     """Per-row PCA projection to PCA_K components: the loadings go back
     as one broadcast literal so the projection is a narrow per-row map
     (zip_with dot products, no UDF, no shuffle). The user-facing
     projection relation; emb_pca_project's registry entry returns the
-    hash-checkable invariant REPORT derived from this frame."""
-    comps = _pca_loadings(spark, sf_dir)
+    hash-checkable invariant REPORT derived from this frame, passing the
+    loadings it already holds."""
+    if comps is None:
+        comps = _pca_loadings(emb_covariance(spark, sf_dir).collect())
     w_lit = F.lit(comps)  # one nested-array literal, not 512 F.lit calls
     emb = load_table(spark, sf_dir, "embeddings")
     proj = F.transform(
@@ -2174,9 +2174,9 @@ def emb_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
       a non-top eigenvector, or a drifted projection map, drops var₁
       BELOW the quotient and flips the flag.
     - ``explained_leq_trace``: Σₖ varₖ ≤ trace(C) (+1e-6 slack), with
-      the trace aggregated DISTRIBUTED from emb_covariance's exactly
-      oracled diagonal — orthonormal projections cannot explain more
-      variance than the total.
+      the trace summed from emb_covariance's exactly oracled diagonal,
+      taken from the same collected rows as the loadings — orthonormal
+      projections cannot explain more variance than the total.
 
     The DuckDB oracle states the EXPECTED report (all deviations 0,
     all flags true): a wrong eigh, broken sign convention, or drifted
@@ -2185,7 +2185,10 @@ def emb_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     are pytest-pinned (tests/test_vector_stats.py)."""
     import numpy as np
 
-    comps = _pca_loadings(spark, sf_dir)
+    # ONE covariance evaluation feeds the loadings and the trace
+    cov_rows = emb_covariance(spark, sf_dir).collect()  # O(d²)
+    comps = _pca_loadings(cov_rows)
+    trace = sum(r["cov"] for r in sorted(cov_rows) if r["i"] == r["j"])
     W = np.array(comps)
     G = W @ W.T
     diag_dev = [
@@ -2211,7 +2214,7 @@ def emb_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from mongo_to_clickhouse_spark.operators.materialize import barrier
 
-    frame = pca_project_frame(spark, sf_dir)
+    frame = pca_project_frame(spark, sf_dir, comps)
     pvar = (
         frame.select(F.posexplode("pca").alias("component", "p"))
         .groupBy("component")
@@ -2233,9 +2236,6 @@ def emb_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pass — materialize the tiny aggregate once
     pvar = barrier(pvar)
     ray = emb_pca_power_iteration(spark, sf_dir).select("rayleigh").limit(1)
-    trace = emb_covariance(spark, sf_dir).filter(
-        F.col("i") == F.col("j")
-    ).agg(F.sum("cov").alias("trace"))
     scalars = (
         pvar.agg(
             F.max(F.when(F.col("component") == 0, F.col("var"))).alias(
@@ -2245,12 +2245,11 @@ def emb_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("n").alias("n"),
         )
         .crossJoin(F.broadcast(ray))
-        .crossJoin(F.broadcast(trace))
         .select(
             (F.col("var1") * F.lit(1000.0) * F.col("n") * F.col("n")
              >= F.col("rayleigh") * F.lit(1.0 - _PCA_RAY_SLACK)
              ).alias("top_var_geq_rayleigh"),
-            (F.col("var_sum") <= F.col("trace") + F.lit(1e-6)).alias(
+            (F.col("var_sum") <= F.lit(trace + 1e-6)).alias(
                 "explained_leq_trace"
             ),
         )

@@ -4,7 +4,7 @@ scale note extracted from the implementation docstring.
 
 This is the per-id detail ledger; SURVEY.md §2.10-2.15 keep the bare
 id-by-area coverage tables and point here. Run after adding/moving ids
-(and after `scripts/plan_audit.py`, which refreshes the budgets):
+(and after `scripts/profiler.py plans`, which refreshes the budgets):
 
     PYTHONPATH=. python scripts/gen_registry_md.py
 """
@@ -105,8 +105,8 @@ def main() -> None:
         f"Generated by `scripts/gen_registry_md.py`: **{len(reg)} ids, "
         f"{n_oracle} oracle-checked, {len(reg) - n_oracle} rows-only**.",
         "Budget = post-barrier physical plan counters from `PLANS.md` "
-        "(`scripts/plan_audit.py`); streaming-runtime ids execute a "
-        "pipeline on invocation and are pinned by the pytest suites "
+        "(`scripts/profiler.py plans`); ids that run on call "
+        "(`queries.RUNS_ON_CALL`) are pinned by the pytest suites "
         "instead (—). Semantics and scale notes are the first sentence "
         "of the implementation docstring — the full argument lives at "
         "the cited line.",

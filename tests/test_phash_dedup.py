@@ -60,3 +60,26 @@ def test_popcount64_counts_every_bit():
     want = [bin(int(v) & (2**64 - 1)).count("1") for v in vals]
     assert got.ravel().tolist() == want
     assert got[grid > 2**16].min() >= 1
+
+
+def test_probe_flips_bits_past_31(spark):
+    # every probe bit is a BIGINT: an INT shiftleft(1, k) wraps at k ≥ 31
+    from mongo_to_clickhouse_spark.queries.pipelineops import _probe_expr
+
+    probes = {
+        r["probe"]
+        for r in spark.range(1).selectExpr("CAST(0 AS BIGINT) AS sig")
+        .selectExpr(_probe_expr(40)).collect()
+    }
+    assert {0, 1 << 31, 1 << 39} <= probes
+    assert len(probes) == 41
+
+
+def test_phash_max_bits_past_63_rejected():
+    import pytest
+
+    from mongo_to_clickhouse_spark.config import EngineTuning
+
+    with pytest.raises(ValueError, match="phash_max_bits"):
+        EngineTuning(phash_max_bits=64)
+    assert EngineTuning(phash_max_bits=63).phash_max_bits == 63

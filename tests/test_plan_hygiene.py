@@ -19,22 +19,6 @@ from mongo_to_clickhouse_spark import queries as registry
 
 SRC = "/root/testdata/sf0.001"
 
-# streaming-runtime ids actually RUN a stream when invoked (minutes of
-# wall-clock, no batch plan to inspect); the three window-agg forms are
-# batch-checkable and stay in scope
-_SKIP_PREFIXES = (
-    "stream_",
-    "source_changestream",
-    "checkpoint_resume_token",
-    "sink_dlq_log",
-    "metric_throughput",
-)
-_KEEP = {
-    "stream_tumbling_window_agg",
-    "stream_sliding_window_agg",
-    "stream_session_window",
-}
-
 _WINDOWSPEC = re.compile(r"windowspecdefinition\(([^)]*)\)")
 
 # ids whose no-partition window runs over a PROVABLY BOUNDED relation —
@@ -130,11 +114,7 @@ def _no_partition_windows(plan: str) -> list[str]:
 
 
 def _batch_ids():
-    return sorted(
-        qid
-        for qid in registry.registry()
-        if qid in _KEEP or not qid.startswith(_SKIP_PREFIXES)
-    )
+    return sorted(set(registry.registry()) - registry.RUNS_ON_CALL)
 
 
 @pytest.mark.parametrize(
