@@ -99,9 +99,3 @@ def objectid_hex(id_col: Column) -> Column:
     (/root/reference/src/main.rs:367). Fixture ids are int64, so render as
     zero-padded lowercase hex."""
     return F.format_string("%024x", id_col)
-
-
-def json_serialize(*cols: Column) -> Column:
-    """BSON document → JSON string (/root/reference/src/main.rs:382) —
-    Spark-side: ``to_json(struct(...))``."""
-    return F.to_json(F.struct(*cols))

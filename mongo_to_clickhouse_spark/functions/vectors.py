@@ -37,8 +37,6 @@ from pyspark.sql import functions as F
 DEFAULT_DIM = 64  # the embeddings-table dimension the similarity tier uses
 _UNROLL_MAX = 16  # beyond this the unrolled chain falls off the JIT cliff
 
-VecOperand = "Column | str | list | tuple"
-
 
 def _as_sql(x) -> str | None:
     """SQL text for an operand when statically renderable: a column

@@ -3,6 +3,6 @@ from mongo_to_clickhouse_spark.plans.pipeline import (  # noqa: F401
     cdc_transform,
     optout_active,
     optout_dim,
-    route_split,
+    route,
     statements_from_events,
 )

@@ -27,6 +27,7 @@ from mongo_to_clickhouse_spark.config import TenantConfig
 from mongo_to_clickhouse_spark.io import load_table
 from mongo_to_clickhouse_spark.plans.pipeline import (
     anonymized_statements,
+    cdc_transform,
     optout_active,
     optout_dim,
     statements_from_events,
@@ -119,10 +120,6 @@ def backfill_output(
     spark: SparkSession, sf_dir: str, start: str, end: str
 ) -> DataFrame:
     """The backfill's main-table relation (query-entry form, no side
-    effects): range-filtered transform → anti-join routing."""
+    effects): the live transform over the range-filtered events."""
     events = load_table(spark, sf_dir, "events", ts_range=(start, end))
-    customer = load_table(spark, sf_dir, "customer")
-    anon = anonymized_statements(statements_from_events(events, customer))
-    active = optout_active(optout_dim(customer))
-    dim = active.select(F.col("hashed_moodle_id").alias("hashed_value"))
-    return anon.join(F.broadcast(dim), "hashed_value", "left_anti")
+    return cdc_transform(events, load_table(spark, sf_dir, "customer"))

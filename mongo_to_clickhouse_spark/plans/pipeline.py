@@ -11,8 +11,8 @@ Reference lifecycle (/root/reference/src/main.rs:353-443, SURVEY §3.1):
 
 Spark shape: every step is a Catalyst-visible transformation — the scan is
 a pushed-down parquet read, the skip rules are filters, the anonymize chain
-is codegen'd built-ins, and the opt-out routing is a broadcast left-anti /
-left-semi hash join against a deduplicated dimension. The whole reference
+is codegen'd built-ins, and the opt-out routing is one broadcast existence
+join against the latest-version dimension (``route``). The whole reference
 dataflow is shuffle-free except the dimension dedup (hash partition by
 email), exactly as SURVEY §3.3 prescribes.
 
@@ -169,17 +169,16 @@ def anonymized_statements(
     )
 
 
-def route_split(anonymized: DataFrame, active_dim: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Dual-table routing (/root/reference/src/main.rs:874-913): rows whose
-    hash is in the opt-out set → opt-out table (left-semi); the rest → main
-    (left-anti). Both joins broadcast the dim — the Spark analogue of the
-    reference sharing its ``HashSet`` behind an ``Arc<RwLock>``."""
-    dim = F.broadcast(
-        active_dim.select(F.col("hashed_moodle_id").alias("hashed_value"))
-    )
-    main = anonymized.join(dim, "hashed_value", "left_anti")
-    optout = anonymized.join(dim, "hashed_value", "left_semi")
-    return main, optout
+def route(anonymized: DataFrame, active_dim: DataFrame) -> DataFrame:
+    """Dual-table routing (reference ``src/main.rs:874-913``), the only
+    place membership is decided: the rows plus a boolean ``opt_out``
+    column from one broadcast existence join against the dim (the
+    reference's shared ``HashSet``) — no dedup shuffle, and a hash that
+    several dim rows share cannot duplicate a row. Filtering on the flag
+    and dropping it plans as a broadcast left-anti / left-semi join."""
+    dim = F.broadcast(active_dim.select(F.col("hashed_moodle_id").alias("__h")))
+    hit = dim.where(F.col("__h") == F.col("hashed_value").outer()).exists()
+    return anonymized.withColumn("opt_out", hit)
 
 
 def cdc_transform(events: DataFrame, customer: DataFrame) -> DataFrame:
@@ -189,5 +188,4 @@ def cdc_transform(events: DataFrame, customer: DataFrame) -> DataFrame:
     statements = statements_from_events(events, customer)
     anonymized = anonymized_statements(statements)
     active = optout_active(optout_dim(customer))
-    main, _ = route_split(anonymized, active)
-    return main
+    return route(anonymized, active).filter(~F.col("opt_out")).drop("opt_out")

@@ -34,7 +34,7 @@ from mongo_to_clickhouse_spark.plans.pipeline import (
     cdc_transform,
     optout_active,
     optout_dim,
-    route_split,
+    route,
     statements_from_events,
 )
 
@@ -91,6 +91,14 @@ ANON_SQL = f"""
 
 def _dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     return optout_dim(load_table(spark, sf_dir, "customer"))
+
+
+def _routed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The anonymized statements with ``route``'s ``opt_out`` flag."""
+    customer = load_table(spark, sf_dir, "customer")
+    events = load_table(spark, sf_dir, "events")
+    anon = anonymized_statements(statements_from_events(events, customer))
+    return route(anon, optout_active(optout_dim(customer)))
 
 
 # ---------------------------------------------------------------------------
@@ -210,34 +218,15 @@ SINK_CLICKHOUSE_INSERT_SQL = f"""
 
 def sink_dual_table_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dual-table fanout (/root/reference/src/main.rs:874-913) as one
-    relation with a ``route`` column (main | opt_out).
-
-    Computed in ONE pass: a left join against the distinct opt-out hash
-    set decides the route per row (null → main), instead of the semi+anti
-    two-branch union that evaluates the full anonymization transform
-    twice. Identical rows (hashes are distinct in the dim, so the left
-    join never duplicates), half the work — and at 100 TB the routed
-    relation feeds a single write partitioned by ``route``, which is the
-    fanout the reference's two INSERTs express. The streaming sink path
-    (sinks/, route_split) still materializes the two physical tables."""
-    events = load_table(spark, sf_dir, "events")
-    customer = load_table(spark, sf_dir, "customer")
-    anon = anonymized_statements(statements_from_events(events, customer))
-    dim = (
-        optout_active(optout_dim(customer))
-        .select("hashed_moodle_id")
-        .distinct()
-    )
-    joined = anon.join(
-        F.broadcast(dim),
-        anon.hashed_value == dim.hashed_moodle_id,
-        "left",
-    )
-    return joined.select(
-        *[F.col(c) for c in anon.columns],
-        F.when(F.col("hashed_moodle_id").isNull(), F.lit("main"))
-        .otherwise(F.lit("opt_out"))
-        .alias("route"),
+    relation with a ``route`` column (main | opt_out) from ``route``'s
+    flag: one pass over the anonymization transform, and at 100 TB one
+    write partitioned by ``route`` — the fanout the reference's two
+    INSERTs express."""
+    return (
+        _routed(spark, sf_dir)
+        .withColumn("route",
+                    F.when(F.col("opt_out"), "opt_out").otherwise("main"))
+        .drop("opt_out")
     )
 
 
@@ -365,18 +354,10 @@ FILTER_TIMESTAMP_RANGE_SQL = f"""
 
 def predicate_optout_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-row opt-out membership flag (/root/reference/src/main.rs:852):
-    broadcast left join → boolean, instead of a driver-side HashSet."""
-    anon = anonymized_statements(
-        statements_from_events(
-            load_table(spark, sf_dir, "events"),
-            load_table(spark, sf_dir, "customer"),
-        )
-    )
-    dim = optout_active(_dim(spark, sf_dir)).select(
-        F.col("hashed_moodle_id").alias("hashed_value"), F.lit(True).alias("__hit")
-    )
-    return anon.join(F.broadcast(dim), "hashed_value", "left").select(
-        "id", F.coalesce(F.col("__hit"), F.lit(False)).alias("is_opt_out")
+    ``route``'s broadcast existence join, instead of a driver-side
+    HashSet."""
+    return _routed(spark, sf_dir).select(
+        "id", F.col("opt_out").alias("is_opt_out")
     )
 
 
@@ -395,11 +376,7 @@ PREDICATE_OPTOUT_MEMBERSHIP_SQL = f"""
 def routing_optout_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rows whose hash IS in the opt-out set → broadcast left-semi join
     (/root/reference/src/main.rs:876-882)."""
-    events = load_table(spark, sf_dir, "events")
-    customer = load_table(spark, sf_dir, "customer")
-    anon = anonymized_statements(statements_from_events(events, customer))
-    _, optout = route_split(anon, optout_active(optout_dim(customer)))
-    return optout
+    return _routed(spark, sf_dir).filter(F.col("opt_out")).drop("opt_out")
 
 
 ROUTING_OPTOUT_SEMI_JOIN_SQL = f"""

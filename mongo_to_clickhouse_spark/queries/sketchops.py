@@ -158,7 +158,6 @@ AGG_COUNT_MIN_SKETCH_SQL = _cms_sql("duck")
 
 # --- explicit HyperLogLog ---------------------------------------------------
 HLL_M = TUNING.hll_registers        # 2^p registers (p = 6 at the default 64)
-_HLL_KEY_BITS = 60                  # md5-15-hex key (house hash)
 _HLL_W_BITS = 54                    # key bits left after the bucket index
 _HLL_MAXM = 62                      # 2^(MAXM - M) keeps every term integral
 

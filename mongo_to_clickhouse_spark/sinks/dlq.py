@@ -55,57 +55,48 @@ def retry_failed_batches(
     Batches that fail again simply stay queued (the reference's 60 s retry
     loop picks them up next cycle).
 
-    Scale shape: the whole drained set goes through ONE routed write per
-    sink, partitioned by batch_id — O(1) Spark jobs for N queued batches
-    (a mass outage replay would otherwise serialize N× through the
-    driver). Dynamic partition overwrite lands each batch in the same
-    ``batch_id=N`` directory the live ``foreachBatch`` write uses, so
-    replay keeps the per-batch idempotent-overwrite contract."""
-    from mongo_to_clickhouse_spark.plans.pipeline import route_split
+    Scale shape: the whole drained set is routed once and goes through
+    ONE write per sink, partitioned by batch_id — O(1) Spark jobs for N
+    queued batches (a mass outage replay would otherwise serialize N×
+    through the driver). The write is the live path's own
+    ``writers.write_sinks``, so each batch lands in the same
+    ``batch_id=N`` directory with the same idempotent overwrite."""
+    from mongo_to_clickhouse_spark.sinks.writers import job_description, write_sinks
 
-    if not os.path.isdir(tenant.dlq_path):
-        return 0
-    # a fully drained DLQ leaves empty tenant=<name> shells behind;
-    # reading them would raise UNABLE_TO_INFER_SCHEMA
+    # no DLQ yet, or a fully drained one: its empty tenant=<name> shells
+    # would raise UNABLE_TO_INFER_SCHEMA on read
     if not glob.glob(
         os.path.join(tenant.dlq_path, "**", "*.parquet"), recursive=True
     ):
         return 0
-    dlq = spark.read.parquet(tenant.dlq_path).filter(
-        F.col("tenant") == tenant.name
-    )
-    batch_ids = sorted(
-        int(r[0]) for r in dlq.select("batch_id").distinct().collect()
-    )
-    # the injector hook keeps the reference's per-batch failure
-    # granularity: a batch the (still down) sink rejects stays queued
-    ok_ids = []
-    for bid in batch_ids:
+    with job_description(spark, f"{tenant.name} dlq replay"):
+        dlq = spark.read.parquet(tenant.dlq_path).filter(
+            F.col("tenant") == tenant.name
+        )
+        batch_ids = sorted(
+            int(r[0]) for r in dlq.select("batch_id").distinct().collect()
+        )
+        # the injector hook keeps the reference's per-batch failure
+        # granularity: a batch the (still down) sink rejects stays queued
+        ok_ids = []
+        for bid in batch_ids:
+            try:
+                if fail_injector is not None:
+                    fail_injector(dlq.filter(F.col("batch_id") == bid), bid)
+                ok_ids.append(bid)
+            except Exception:  # noqa: BLE001 — still failing: keep queued
+                log.error("tenant %s batch %d: DLQ replay failed, batch stays "
+                          "queued", tenant.name, bid, exc_info=True)
+                continue
+        if not ok_ids:
+            return 0
+        rows = dlq.filter(F.col("batch_id").isin(ok_ids)).drop("tenant")
         try:
-            if fail_injector is not None:
-                fail_injector(dlq.filter(F.col("batch_id") == bid), bid)
-            ok_ids.append(bid)
-        except Exception:  # noqa: BLE001 — still failing: keep queued
-            log.error("tenant %s batch %d: DLQ replay failed, batch stays "
-                      "queued", tenant.name, bid, exc_info=True)
-            continue
-    if not ok_ids:
-        return 0
-    rows = dlq.filter(F.col("batch_id").isin(ok_ids)).drop("tenant")
-    main, optout = route_split(rows, active_dim)
-    try:
-        for df, base in ((main, tenant.sink_main_path), (optout, tenant.sink_optout_path)):
-            (
-                df.withColumn("created_at", F.current_timestamp())
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(base)
-            )
-    except Exception:  # noqa: BLE001 — sink down mid-replay: keep all queued
-        log.error("tenant %s batches %s: DLQ replay sink write failed, all "
-                  "stay queued", tenant.name, ok_ids, exc_info=True)
-        return 0
+            write_sinks(rows, active_dim, tenant, None)
+        except Exception:  # noqa: BLE001 — sink down mid-replay: keep all queued
+            log.error("tenant %s batches %s: DLQ replay sink write failed, "
+                      "all stay queued", tenant.name, ok_ids, exc_info=True)
+            return 0
     for bid in ok_ids:
         _drop_partition(tenant, bid)
     return len(ok_ids)

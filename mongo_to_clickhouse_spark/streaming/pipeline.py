@@ -12,12 +12,15 @@ Reference architecture being re-expressed (SURVEY §3.1):
   disappears
 - adaptive AIMD batch sizing (src/main.rs:192-233) → AQE + backpressure;
   no user code
-- dual-table routing + DLQ → ``foreachBatch`` (sinks/writers.py)
+- dual-table routing + DLQ → ``foreachBatch`` (sinks/writers.py): each
+  micro-batch is routed once (``plans.pipeline.route``) against one
+  evaluation of the opt-out dim, persisted, and both tables are written
+  from that snapshot, so the source is read once per batch
 - per-tenant task fanout + 60 s restart loop (src/main.rs:240-262)
   → one streaming query per tenant from a shared SparkSession; restart =
   ``start()`` from the same checkpoint
 - opt-out cache + TCP ``invalidate`` (src/main.rs:756-822, 1019-1056)
-  → the dim is re-read per micro-batch inside foreachBatch (cheap,
+  → the dim is re-read once per micro-batch inside foreachBatch (cheap,
   broadcast) — push invalidation is unnecessary by construction.
 
 In production the source would be the Mongo Spark connector's change-stream

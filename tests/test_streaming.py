@@ -73,13 +73,34 @@ def _expected_counts(spark):
     return total, total - optout_n, optout_n
 
 
+def _job_descriptions(spark, first_job: int) -> list:
+    """Descriptions of the jobs since ``first_job``, read from the status
+    store (the store is fed asynchronously, so drain the bus first)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    store = sc.statusStore()
+    descs = []
+    for jid in range(first_job, sc.dagScheduler().numTotalJobs()):
+        d = store.job(jid).description()
+        descs.append(None if d.isEmpty() else d.get())
+    return descs
+
+
 def test_stream_drain_and_route(spark, tmp_path):
     t = _tenant(tmp_path)
-    _stage_events(t.source_path)
+    staged = _stage_events(t.source_path)
     customer = load_table(spark, SRC, "customer")
 
+    first_job = spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
     q = run_tenant_stream(spark, t, customer, available_now=True)
     q.awaitTermination(120)
+
+    # the batch is routed once and both sinks write from that snapshot:
+    # the source is read once per row, not once per sink
+    staged_rows = sum(pq.ParquetFile(p).metadata.num_rows for p in staged)
+    assert sum(p["numInputRows"] for p in q.recentProgress) == staged_rows
+    # the sink jobs carry the tenant and batch id
+    assert f"{t.name} batch 0" in _job_descriptions(spark, first_job)
 
     total, main_n, optout_n = _expected_counts(spark)
     main = spark.read.parquet(t.sink_main_path)
@@ -198,6 +219,65 @@ def test_dlq_requeue_after_checkpoint_loss_is_idempotent(spark, tmp_path):
     active = optout_active(optout_dim(customer))
     assert retry_failed_batches(spark, t, active) >= 1
     assert spark.read.parquet(t.sink_main_path).count() == main_n
+
+
+def _flipping_dim(customer):
+    """An opt-out dim whose membership changes on every evaluation: each
+    evaluation keeps a fresh random half of the active rows."""
+    import random
+
+    coin = F.udf(lambda h: random.random() < 0.5, "boolean").asNondeterministic()
+    return optout_active(optout_dim(customer)).filter(coin("hashed_moodle_id"))
+
+
+def test_one_optout_snapshot_per_batch(spark, tmp_path):
+    """Both sinks are written from ONE evaluation of the opt-out dim: with
+    a dim that changes on every evaluation, each row still lands in
+    exactly one of main / opt-out (two evaluations put some rows in both
+    tables and some in neither). A failing sink puts the whole batch in
+    the DLQ exactly once."""
+    from mongo_to_clickhouse_spark.sinks.writers import (
+        dual_write_batch,
+        insert_batch,
+    )
+
+    customer = load_table(spark, SRC, "customer")
+    anon = anonymized_statements(
+        statements_from_events(load_table(spark, SRC, "events"), customer)
+    )
+    ids = [r.id for r in anon.select("id").collect()]
+    dim = _flipping_dim(customer)
+
+    t = _tenant(tmp_path, name="snap")
+    assert insert_batch(anon, 0, t, dim, max_retries=1) == 1
+    main = [r.id for r in spark.read.parquet(t.sink_main_path).collect()]
+    optout = [r.id for r in spark.read.parquet(t.sink_optout_path).collect()]
+    assert sorted(main + optout) == sorted(ids)
+    assert optout  # the flipping dim still routed some rows
+
+    def sink_down(df, batch_id):
+        raise RuntimeError("sink down")
+
+    t = _tenant(tmp_path, name="snapdlq")
+    dual_write_batch(anon, 3, t, dim, fail_injector=sink_down)
+    dlq = spark.read.parquet(t.dlq_path)
+    assert sorted(r.id for r in dlq.collect()) == sorted(ids)
+    assert [r.batch_id for r in dlq.select("batch_id").distinct().collect()] == [3]
+
+
+def test_route_keeps_one_row_per_input_row(spark):
+    """Two dim rows sharing a hash must not duplicate a routed row."""
+    from mongo_to_clickhouse_spark.plans.pipeline import route
+
+    customer = load_table(spark, SRC, "customer")
+    anon = anonymized_statements(
+        statements_from_events(load_table(spark, SRC, "events"), customer)
+    )
+    active = optout_active(optout_dim(customer))
+    once = route(anon, active).groupBy("opt_out").count().collect()
+    twice = route(anon, active.union(active)).groupBy("opt_out").count().collect()
+    assert sorted(once) == sorted(twice)
+    assert sum(r["count"] for r in twice) == anon.count()
 
 
 def test_insert_retry_backoff_policy(spark, tmp_path):
