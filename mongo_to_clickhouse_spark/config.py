@@ -26,10 +26,11 @@ class TenantConfig:
     # Directory holding the dimension fixtures (customer.parquet etc.);
     # defaults to source_path when that is itself a fixture directory.
     fixtures_path: str | None = None
+    # salts the live and backfill hashes and the opt-out dim alike
     encryption_salt: str = "fixture-salt"
-    batch_size: int = 10_000         # reference MAX_BATCH_SIZE, src/main.rs:39
     flush_seconds: int = 5           # reference flush timeout, src/main.rs:407
-    max_retries: int = 5             # reference MAX_RETRIES, src/main.rs:40
+    # the sink retry policy; sinks.writers.insert_batch reads only these
+    max_retries: int = 5             # reference retry count, src/main.rs:40
     initial_retry_delay_sec: float = 1.0  # src/main.rs:41 (ms → sec)
 
 

@@ -79,39 +79,21 @@ def run_backfill(
     # LEFT join so the counters see every scanned event: an event whose
     # user_id has no customer match must land in failed_docs (the
     # reference counts per document, historical_data/src/main.rs:501-513);
-    # the anonymize step's validation filter then drops it.
+    # the anonymize step's validation filter then drops it. Counting the
+    # rows before and after that filter gives failed = scanned - processed.
     stmts = statements_from_events(events, customer, how="left")
-    obs = Observation("backfill")
-    observed = stmts.observe(
-        obs,
-        F.count(F.lit(1)).alias("scanned"),
-        F.sum(
-            (
-                F.col("event_id").isNull()
-                | F.col("ts").isNull()
-                | F.col("props").isNull()
-                | F.col("actor_name").isNull()
-                | (F.length(F.split(F.col("actor_name"), "@").getItem(0)) == 0)
-            ).cast("long")
-        ).alias("skipped"),
-    )
-    anon = anonymized_statements(observed)
-    active = optout_active(optout_dim(customer))
-    insert_batch(
-        anon,
-        0,
-        tenant,
-        active,
-        max_retries=tenant.max_retries,
-        initial_delay_sec=tenant.initial_retry_delay_sec,
-    )
+    scanned, processed = Observation(), Observation()
+    anon = anonymized_statements(
+        stmts.observe(scanned, F.count(F.lit(1)).alias("n")),
+        tenant.encryption_salt,
+    ).observe(processed, F.count(F.lit(1)).alias("n"))
+    active = optout_active(optout_dim(customer, tenant.encryption_salt))
+    insert_batch(anon, 0, tenant, active)
 
-    metrics = obs.get
-    scanned = metrics["scanned"] or 0
-    skipped = metrics["skipped"] or 0
+    n_processed = processed.get["n"]
     return BackfillStats(
-        processed_docs=int(scanned - skipped),
-        failed_docs=int(skipped),
+        processed_docs=n_processed,
+        failed_docs=scanned.get["n"] - n_processed,
         duration_sec=round(time.time() - t0, 3),
     )
 

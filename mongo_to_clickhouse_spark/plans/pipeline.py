@@ -29,7 +29,7 @@ collection (`event_id`↔`_id`, `ts`↔`timestamp`, `props`↔`statement`) and
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -49,11 +49,12 @@ OPTOUT_MODULUS = 5
 VERSION_MODULUS = 3
 
 
-def optout_dim(customer: DataFrame) -> DataFrame:
+def optout_dim(customer: DataFrame, salt: str = FIXTURE_SALT) -> DataFrame:
     """Derive the ``default.moodle_ids(email, hashed_moodle_id, version)``
     dimension (/root/reference/src/main.rs:774) deterministically from
     ``customer``: every ``OPTOUT_MODULUS``-th customer, with 1-3 versioned
-    rows per email so latest-version dedup is exercised."""
+    rows per email so latest-version dedup is exercised. ``salt`` must be
+    the one the routed rows were anonymized with."""
     versions = customer.sparkSession.range(1, VERSION_MODULUS + 1).select(
         F.col("id").cast("int").alias("version")
     )
@@ -64,7 +65,7 @@ def optout_dim(customer: DataFrame) -> DataFrame:
         .filter(F.col("version") <= (F.col("c_custkey") % VERSION_MODULUS) + 1)
         .select(
             email.alias("email"),
-            sha256_anonymize(email).alias("hashed_moodle_id"),
+            sha256_anonymize(email, salt).alias("hashed_moodle_id"),
             F.col("version"),
         )
     )
@@ -126,6 +127,19 @@ def statements_from_events(
     return _fanout_undersplit(events).join(F.broadcast(actor), "user_id", how)
 
 
+def has_required_fields() -> Column:
+    """The reference's skip rules (src/main.rs:377-397, 633-634): the
+    required fields are present and the actor's localpart is non-empty.
+    The one validity predicate of the live, backfill and query paths."""
+    return (
+        F.col("event_id").isNotNull()
+        & F.col("ts").isNotNull()
+        & F.col("props").isNotNull()
+        & F.col("actor_name").isNotNull()
+        & (F.length(email_localpart(F.col("actor_name"))) > 0)
+    )
+
+
 def anonymized_statements(
     statements: DataFrame,
     salt: str = FIXTURE_SALT,
@@ -139,13 +153,7 @@ def anonymized_statements(
     - hash written back into the statement (src/main.rs:643) → the output
       ``statement`` JSON embeds ``hashed_value``, not the original name.
     """
-    valid = statements.filter(
-        F.col("event_id").isNotNull()
-        & F.col("ts").isNotNull()
-        & F.col("props").isNotNull()
-        & F.col("actor_name").isNotNull()
-        & (F.length(email_localpart(F.col("actor_name"))) > 0)
-    )
+    valid = statements.filter(has_required_fields())
     hashed = valid.withColumn(
         "hashed_value", sha256_anonymize(F.col("actor_name"), salt, tenant)
     )

@@ -32,6 +32,7 @@ from mongo_to_clickhouse_spark.functions.scalars import (
 from mongo_to_clickhouse_spark.plans.pipeline import (
     anonymized_statements,
     cdc_transform,
+    has_required_fields,
     optout_active,
     optout_dim,
     route,
@@ -313,13 +314,8 @@ def filter_required_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     stmts = statements_from_events(
         load_table(spark, sf_dir, "events"), load_table(spark, sf_dir, "customer")
     )
-    return stmts.filter(
-        F.col("event_id").isNotNull()
-        & F.col("ts").isNotNull()
-        & F.col("props").isNotNull()
-        & F.col("actor_name").isNotNull()
-        & (F.length(email_localpart(F.col("actor_name"))) > 0)
-    ).select("event_id", "user_id", "actor_name")
+    return stmts.filter(has_required_fields()).select(
+        "event_id", "user_id", "actor_name")
 
 
 FILTER_REQUIRED_FIELDS_SQL = f"""

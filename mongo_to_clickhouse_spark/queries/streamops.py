@@ -20,7 +20,15 @@ from pyspark.sql import functions as F
 
 from mongo_to_clickhouse_spark.config import TUNING
 from mongo_to_clickhouse_spark.io import load_table
-from mongo_to_clickhouse_spark.streaming.util import await_drained
+from mongo_to_clickhouse_spark.queries.streamruntime import (
+    drain_staged,
+    sink_down,
+    stream_pipeline_cdc,
+)
+from mongo_to_clickhouse_spark.streaming.util import (
+    await_drained,
+    stage_events_source,
+)
 
 _DEC = "decimal(18,2)"
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
@@ -212,13 +220,6 @@ STREAM_SESSION_DYNAMIC_SQL = f"""
 # rows-only: true streaming runtime (availableNow) — no SQL equivalent
 # ---------------------------------------------------------------------------
 
-def _stage_stream_source(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Stage the events parquet as a streaming source dir + fresh workdir."""
-    from mongo_to_clickhouse_spark.streaming.util import stage_events_source
-
-    return stage_events_source(sf_dir, parts=1, prefix="stream")
-
-
 def _stage_sorted_stream_source(sf_dir: str) -> tuple[str, str]:
     """Stage the events fixture SORTED by (ts, event_id) into a single
     file, so arrival order into a first-wins stateful operator is the
@@ -241,34 +242,13 @@ def _stage_sorted_stream_source(sf_dir: str) -> tuple[str, str]:
     return src, work
 
 
-def stream_pipeline_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full streaming CDC pipeline end-to-end: readStream → anonymize →
-    foreachBatch dual-write → read the main sink back."""
-    from mongo_to_clickhouse_spark.config import TenantConfig
-    from mongo_to_clickhouse_spark.streaming.pipeline import run_tenant_stream
-
-    src, work = _stage_stream_source(spark, sf_dir)
-    tenant = TenantConfig(
-        name="q",
-        source_path=src,
-        sink_main_path=os.path.join(work, "main"),
-        sink_optout_path=os.path.join(work, "optout"),
-        checkpoint_path=os.path.join(work, "ckpt"),
-        dlq_path=os.path.join(work, "dlq"),
-    )
-    customer = load_table(spark, sf_dir, "customer")
-    q = run_tenant_stream(spark, tenant, customer, available_now=True)
-    await_drained(q)
-    return spark.read.parquet(tenant.sink_main_path).drop("created_at", "batch_id")
-
-
 def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming tumbling-window count with a 10-minute watermark — the
     late-data-drop configuration (append mode only emits finalized
     windows)."""
     from mongo_to_clickhouse_spark.streaming.pipeline import EVENTS_SCHEMA
 
-    src, _ = _stage_stream_source(spark, sf_dir)
+    src, _ = stage_events_source(sf_dir)
     name = f"wm_{uuid.uuid4().hex[:8]}"
     stream = (
         spark.readStream.schema(EVENTS_SCHEMA)
@@ -424,7 +404,7 @@ def stream_stateful_running_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo_to_clickhouse_spark.streaming.pipeline import EVENTS_SCHEMA
     from mongo_to_clickhouse_spark.streaming.stateful import running_user_totals
 
-    src, _ = _stage_stream_source(spark, sf_dir)
+    src, _ = stage_events_source(sf_dir)
     name = f"st_{uuid.uuid4().hex[:8]}"
     stream = (
         spark.readStream.schema(EVENTS_SCHEMA)
@@ -446,31 +426,11 @@ def stream_dlq_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DLQ end-to-end: run the pipeline against a failing sink (every batch
     lands in the dead-letter queue), then replay with the sink recovered —
     returns the drained main-table rows (src/main.rs:918-1017 semantics)."""
-    from mongo_to_clickhouse_spark.config import TenantConfig
     from mongo_to_clickhouse_spark.plans.pipeline import optout_active, optout_dim
     from mongo_to_clickhouse_spark.sinks.dlq import retry_failed_batches
-    from mongo_to_clickhouse_spark.streaming.pipeline import run_tenant_stream
 
-    src, work = _stage_stream_source(spark, sf_dir)
-    tenant = TenantConfig(
-        name="dlq",
-        source_path=src,
-        sink_main_path=os.path.join(work, "main"),
-        sink_optout_path=os.path.join(work, "optout"),
-        checkpoint_path=os.path.join(work, "ckpt"),
-        dlq_path=os.path.join(work, "dlq"),
-        max_retries=1,  # go straight to the DLQ; replay is the point here
-    )
-    customer = load_table(spark, sf_dir, "customer")
-
-    def sink_down(df, batch_id):
-        raise RuntimeError("sink down")
-
-    q = run_tenant_stream(
-        spark, tenant, customer, available_now=True, fail_injector=sink_down
-    )
-    await_drained(q)
-    active = optout_active(optout_dim(customer))
+    tenant, _ = drain_staged(spark, sf_dir, "dlq", fail_injector=sink_down)
+    active = optout_active(optout_dim(load_table(spark, sf_dir, "customer")))
     retry_failed_batches(spark, tenant, active)  # sink recovered
     return spark.read.parquet(tenant.sink_main_path).drop("created_at", "batch_id")
 

@@ -13,13 +13,15 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from dataclasses import replace
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from mongo_to_clickhouse_spark.config import TenantConfig
-from mongo_to_clickhouse_spark.io import load_table, table_path
+from mongo_to_clickhouse_spark.io import load_table
 from mongo_to_clickhouse_spark.plans.pipeline import optout_active, optout_dim
 from mongo_to_clickhouse_spark.streaming.pipeline import run_tenant_stream
 from mongo_to_clickhouse_spark.streaming.util import (
@@ -48,9 +50,21 @@ def _tenant(work: str, name: str, source: str) -> TenantConfig:
     )
 
 
-def _drain(spark: SparkSession, tenant: TenantConfig, customer) -> None:
-    q = run_tenant_stream(spark, tenant, customer, available_now=True)
+def drain_staged(spark: SparkSession, sf_dir: str, name: str, parts: int = 1,
+                 **stream_kw) -> tuple[TenantConfig, StreamingQuery]:
+    """Stage the events fixture as ``parts`` files, build the tenant
+    ``name`` over them and drain its ``run_tenant_stream`` (availableNow,
+    ``stream_kw`` passed on). Returns the tenant and the drained query."""
+    src, work = stage_events_source(sf_dir, parts=parts, prefix=name)
+    tenant = _tenant(work, name, src)
+    q = run_tenant_stream(spark, tenant, load_table(spark, sf_dir, "customer"),
+                          available_now=True, **stream_kw)
     await_drained(q)
+    return tenant, q
+
+
+def sink_down(df: DataFrame, batch_id: int) -> None:
+    raise RuntimeError("sink down")
 
 
 def _batch_counts(spark: SparkSession, path: str) -> DataFrame:
@@ -62,13 +76,12 @@ def _batch_counts(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def source_changestream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Change-stream tail (readStream micro-batch source standing in for
-    collection.watch, src/main.rs:313-360): drain the stream, return the
-    replicated rows."""
-    src, work = stage_events_source(sf_dir, prefix="cs")
-    tenant = _tenant(work, "cs", src)
-    _drain(spark, tenant, load_table(spark, sf_dir, "customer"))
+def stream_pipeline_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The full streaming CDC pipeline end-to-end, and the change-stream
+    tail (readStream micro-batch source standing in for collection.watch,
+    src/main.rs:313-360): readStream → anonymize → foreachBatch dual-write,
+    then read the main sink back."""
+    tenant, _ = drain_staged(spark, sf_dir, "cs")
     return spark.read.parquet(tenant.sink_main_path).drop("created_at", "batch_id")
 
 
@@ -77,20 +90,16 @@ def checkpoint_resume_token(spark: SparkSession, sf_dir: str) -> DataFrame:
     restart from the SAME checkpoint with file 2 present — only new data
     processed, nothing duplicated. Returns per-batch row counts (2 batches,
     disjoint, summing to the full join cardinality)."""
-    import tempfile, uuid
-
-    work = tempfile.mkdtemp(prefix=f"ck-{uuid.uuid4().hex[:8]}-")
-    src = os.path.join(work, "source")
-    os.makedirs(src)
-    # stage only the first half; the second half arrives after the first drain
-    table = pq.read_table(table_path(sf_dir, "events"))
-    n = table.num_rows
-    pq.write_table(table.slice(0, n // 2), os.path.join(src, "p0.parquet"))
+    src, work = stage_events_source(sf_dir, parts=2, prefix="ck")
+    # the second half arrives after the first drain
+    second, held = os.path.join(src, "p1.parquet"), os.path.join(work, "p1")
+    os.rename(second, held)
     tenant = _tenant(work, "ck", src)
     customer = load_table(spark, sf_dir, "customer")
-    _drain(spark, tenant, customer)
-    pq.write_table(table.slice(n // 2), os.path.join(src, "p1.parquet"))
-    _drain(spark, tenant, customer)  # same checkpoint → resumes
+    await_drained(run_tenant_stream(spark, tenant, customer, available_now=True))
+    os.rename(held, second)
+    # same checkpoint → resumes
+    await_drained(run_tenant_stream(spark, tenant, customer, available_now=True))
     return _batch_counts(spark, tenant.sink_main_path)
 
 
@@ -98,20 +107,7 @@ def sink_dlq_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DLQ capture (src/main.rs:918-939): sink down → the serialized batch
     lands in the dead-letter table keyed by (tenant, batch_id). Returns the
     queued batches."""
-    src, work = stage_events_source(sf_dir, prefix="dlqlog")
-    tenant = _tenant(work, "dlqlog", src)
-
-    def sink_down(df, batch_id):
-        raise RuntimeError("sink down")
-
-    q = run_tenant_stream(
-        spark,
-        tenant,
-        load_table(spark, sf_dir, "customer"),
-        available_now=True,
-        fail_injector=sink_down,
-    )
-    await_drained(q)
+    tenant, _ = drain_staged(spark, sf_dir, "dlqlog", fail_injector=sink_down)
     return (
         spark.read.parquet(tenant.dlq_path)
         .groupBy("tenant", "batch_id")
@@ -123,12 +119,7 @@ def metric_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Throughput metric (docs/sec — the reference's adaptive-batch input,
     src/main.rs:214-228): Spark's per-query progress counters, surfaced as
     a relation."""
-    src, work = stage_events_source(sf_dir, prefix="tp")
-    tenant = _tenant(work, "tp", src)
-    q = run_tenant_stream(
-        spark, tenant, load_table(spark, sf_dir, "customer"), available_now=True
-    )
-    await_drained(q)
+    _, q = drain_staged(spark, sf_dir, "tp")
     rows = [
         Row(
             batch_id=int(p["batchId"]),
@@ -147,9 +138,7 @@ def stream_microbatch_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Micro-batch assembly (count/timeout flush, src/main.rs:405-443):
     2 staged files × maxFilesPerTrigger=1 → 2 complete micro-batches.
     Returns per-batch row counts."""
-    src, work = stage_events_source(sf_dir, parts=2, prefix="mb")
-    tenant = _tenant(work, "mb", src)
-    _drain(spark, tenant, load_table(spark, sf_dir, "customer"))
+    tenant, _ = drain_staged(spark, sf_dir, "mb", parts=2)
     return _batch_counts(spark, tenant.sink_main_path)
 
 
@@ -162,16 +151,8 @@ def stream_rate_limited_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap while total intake is invariant."""
     rows = []
     for rate in (2, 1):
-        src, work = stage_events_source(sf_dir, parts=4, prefix=f"rl{rate}")
-        tenant = _tenant(work, f"rl{rate}", src)
-        q = run_tenant_stream(
-            spark,
-            tenant,
-            load_table(spark, sf_dir, "customer"),
-            available_now=True,
-            max_files_per_trigger=rate,
-        )
-        await_drained(q)
+        tenant, _ = drain_staged(spark, sf_dir, f"rl{rate}", parts=4,
+                                 max_files_per_trigger=rate)
         sink = spark.read.parquet(tenant.sink_main_path)
         agg = sink.agg(
             F.countDistinct("batch_id").alias("nb"), F.count("*").alias("nr")
@@ -247,16 +228,16 @@ def stream_retry_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     src/main.rs:39-42, 692-743): a sink that fails twice then recovers —
     the batch lands WITHOUT touching the DLQ. Returns (attempts_used,
     rows_written, dlq_rows)."""
+    import tempfile
+
     from mongo_to_clickhouse_spark.plans.pipeline import (
         anonymized_statements,
         statements_from_events,
     )
     from mongo_to_clickhouse_spark.sinks.writers import insert_batch
 
-    import tempfile, uuid
-
     work = tempfile.mkdtemp(prefix=f"rb-{uuid.uuid4().hex[:8]}-")
-    tenant = _tenant(work, "rb", work)
+    tenant = replace(_tenant(work, "rb", work), max_retries=5)
     events = load_table(spark, sf_dir, "events")
     customer = load_table(spark, sf_dir, "customer")
     anon = anonymized_statements(statements_from_events(events, customer))
@@ -269,9 +250,7 @@ def stream_retry_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
             failures["left"] -= 1
             raise RuntimeError("transient sink error")
 
-    attempts = insert_batch(
-        anon, 0, tenant, active, flaky, max_retries=5, initial_delay_sec=0.01
-    )
+    attempts = insert_batch(anon, 0, tenant, active, flaky)
     written = spark.read.parquet(tenant.sink_main_path).count()
     dlq_rows = (
         spark.read.parquet(tenant.dlq_path).count()
@@ -305,23 +284,22 @@ def stream_multitenant_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def stream_cache_invalidate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Opt-out cache refresh semantics (TCP 'invalidate', src/main.rs
-    :800-822, 1019-1056): unnecessary side channel on Spark — the dim is
-    re-derived inside EVERY foreachBatch. Demonstrated by recording the
-    dim row count observed per micro-batch (2 batches → 2 observations)."""
+    :800-822, 1019-1056): unnecessary side channel on Spark — the dim plan
+    is built once per stream and evaluated per batch, as in
+    ``run_tenant_stream``. Demonstrated by recording the dim row count
+    observed per micro-batch (2 batches → 2 observations)."""
     from mongo_to_clickhouse_spark.sinks.writers import dual_write_batch
+    from mongo_to_clickhouse_spark.streaming.pipeline import streaming_statements
 
     src, work = stage_events_source(sf_dir, parts=2, prefix="inv")
     tenant = _tenant(work, "inv", src)
     customer = load_table(spark, sf_dir, "customer")
     obs_path = os.path.join(work, "observed")
-
-    from mongo_to_clickhouse_spark.streaming.pipeline import streaming_statements
-
     anon = streaming_statements(spark, src, customer)
+    active = optout_active(optout_dim(customer))
 
     def _batch(df, batch_id):
-        active = optout_active(optout_dim(customer))  # fresh read, per batch
-        n_dim = active.count()
+        n_dim = active.count()  # a fresh read, per batch
         spark.createDataFrame([Row(batch_id=batch_id, dim_rows=n_dim)]).write.mode(
             "append"
         ).parquet(obs_path)
@@ -973,7 +951,7 @@ QUERIES: dict[str, tuple] = {
         stream_chained_windows,
         STREAM_CHAINED_WINDOWS_SQL,
     ),
-    "source_changestream": (source_changestream, _RUNTIME_HORIZON_SQLS["source_changestream"]),
+    "source_changestream": (stream_pipeline_cdc, _RUNTIME_HORIZON_SQLS["source_changestream"]),
     "stream_stream_join": (stream_stream_join, STREAM_STREAM_JOIN_SQL),
     "stream_stream_outer_join": (
         stream_stream_outer_join,

@@ -39,12 +39,6 @@ from mongo_to_clickhouse_spark.plans.pipeline import route
 
 log = logging.getLogger(__name__)
 
-# Reference retry policy (src/main.rs:40-41, 736-740): 5 attempts,
-# 1000 ms initial delay, exponential doubling. The delay is configurable so
-# tests don't sleep.
-MAX_RETRIES = 5
-INITIAL_RETRY_DELAY_SEC = 1.0
-
 
 @contextmanager
 def job_description(spark: SparkSession, text: str):
@@ -91,28 +85,27 @@ def insert_batch(
     tenant: TenantConfig,
     active_dim: DataFrame,
     fail_injector=None,
-    max_retries: int = MAX_RETRIES,
-    initial_delay_sec: float = INITIAL_RETRY_DELAY_SEC,
 ) -> int:
     """Route rows by opt-out membership and write both sinks, retrying with
-    exponential backoff (attempts ≤ ``max_retries``, delay doubling from
-    ``initial_delay_sec`` — the reference's per-chunk policy,
-    src/main.rs:692-743). Raises after exhausting retries (the historical
-    binary's propagating semantics). Returns the number of attempts used.
+    exponential backoff (attempts ≤ ``tenant.max_retries``, delay doubling
+    from ``tenant.initial_retry_delay_sec`` — the reference's per-chunk
+    policy, src/main.rs:692-743). Raises after exhausting retries (the
+    historical binary's propagating semantics). Returns the number of
+    attempts used.
 
     ``fail_injector(batch_df, batch_id)`` is a test hook that may raise to
     simulate sink unavailability."""
     with job_description(batch_df.sparkSession,
                          f"{tenant.name} batch {batch_id}"):
-        delay = initial_delay_sec
-        for attempt in range(1, max_retries + 1):
+        delay = tenant.initial_retry_delay_sec
+        for attempt in range(1, tenant.max_retries + 1):
             try:
                 if fail_injector is not None:
                     fail_injector(batch_df, batch_id)
                 write_sinks(batch_df, active_dim, tenant, batch_id)
                 return attempt
             except Exception:  # noqa: BLE001
-                if attempt == max_retries:
+                if attempt == tenant.max_retries:
                     raise
                 time.sleep(delay)
                 delay *= 2
@@ -132,9 +125,7 @@ def dual_write_batch(
     with job_description(batch_df.sparkSession,
                          f"{tenant.name} batch {batch_id}"):
         try:
-            insert_batch(batch_df, batch_id, tenant, active_dim, fail_injector,
-                         max_retries=tenant.max_retries,
-                         initial_delay_sec=tenant.initial_retry_delay_sec)
+            insert_batch(batch_df, batch_id, tenant, active_dim, fail_injector)
         except Exception:  # noqa: BLE001 — any sink error → DLQ, then continue
             log.error("tenant %s batch %d: sink write failed, batch captured "
                       "to the DLQ", tenant.name, batch_id, exc_info=True)

@@ -20,8 +20,9 @@ Reference architecture being re-expressed (SURVEY §3.1):
   → one streaming query per tenant from a shared SparkSession; restart =
   ``start()`` from the same checkpoint
 - opt-out cache + TCP ``invalidate`` (src/main.rs:756-822, 1019-1056)
-  → the dim is re-read once per micro-batch inside foreachBatch (cheap,
-  broadcast) — push invalidation is unnecessary by construction.
+  → the dim plan is built once per stream and evaluated per batch: each
+  micro-batch re-reads the dim (cheap, broadcast), so push invalidation
+  is unnecessary by construction.
 
 In production the source would be the Mongo Spark connector's change-stream
 micro-batch source; fixtures use the parquet file source with identical
@@ -35,6 +36,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from mongo_to_clickhouse_spark.config import TenantConfig
+from mongo_to_clickhouse_spark.functions.scalars import FIXTURE_SALT
 from mongo_to_clickhouse_spark.plans.pipeline import (
     anonymized_statements,
     optout_active,
@@ -102,6 +104,7 @@ def streaming_statements(
     source_path: str,
     customer: DataFrame,
     max_files_per_trigger: int = 1,
+    salt: str = FIXTURE_SALT,
 ) -> DataFrame:
     """readStream over the events source → anonymized statement rows.
     The transform chain is the SAME code as batch — one logical plan serves
@@ -127,7 +130,7 @@ def streaming_statements(
             .option("maxFilesPerTrigger", max_files_per_trigger)
             .parquet(source_path)
         )
-    return anonymized_statements(statements_from_events(events, customer))
+    return anonymized_statements(statements_from_events(events, customer), salt)
 
 
 def run_tenant_stream(
@@ -141,14 +144,13 @@ def run_tenant_stream(
     """One tenant's pipeline as a streaming query. ``available_now=True``
     drains the source and stops (test/backfill mode); False runs the
     5-second micro-batch cadence of the reference."""
-    anon = streaming_statements(
-        spark, tenant.source_path, customer, max_files_per_trigger
-    )
+    anon = streaming_statements(spark, tenant.source_path, customer,
+                                max_files_per_trigger, tenant.encryption_salt)
+    # built once; each batch's write evaluates it afresh, which is the
+    # reference's cache invalidation without the TCP side channel
+    active = optout_active(optout_dim(customer, tenant.encryption_salt))
 
     def _batch(df: DataFrame, batch_id: int) -> None:
-        # Re-derive the opt-out dim per micro-batch: this is the reference's
-        # cache-invalidation semantics without the TCP side channel.
-        active = optout_active(optout_dim(customer))
         dual_write_batch(df, batch_id, tenant, active, fail_injector)
 
     writer = (

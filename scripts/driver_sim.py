@@ -12,7 +12,10 @@ artifact CORRECTNESS_full_<tag>.json at the repo root (VERDICT r9
 item 2: the driver samples 50/395 per round and had never re-sampled
 282 ids; this publishes the whole registry's row/schema/hash verdicts
 every round so the judge can diff instead of re-sweeping). <tag> is
-$SPARK_GRAFT_ROUND_TAG if set, else the sf directory basename.
+$SPARK_GRAFT_ROUND_TAG if set, else the sf directory basename. Each id's
+record, and its printed line, carries ``spark_digest``, the
+``oracle_harness.rows_digest`` of its Spark rows, so two trees' runs can be
+diffed id by id.
 """
 
 from __future__ import annotations
@@ -25,8 +28,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as contract  # the driver's view of the repo
-from tests.oracle_harness import (compare, compare_detailed,
-                                  duck_connection)
+from tests.oracle_harness import (compare_detailed, duck_connection,
+                                  rows_digest)
 
 from mongo_to_clickhouse_spark.session import get_spark
 
@@ -57,7 +60,7 @@ def main() -> int:
         t = time.time()
         rec = {"rows_match": None, "schema_match": None,
                "hash_match": None, "spark_rows": None,
-               "oracle_rows": None, "err": None}
+               "oracle_rows": None, "spark_digest": None, "err": None}
         try:
             df = fn(spark, sf_dir)
             if qid in oracles:
@@ -67,14 +70,16 @@ def main() -> int:
                     else f"MISMATCH: {rec['problems']}"
                 )
             else:
-                n = df.count()
-                results[qid] = f"ROWS_ONLY: {n} rows"
-                rec.update(spark_rows=n)
+                rows = df.collect()
+                results[qid] = f"ROWS_ONLY: {len(rows)} rows"
+                rec.update(spark_rows=len(rows),
+                           spark_digest=rows_digest(df.columns, rows))
         except Exception as exc:  # noqa: BLE001
             results[qid] = f"ERROR: {exc}"
             rec["err"] = str(exc)[:500]
         artifact[qid] = rec
-        print(f"  {qid}: {results[qid]} ({time.time()-t:.1f}s)")
+        print(f"  {qid}: {results[qid]} ({time.time()-t:.1f}s) "
+              f"digest={(rec.get('spark_digest') or '-')[:16]}")
 
     if len(sys.argv) <= 2:  # full-registry run: publish the artifact
         tag = os.environ.get("SPARK_GRAFT_ROUND_TAG") or os.path.basename(

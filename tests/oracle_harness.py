@@ -9,6 +9,7 @@ passing there.
 
 from __future__ import annotations
 
+import hashlib
 import math
 import os
 from decimal import Decimal
@@ -120,11 +121,22 @@ def rows_key(cols, rows):
     return sorted(tuple(_canon(r[i]) for i in order) for r in rows)
 
 
+def rows_digest(cols, rows) -> str:
+    """sha256 of the column names and the ``rows_key`` rows: the same for
+    any row or column order, so two runs of an id can be compared by it."""
+    cols = [c.lower() for c in cols]
+    h = hashlib.sha256(repr(sorted(cols)).encode())
+    for r in rows_key(cols, rows):
+        h.update(repr(r).encode())
+    return h.hexdigest()
+
+
 def compare_detailed(spark_df, con, sql: str) -> dict:
     """Driver-schema verdict record: rows/schema/hash match booleans +
     both row counts (the shape CORRECTNESS_r*.json uses), from ONE
-    evaluation of each engine (same comparator as compare())."""
-    problems, s_n, d_n = _compare_impl(spark_df, con, sql)
+    evaluation of each engine (same comparator as compare()), plus the
+    ``rows_digest`` of the Spark rows."""
+    problems, s_cols, s_rows, d_n = _compare_impl(spark_df, con, sql)
     schema_bad = any(
         "columns differ" in p or "type" in p for p in problems
     )
@@ -137,8 +149,9 @@ def compare_detailed(spark_df, con, sql: str) -> dict:
         "rows_match": None if short_circuited else not rows_bad,
         "schema_match": not schema_bad,
         "hash_match": not problems,
-        "spark_rows": s_n,
+        "spark_rows": len(s_rows),
         "oracle_rows": d_n,
+        "spark_digest": rows_digest(s_cols, s_rows),
         "err": None,
         "problems": [p[:300] for p in problems] or None,
     }
@@ -158,7 +171,7 @@ def _compare_impl(spark_df, con, sql: str):
 
     if sorted(c.lower() for c in s_cols) != sorted(c.lower() for c in d_cols):
         problems.append(f"columns differ: spark={sorted(s_cols)} duck={sorted(d_cols)}")
-        return problems, len(s_rows), None
+        return problems, s_cols, s_rows, None
 
     problems.extend(declared_type_problems(spark_df, d_rel))
     d_rows = d_rel.fetchall()
@@ -189,4 +202,4 @@ def _compare_impl(spark_df, con, sql: str):
         problems.append(
             f"values differ; spark-only sample={diff_s} duck-only sample={diff_d}"
         )
-    return problems, len(s_rows), len(d_rows)
+    return problems, s_cols, s_rows, len(d_rows)

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 
 from mongo_to_clickhouse_spark.queries import registry
-from tests.oracle_harness import compare, duck_connection
+from tests.oracle_harness import compare, duck_connection, rows_digest
 
 REG = registry()
 ORACLE_IDS = sorted(k for k, (_f, sql) in REG.items() if sql is not None)
@@ -21,7 +21,6 @@ SHARED_ORACLE_OWN_PATH = {
     "source_orc_scan": "ORC stripe round trip of the same table",
     "stream_pipeline_cdc": "live readStream drain of the batch CDC insert",
     "stream_dlq_retry_loop": "DLQ capture then replay of the same drain",
-    "source_changestream": "change-stream tail drain of the same insert",
     "checkpoint_resume_token": "two drains resumed from one checkpoint",
     "stream_microbatch_assembly": "one drain over two staged micro-batches",
     "stream_dedup_by_key": "dropDuplicates with state kept forever",
@@ -31,22 +30,31 @@ SHARED_ORACLE_OWN_PATH = {
 
 def test_shared_oracle_ids_share_one_function():
     """Registry ids whose oracle SQL is identical must map to the SAME
-    function — one implementation per oracle — unless the id is listed
-    above with the reason it is a distinct path."""
+    function — one implementation per oracle — unless the id's function
+    is that of an id listed above with the reason it is a distinct path."""
+    own_path = {REG[q][0] for q in SHARED_ORACLE_OWN_PATH}
     by_sql: dict[str, list[str]] = {}
     for qid in ORACLE_IDS:
         by_sql.setdefault(REG[qid][1], []).append(qid)
     shared = [ids for ids in by_sql.values() if len(ids) > 1]
     dupes = []
     for ids in shared:
-        fns = {REG[q][0] for q in ids if q not in SHARED_ORACLE_OWN_PATH}
-        if len(fns) > 1:
-            dupes.append(sorted(q for q in ids
-                                if q not in SHARED_ORACLE_OWN_PATH))
+        rest = [q for q in ids if REG[q][0] not in own_path]
+        if len({REG[q][0] for q in rest}) > 1:
+            dupes.append(sorted(rest))
     assert not dupes, f"one oracle, several implementations: {dupes}"
     # every exception must still be one: no stale allow-list entries
     in_shared = {q for ids in shared for q in ids}
     assert set(SHARED_ORACLE_OWN_PATH) <= in_shared
+
+
+def test_rows_digest_ignores_row_and_column_order():
+    rows = [(1, "a", None), (2, "b", 1.5)]
+    base = rows_digest(["k", "v", "x"], rows)
+    assert rows_digest(["k", "v", "x"], rows[::-1]) == base
+    assert rows_digest(["x", "K", "v"], [(r[2], r[0], r[1]) for r in rows]) == base
+    assert rows_digest(["k", "v", "x"], [(1, "a", None), (2, "b", 2.5)]) != base
+    assert rows_digest(["k", "w", "x"], rows) != base
 
 
 @pytest.fixture(scope="module")

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import logging
 import os
+from dataclasses import replace
 
 import pyarrow.parquet as pq
 import pytest
@@ -249,7 +250,7 @@ def test_one_optout_snapshot_per_batch(spark, tmp_path):
     dim = _flipping_dim(customer)
 
     t = _tenant(tmp_path, name="snap")
-    assert insert_batch(anon, 0, t, dim, max_retries=1) == 1
+    assert insert_batch(anon, 0, replace(t, max_retries=1), dim) == 1
     main = [r.id for r in spark.read.parquet(t.sink_main_path).collect()]
     optout = [r.id for r in spark.read.parquet(t.sink_optout_path).collect()]
     assert sorted(main + optout) == sorted(ids)
@@ -263,6 +264,53 @@ def test_one_optout_snapshot_per_batch(spark, tmp_path):
     dlq = spark.read.parquet(t.dlq_path)
     assert sorted(r.id for r in dlq.collect()) == sorted(ids)
     assert [r.batch_id for r in dlq.select("batch_id").distinct().collect()] == [3]
+
+
+def test_dim_plan_built_once_per_stream(spark, tmp_path, monkeypatch):
+    """A two-batch drain builds the opt-out dim plan once, not per batch,
+    and still routes every row id to exactly one of main / opt-out."""
+    from mongo_to_clickhouse_spark.streaming import pipeline
+
+    builds = []
+
+    def counted(customer, *args):
+        builds.append(1)
+        return optout_dim(customer, *args)
+
+    monkeypatch.setattr(pipeline, "optout_dim", counted)
+    t = _tenant(tmp_path, name="once")
+    _stage_events(t.source_path, parts=2)
+    q = run_tenant_stream(spark, t, load_table(spark, SRC, "customer"),
+                          available_now=True)
+    q.awaitTermination(120)
+
+    main = spark.read.parquet(t.sink_main_path)
+    optout = spark.read.parquet(t.sink_optout_path)
+    assert main.select("batch_id").distinct().count() == 2
+    assert len(builds) == 1
+    ids = [r.id for r in main.union(optout).select("id").collect()]
+    total, main_n, optout_n = _expected_counts(spark)
+    assert len(ids) == len(set(ids)) == total
+    assert (main.count(), optout.count()) == (main_n, optout_n)
+
+
+def test_tenant_salt_changes_hashes_not_routing(spark, tmp_path):
+    """A tenant's own salt reaches both the row hashes and the opt-out
+    dim: the hashes change, the routing does not."""
+    customer = load_table(spark, SRC, "customer")
+    sinks = {}
+    for name, salt in (("plain", "fixture-salt"), ("salted", "s3cret")):
+        t = replace(_tenant(tmp_path, name=name), encryption_salt=salt)
+        _stage_events(t.source_path)
+        run_tenant_stream(spark, t, customer,
+                          available_now=True).awaitTermination(120)
+        sinks[name] = [
+            {r.id: r.hashed_value for r in spark.read.parquet(p).collect()}
+            for p in (t.sink_main_path, t.sink_optout_path)
+        ]
+    for plain, salted in zip(sinks["plain"], sinks["salted"]):
+        assert plain and set(plain) == set(salted)
+        assert not set(plain.values()) & set(salted.values())
 
 
 def test_route_keeps_one_row_per_input_row(spark):
@@ -304,9 +352,7 @@ def test_insert_retry_backoff_policy(spark, tmp_path):
             failures["left"] -= 1
             raise RuntimeError("transient")
 
-    attempts = insert_batch(
-        anon, 0, t, active, flaky, max_retries=5, initial_delay_sec=0.01
-    )
+    attempts = insert_batch(anon, 0, replace(t, max_retries=5), active, flaky)
     assert attempts == 3
     assert not os.path.isdir(t.dlq_path)
 
@@ -314,9 +360,7 @@ def test_insert_retry_backoff_policy(spark, tmp_path):
         raise RuntimeError("down")
 
     with _pytest.raises(RuntimeError, match="down"):
-        insert_batch(
-            anon, 1, t, active, always, max_retries=3, initial_delay_sec=0.01
-        )
+        insert_batch(anon, 1, replace(t, max_retries=3), active, always)
 
 
 def test_checkpoint_resume_no_duplicates(spark, tmp_path):
