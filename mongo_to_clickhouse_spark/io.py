@@ -97,11 +97,19 @@ def load_table(
     ts_range: tuple[str, str] | None = None,
 ) -> DataFrame:
     """Load a fixture table. ``ts_range=(lo, hi)`` applies an inclusive
-    range predicate on ``events.ts`` — evaluated on the raw epoch-nanos
-    column so it reaches the parquet scan as a pushed filter (row-group
-    min/max pruning). Filtering after the ns→µs conversion would wrap the
-    column in an expression Catalyst cannot push down — at 100 TB that is
-    the difference between pruning and a full scan."""
+    range predicate on ``events.ts`` — on an epoch-nanos encoding it is
+    evaluated on the raw column, so it reaches the parquet scan as a
+    pushed filter; filtering after the ns→µs conversion would wrap the
+    column in an expression Catalyst cannot push down. A pushed filter
+    prunes row groups only on a UTC-adjusted timestamp: the fixture's
+    ``timestamp[us]`` ts reads as ``timestamp_ntz``, which Spark 4.1's
+    parquet filters do not prune, so a ranged scan reads every row
+    (measured: 200,000 of 200,000 rows, against 114,688 for a
+    UTC-adjusted copy of the same file).
+
+    A ranged load keeps the memoized scan's file splits, so it carries
+    that scan for the split-count probe
+    (``plans.pipeline._fanout_undersplit``) to key on."""
     if name not in TABLES:
         raise KeyError(f"unknown fixture table {name!r}; known: {TABLES}")
     from mongo_to_clickhouse_spark.session import ensure_runtime_confs
@@ -115,12 +123,15 @@ def load_table(
         # Inclusive µs-truncated bounds in nanos: ts DIV 1000 ∈
         # [µs(lo), µs(hi)] ⟺ ts ∈ [µs(lo)*1000, µs(hi)*1000 + 999] —
         # evaluated on the RAW column so it reaches the scan as a pushed
-        # filter (row-group pruning); filtering post-conversion would wrap
-        # ts in an expression Catalyst cannot push down.
-        return raw.filter(
+        # filter; filtering post-conversion would wrap ts in an
+        # expression Catalyst cannot push down.
+        ranged = raw.filter(
             F.col("ts").between(
                 F.unix_micros(F.lit(lo).cast("timestamp")) * 1000,
                 F.unix_micros(F.lit(hi).cast("timestamp")) * 1000 + 999,
             )
         ).withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-    return norm.filter(F.col("ts").between(*ts_range))
+    else:
+        ranged = norm.filter(F.col("ts").between(*ts_range))
+    ranged._split_source = norm
+    return ranged

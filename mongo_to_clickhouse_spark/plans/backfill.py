@@ -9,9 +9,11 @@ extract/anonymize/route/insert path as live, and processed/failed counters
 reported at the end (main.rs:501-513). Error propagation follows this
 binary (fails the job), not the live binary's swallowing — SURVEY §7.4.
 
-Spark shape: one batch job; the $gte/$lte filter is a pushed-down parquet
-predicate (row-group pruning); counters are ``observe()`` metrics, not
-driver-side loops.
+Spark shape: one batch job that routes the range and writes both sink
+tables (``sinks.writers.write_sinks``); the $gte/$lte filter is a
+pushed-down parquet predicate, which prunes no row groups on the fixture's
+``timestamp_ntz`` ts (``io.load_table``); counters are ``observe()``
+metrics on that job, not driver-side loops.
 """
 
 from __future__ import annotations

@@ -55,19 +55,16 @@ def optout_dim(customer: DataFrame, salt: str = FIXTURE_SALT) -> DataFrame:
     ``customer``: every ``OPTOUT_MODULUS``-th customer, with 1-3 versioned
     rows per email so latest-version dedup is exercised. ``salt`` must be
     the one the routed rows were anonymized with."""
-    versions = customer.sparkSession.range(1, VERSION_MODULUS + 1).select(
-        F.col("id").cast("int").alias("version")
+    # versions 1 .. c_custkey % VERSION_MODULUS + 1, fanned out in-row
+    # (a generator, not a join: no broadcast job per evaluation)
+    versions = F.explode(
+        F.sequence(F.lit(1), (F.col("c_custkey") % VERSION_MODULUS + 1).cast("int"))
     )
     email = F.lower(F.col("c_name"))
-    return (
-        customer.filter(F.col("c_custkey") % OPTOUT_MODULUS == 0)
-        .crossJoin(F.broadcast(versions))
-        .filter(F.col("version") <= (F.col("c_custkey") % VERSION_MODULUS) + 1)
-        .select(
-            email.alias("email"),
-            sha256_anonymize(email, salt).alias("hashed_moodle_id"),
-            F.col("version"),
-        )
+    return customer.filter(F.col("c_custkey") % OPTOUT_MODULUS == 0).select(
+        email.alias("email"),
+        sha256_anonymize(email, salt).alias("hashed_moodle_id"),
+        versions.alias("version"),
     )
 
 
@@ -98,13 +95,15 @@ def _fanout_undersplit(df: DataFrame) -> DataFrame:
     parallelism).
 
     ``df.rdd.getNumPartitions()`` forces a full physical-plan
-    translation, so the probe is memoized per DataFrame object: the
-    events side is the session-memoized scan from ``io.load_table``,
-    so in steady state it runs once."""
+    translation, so the probe is memoized per DataFrame object, keyed on
+    the session-memoized scan from ``io.load_table`` (a ranged load
+    carries it as ``_split_source``: a range filter does not change the
+    split count), so in steady state it runs once per table."""
     if df.isStreaming:
         return df
     sc = df.sparkSession.sparkContext
-    parts = cache.by_object(df, "undersplit", lambda: df.rdd.getNumPartitions())
+    scan = getattr(df, "_split_source", df)
+    parts = cache.by_object(scan, "undersplit", lambda: scan.rdd.getNumPartitions())
     if parts < sc.defaultParallelism:
         return df.repartition(sc.defaultParallelism)
     return df

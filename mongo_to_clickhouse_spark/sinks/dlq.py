@@ -56,11 +56,11 @@ def retry_failed_batches(
     loop picks them up next cycle).
 
     Scale shape: the whole drained set is routed once and goes through
-    ONE write per sink, partitioned by batch_id — O(1) Spark jobs for N
-    queued batches (a mass outage replay would otherwise serialize N×
-    through the driver). The write is the live path's own
+    ONE write job for both sinks, partitioned by batch_id — O(1) Spark
+    jobs for N queued batches (a mass outage replay would otherwise
+    serialize N× through the driver). The write is the live path's own
     ``writers.write_sinks``, so each batch lands in the same
-    ``batch_id=N`` directory with the same idempotent overwrite."""
+    ``batch_id=N`` directory with the same idempotent replace."""
     from mongo_to_clickhouse_spark.sinks.writers import job_description, write_sinks
 
     # no DLQ yet, or a fully drained one: its empty tenant=<name> shells

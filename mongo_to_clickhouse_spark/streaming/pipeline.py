@@ -13,9 +13,9 @@ Reference architecture being re-expressed (SURVEY §3.1):
 - adaptive AIMD batch sizing (src/main.rs:192-233) → AQE + backpressure;
   no user code
 - dual-table routing + DLQ → ``foreachBatch`` (sinks/writers.py): each
-  micro-batch is routed once (``plans.pipeline.route``) against one
-  evaluation of the opt-out dim, persisted, and both tables are written
-  from that snapshot, so the source is read once per batch
+  micro-batch is routed once (``plans.pipeline.route``) and ONE write job,
+  partitioned by the opt-out flag, lands both tables, so the source is
+  read and the opt-out dim evaluated once per batch, with nothing cached
 - per-tenant task fanout + 60 s restart loop (src/main.rs:240-262)
   → one streaming query per tenant from a shared SparkSession; restart =
   ``start()`` from the same checkpoint

@@ -169,20 +169,38 @@ def test_undersplit_probe_entries_stay_bounded(spark):
         statements_from_events,
     )
 
+    from pyspark.sql import functions as F
+
     customer = load_table(spark, SRC, "customer")
+    events = load_table(spark, SRC, "events")
     for i in range(200):
-        lo = f"2024-01-01 00:{i // 60:02d}:{i % 60:02d}"
-        events = load_table(spark, SRC, "events",
-                            ts_range=(lo, "2024-12-31 23:59:59"))
-        statements_from_events(events, customer)
+        statements_from_events(events.filter(F.col("event_id") > i), customer)
     assert cache.stats("undersplit").builds == 200
     assert 0 < cache.entries("undersplit") <= cache.OBJECT_ENTRIES
 
     # the unranged scan is one memoized object: its probe runs once
-    events = load_table(spark, SRC, "events")
     statements_from_events(events, customer)
     statements_from_events(events, customer)
     assert cache.stats("undersplit").hits == 1
+
+
+def test_ranged_backfills_probe_the_scan_once(spark, tmp_path):
+    """A range filter keeps the scan's file splits: three ranged backfill
+    calls probe the memoized events scan once and pin no ranged frame."""
+    from mongo_to_clickhouse_spark.config import TenantConfig
+    from mongo_to_clickhouse_spark.plans.backfill import run_backfill
+
+    for k in range(3):
+        base = os.path.join(str(tmp_path), f"call{k}")
+        tenant = TenantConfig(
+            name="bf", source_path=SRC,
+            sink_main_path=os.path.join(base, "main"),
+            sink_optout_path=os.path.join(base, "optout"),
+            checkpoint_path=os.path.join(base, "ckpt"),
+            dlq_path=os.path.join(base, "dlq"))
+        run_backfill(spark, tenant, SRC, "2024-01-03T00:00", "2024-01-27T00:00")
+    assert cache.stats("undersplit").builds == 1
+    assert cache.entries("undersplit") == 1
 
 
 # a module-level name bound to an empty mapping is a hand-rolled memo

@@ -74,15 +74,30 @@ def _expected_counts(spark):
     return total, total - optout_n, optout_n
 
 
-def _job_descriptions(spark, first_job: int) -> list:
+def _job_descriptions(spark, first_job: int, writes_only: bool = False) -> list:
     """Descriptions of the jobs since ``first_job``, read from the status
-    store (the store is fed asynchronously, so drain the bus first)."""
+    store (the store is fed asynchronously, so drain the bus first);
+    ``writes_only`` keeps the jobs with a stage that wrote output rows."""
+    from py4j.protocol import Py4JJavaError
+
     sc = spark.sparkContext._jsc.sc()
     sc.listenerBus().waitUntilEmpty()
     store = sc.statusStore()
+
+    def rows_written(sid: int) -> int:
+        try:
+            return store.lastStageAttempt(sid).outputRecords()
+        except Py4JJavaError:  # never submitted
+            return 0
+
     descs = []
     for jid in range(first_job, sc.dagScheduler().numTotalJobs()):
-        d = store.job(jid).description()
+        j = store.job(jid)
+        sids = j.stageIds()
+        if writes_only and not any(
+                rows_written(sids.apply(i)) for i in range(sids.size())):
+            continue
+        d = j.description()
         descs.append(None if d.isEmpty() else d.get())
     return descs
 
@@ -222,13 +237,20 @@ def test_dlq_requeue_after_checkpoint_loss_is_idempotent(spark, tmp_path):
     assert spark.read.parquet(t.sink_main_path).count() == main_n
 
 
-def _flipping_dim(customer):
-    """An opt-out dim whose membership changes on every evaluation: each
-    evaluation keeps a fresh random half of the active rows."""
-    import random
+def _flipping_dim(customer, counts_dir):
+    """An opt-out dim whose membership flips on every evaluation: the
+    n-th evaluation of an active row keeps it iff n is odd (counted in a
+    file per hash under ``counts_dir``), so one evaluation keeps every
+    active row and a second drops them all."""
+    os.makedirs(counts_dir, exist_ok=True)
 
-    coin = F.udf(lambda h: random.random() < 0.5, "boolean").asNondeterministic()
-    return optout_active(optout_dim(customer)).filter(coin("hashed_moodle_id"))
+    def keep(h):
+        with open(os.path.join(counts_dir, h), "ab") as f:
+            f.write(b".")
+            return f.tell() % 2 == 1
+
+    flip = F.udf(keep, "boolean").asNondeterministic()
+    return optout_active(optout_dim(customer)).filter(flip("hashed_moodle_id"))
 
 
 def test_one_optout_snapshot_per_batch(spark, tmp_path):
@@ -247,14 +269,14 @@ def test_one_optout_snapshot_per_batch(spark, tmp_path):
         statements_from_events(load_table(spark, SRC, "events"), customer)
     )
     ids = [r.id for r in anon.select("id").collect()]
-    dim = _flipping_dim(customer)
+    dim = _flipping_dim(customer, str(tmp_path / "flips"))
 
     t = _tenant(tmp_path, name="snap")
     assert insert_batch(anon, 0, replace(t, max_retries=1), dim) == 1
     main = [r.id for r in spark.read.parquet(t.sink_main_path).collect()]
     optout = [r.id for r in spark.read.parquet(t.sink_optout_path).collect()]
     assert sorted(main + optout) == sorted(ids)
-    assert optout  # the flipping dim still routed some rows
+    assert optout  # the one evaluation kept every opted-out row
 
     def sink_down(df, batch_id):
         raise RuntimeError("sink down")
@@ -264,6 +286,81 @@ def test_one_optout_snapshot_per_batch(spark, tmp_path):
     dlq = spark.read.parquet(t.dlq_path)
     assert sorted(r.id for r in dlq.collect()) == sorted(ids)
     assert [r.batch_id for r in dlq.select("batch_id").distinct().collect()] == [3]
+
+
+def test_micro_batch_writes_both_sinks_in_one_job(spark, tmp_path):
+    """A one-file micro-batch lands both tables with ONE write job, tagged
+    with the tenant and batch id, and leaves only the batch directories."""
+    t = _tenant(tmp_path, name="onejob")
+    _stage_events(t.source_path)
+    first_job = spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+    q = run_tenant_stream(spark, t, load_table(spark, SRC, "customer"),
+                          available_now=True)
+    q.awaitTermination(120)
+
+    writes = _job_descriptions(spark, first_job, writes_only=True)
+    assert writes.count(f"{t.name} batch 0") == 1
+    # no staging directory is left beside the sinks
+    assert sorted(os.listdir(os.path.dirname(t.sink_main_path))) == [
+        "checkpoint", "main", "optout", "source"]
+    for base in (t.sink_main_path, t.sink_optout_path):
+        assert os.listdir(base) == ["batch_id=0"]
+        assert spark.read.parquet(base).columns == [
+            "id", "statement", "timestamp", "hashed_value", "created_at",
+            "batch_id"]
+    total, main_n, optout_n = _expected_counts(spark)
+    assert spark.read.parquet(t.sink_main_path).count() == main_n
+    assert spark.read.parquet(t.sink_optout_path).count() == optout_n
+
+
+def test_empty_side_leaves_a_schema_only_batch_dir(spark, tmp_path):
+    """A batch with no opt-out rows still leaves a readable
+    ``batch_id=N`` opt-out directory holding a schema-only file, with the
+    schema of a written side."""
+    from mongo_to_clickhouse_spark.sinks.writers import insert_batch
+
+    customer = load_table(spark, SRC, "customer")
+    anon = anonymized_statements(
+        statements_from_events(load_table(spark, SRC, "events"), customer))
+    t = _tenant(tmp_path, name="empty")
+    no_optouts = optout_active(optout_dim(customer)).filter(F.lit(False))
+    assert insert_batch(anon, 4, t, no_optouts) == 1
+
+    main = spark.read.parquet(t.sink_main_path)
+    empty = spark.read.parquet(t.sink_optout_path)
+    assert main.count() == anon.count()
+    assert empty.count() == 0
+    assert empty.schema == main.schema
+    files = os.listdir(os.path.join(t.sink_optout_path, "batch_id=4"))
+    assert "_SUCCESS" in files
+    assert [pq.ParquetFile(os.path.join(t.sink_optout_path, "batch_id=4", f))
+            .metadata.num_rows for f in files if f.endswith(".parquet")] == [0]
+
+
+def test_failed_write_leaves_no_staged_files(spark, tmp_path, monkeypatch):
+    """A write job that fails part-way leaves no sink directory and no
+    staged files, and the batch lands in the DLQ exactly once."""
+    from mongo_to_clickhouse_spark.plans import pipeline
+    from mongo_to_clickhouse_spark.sinks import writers
+
+    def boom(opt_out):
+        if opt_out:
+            raise RuntimeError("sink write failed")
+        return opt_out
+
+    fail = F.udf(boom, "boolean")
+    monkeypatch.setattr(writers, "route", lambda rows, dim: pipeline.route(
+        rows, dim).withColumn("opt_out", fail("opt_out")))
+    customer = load_table(spark, SRC, "customer")
+    anon = anonymized_statements(
+        statements_from_events(load_table(spark, SRC, "events"), customer))
+    t = _tenant(tmp_path, name="failed")
+    writers.dual_write_batch(anon, 5, t, optout_active(optout_dim(customer)))
+
+    assert os.listdir(os.path.dirname(t.sink_main_path)) == ["dlq"]
+    dlq = spark.read.parquet(t.dlq_path)
+    assert dlq.count() == anon.count()
+    assert [r.batch_id for r in dlq.select("batch_id").distinct().collect()] == [5]
 
 
 def test_dim_plan_built_once_per_stream(spark, tmp_path, monkeypatch):
