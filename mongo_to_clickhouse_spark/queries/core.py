@@ -253,26 +253,27 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: partitionBy on a low-cardinality derived date keeps
     file counts = O(days × tasks); the repartition by the partition
     column before the write collapses that to O(days) files (the
-    small-files problem is a sink-side decision, not a hope)."""
-    import tempfile
-    import uuid
+    small-files problem is a sink-side decision, not a hope). The layout
+    lives in a per-call work dir, removed before returning, so the
+    accounting is ``localCheckpoint``-ed first."""
+    from mongo_to_clickhouse_spark.streaming.util import call_work_dir
 
-    out = os.path.join(
-        tempfile.mkdtemp(prefix=f"ptsink-{uuid.uuid4().hex[:8]}-"), "events"
-    )
     ev = load_table(spark, sf_dir, "events").withColumn(
         "event_date", F.to_date("ts")
     )
-    ev.repartition("event_date").write.partitionBy("event_date").parquet(out)
-    back = spark.read.parquet(out)
-    return (
-        back.groupBy(F.col("event_date").cast("string").alias("event_date"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_rows"),
-            F.countDistinct("user_id").cast("bigint").alias("n_users"),
+    with call_work_dir("ptsink") as work:
+        out = os.path.join(work, "events")
+        ev.repartition("event_date").write.partitionBy("event_date").parquet(out)
+        back = spark.read.parquet(out)
+        return (
+            back.groupBy(F.col("event_date").cast("string").alias("event_date"))
+            .agg(
+                F.count("*").cast("bigint").alias("n_rows"),
+                F.countDistinct("user_id").cast("bigint").alias("n_users"),
+            )
+            .orderBy("event_date")
+            .localCheckpoint()
         )
-        .orderBy("event_date")
-    )
 
 
 SINK_PARTITIONED_PARQUET_SQL = """

@@ -1144,13 +1144,19 @@ def _sweep_level_sql(exploded_rel: str, n: int) -> str:
             SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_train
             FROM {exploded_rel} WHERE doc_id % {BENCH_MODULUS} != 0
         ) t CROSS JOIN (
+            -- one DISTINCT aggregate only: with two, Catalyst's distinct
+            -- rewrite emits its Expand groups in a run-dependent order, so
+            -- the plan (and its fingerprint) changed from run to run; a
+            -- gram is counted at its first row instead
             SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT)
                        AS n_contaminated,
-                   CAST(COUNT(DISTINCT gram_h) AS BIGINT)
+                   CAST(COUNT(CASE WHEN gram_rn = 1 THEN 1 END) AS BIGINT)
                        AS n_shared_grams
             FROM (
                 SELECT e.doc_id, e.gram_h,
-                       COUNT(*) OVER (PARTITION BY e.gram_h) AS train_df
+                       COUNT(*) OVER (PARTITION BY e.gram_h) AS train_df,
+                       ROW_NUMBER() OVER (PARTITION BY e.gram_h
+                                          ORDER BY e.doc_id) AS gram_rn
                 FROM {exploded_rel} e
                 JOIN (SELECT DISTINCT gram_h FROM {exploded_rel}
                       WHERE doc_id % {BENCH_MODULUS} = 0) b

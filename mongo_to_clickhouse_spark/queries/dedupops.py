@@ -23,7 +23,6 @@ Models Better").
 from __future__ import annotations
 
 import os
-import shutil
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -533,153 +532,132 @@ def stream_minhash_index_upsert(
     index is an append-only parquet table exactly like a production
     band store. Driver work is control-plane only (staging + stream
     wiring); every count is computed and appended engine-side."""
-    import tempfile
     import uuid
 
-    from mongo_to_clickhouse_spark.streaming.util import await_drained
+    from mongo_to_clickhouse_spark.streaming.util import (
+        await_drained,
+        call_work_dir,
+        stage_batch_files,
+    )
 
     # n_batches / work_dir are test knobs (the round-11 soak gate drives
-    # ~50 micro-batches and inspects the checkpoint before cleanup); the
+    # ~50 micro-batches and inspects the checkpoint after the call); the
     # registry id always runs the default so the unrolled oracle holds
     nb = n_batches or _STREAM_UPSERT_BATCHES
-    work = work_dir or tempfile.mkdtemp(
-        prefix=f"mhup-{uuid.uuid4().hex[:8]}-"
-    )
-    src = os.path.join(work, "source")
-    idx_bands = os.path.join(work, "index_bands")
-    idx_shingles = os.path.join(work, "index_shingles")
-    acct = os.path.join(work, "acct")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(src)
+    with call_work_dir("mhup", given=work_dir) as work:
+        src = os.path.join(work, "source")
+        idx_bands = os.path.join(work, "index_bands")
+        idx_shingles = os.path.join(work, "index_shingles")
+        acct = os.path.join(work, "acct")
+        ckpt = os.path.join(work, "ckpt")
 
-    _register_docs(spark, sf_dir)
-    bands_view = _bands_view(spark, sf_dir)
-    shingled_view = _shingled_view(spark, sf_dir)
-    hist_pred = "doc_id < 1000000 AND doc_id % 10 != 3"
-    spark.table(bands_view).filter(hist_pred).write.parquet(idx_bands)
-    spark.table(shingled_view).filter(hist_pred).write.parquet(
-        idx_shingles
-    )
-
-    # stage the new batch split by doc_id % 3, one file per micro-batch,
-    # strictly increasing mtimes so the file source triggers them in order
-    new_docs = spark.sql(
-        f"WITH corpus AS ({_planted_corpus('spark')}) "
-        "SELECT doc_id, text FROM corpus "
-        "WHERE doc_id >= 1000000 OR doc_id % 10 = 3"
-    )
-    base_t = 1_700_000_000
-    for k in range(nb):
-        tmp = os.path.join(work, f"stage{k}")
-        new_docs.filter(F.col("doc_id") % nb == k
-                        ).coalesce(1).write.parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        dst = os.path.join(src, f"b{k}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (base_t + k, base_t + k))
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch hands a DataFrame bound to the micro-batch's own
-        # session — register and query everything through THAT session
-        sess = batch_df.sparkSession
-        tag = uuid.uuid4().hex[:8]
-        bv, bsh, bb = f"mh_b_{tag}", f"mh_sh_{tag}", f"mh_bd_{tag}"
-        hb, hs = f"mh_idx_{tag}", f"mh_ish_{tag}"
-        batch_df.createOrReplaceTempView(bv)
-        sess.read.parquet(idx_bands).createOrReplaceTempView(hb)
-        sess.read.parquet(idx_shingles).createOrReplaceTempView(hs)
-        sess.sql(
-            f"WITH corpus AS (SELECT doc_id, text FROM {bv}) "
-            + _shingles("spark")
-        ).createOrReplaceTempView(bsh)
-        sess.sql(
-            f"WITH shingled AS (SELECT * FROM {bsh}), "
-            f"sigs AS ({_minhash_sig_sql('spark')}), "
-            f"bands AS ({_band_sql('spark')}) SELECT * FROM bands"
-        ).createOrReplaceTempView(bb)
-        novel = f"""
-            WITH cand AS (
-                SELECT DISTINCT n.doc_id AS new_id, h.doc_id AS hist_id
-                FROM {bb} n JOIN {hb} h
-                  ON n.band_idx = h.band_idx AND n.band_sig = h.band_sig
-            ),
-            dup AS (
-                SELECT DISTINCT c.new_id FROM cand c
-                JOIN {bsh} sa ON sa.doc_id = c.new_id
-                JOIN {hs} sb ON sb.doc_id = c.hist_id
-                WHERE round({_jaccard_expr('spark', 'sa', 'sb')}, 6)
-                      >= {JACCARD_THRESHOLD}
-            ),
-            probed AS (SELECT DISTINCT doc_id FROM {bb}),
-            novel AS (
-                SELECT p.doc_id FROM probed p
-                LEFT JOIN dup d ON d.new_id = p.doc_id
-                WHERE d.new_id IS NULL
-            )
-        """
-        # accounting FIRST (it reads the index pre-insert); exact
-        # engine-side counts, no driver materialization
-        sess.sql(
-            novel + f"""
-            SELECT CAST({batch_id} AS BIGINT) AS batch_id,
-                   CAST((SELECT COUNT(*) FROM probed) AS BIGINT)
-                       AS n_probed,
-                   CAST((SELECT COUNT(*) FROM novel) AS BIGINT)
-                       AS n_novel,
-                   CAST((SELECT COUNT(*)
-                         FROM {bb} n JOIN novel v ON v.doc_id = n.doc_id)
-                        AS BIGINT) AS rows_inserted
-            """
-        ).write.mode("append").parquet(acct)
-        # stage the inserts, then append the staged rows (never read and
-        # write the same index dir inside one job)
-        ins_b = os.path.join(work, f"insb_{tag}")
-        ins_s = os.path.join(work, f"inss_{tag}")
-        sess.sql(
-            novel
-            + f"SELECT n.* FROM {bb} n JOIN novel v ON v.doc_id = n.doc_id"
-        ).write.parquet(ins_b)
-        sess.sql(
-            novel
-            + f"SELECT s.* FROM {bsh} s JOIN novel v ON v.doc_id = s.doc_id"
-        ).write.parquet(ins_s)
-        sess.read.parquet(ins_b).write.mode("append").parquet(idx_bands)
-        sess.read.parquet(ins_s).write.mode("append").parquet(
+        _register_docs(spark, sf_dir)
+        bands_view = _bands_view(spark, sf_dir)
+        shingled_view = _shingled_view(spark, sf_dir)
+        hist_pred = "doc_id < 1000000 AND doc_id % 10 != 3"
+        spark.table(bands_view).filter(hist_pred).write.parquet(idx_bands)
+        spark.table(shingled_view).filter(hist_pred).write.parquet(
             idx_shingles
         )
-        # the per-batch views are uuid-tagged; drop them or a long-lived
-        # session leaks 5 catalog entries per micro-batch (the ivf twin
-        # got this fix in round 10; the round-11 soak gate asserts it)
-        for v in (bv, bsh, bb, hb, hs):
-            sess.catalog.dropTempView(v)
 
-    stream = (
-        spark.readStream.schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_drained(q)
-    # Materialize the (tiny — one row per micro-batch) accounting table
-    # and delete the work dir before returning: the staged batches, band
-    # and shingle indexes, and checkpoint would otherwise leak a tempdir
-    # per invocation (including every benchmark rep).
-    rows = spark.read.parquet(acct).orderBy("batch_id").collect()
-    schema = spark.read.parquet(acct).schema
-    if work_dir is None:
-        shutil.rmtree(work, ignore_errors=True)
-    from mongo_to_clickhouse_spark.operators.literalrel import (
-        literal_rows_df,
-    )
+        # stage the new batch split by doc_id % 3, one file per
+        # micro-batch, in the order the file source triggers them
+        new_docs = spark.sql(
+            f"WITH corpus AS ({_planted_corpus('spark')}) "
+            "SELECT doc_id, text FROM corpus "
+            "WHERE doc_id >= 1000000 OR doc_id % 10 = 3"
+        )
+        stage_batch_files(src, [new_docs.filter(F.col("doc_id") % nb == k)
+                                for k in range(nb)])
 
-    return literal_rows_df(
-        spark, [tuple(r) for r in rows], schema
-    ).orderBy("batch_id")
+        def upsert(batch_df: DataFrame, batch_id: int) -> None:
+            # foreachBatch hands a DataFrame bound to the micro-batch's own
+            # session — register and query everything through THAT session
+            sess = batch_df.sparkSession
+            tag = uuid.uuid4().hex[:8]
+            bv, bsh, bb = f"mh_b_{tag}", f"mh_sh_{tag}", f"mh_bd_{tag}"
+            hb, hs = f"mh_idx_{tag}", f"mh_ish_{tag}"
+            batch_df.createOrReplaceTempView(bv)
+            sess.read.parquet(idx_bands).createOrReplaceTempView(hb)
+            sess.read.parquet(idx_shingles).createOrReplaceTempView(hs)
+            sess.sql(
+                f"WITH corpus AS (SELECT doc_id, text FROM {bv}) "
+                + _shingles("spark")
+            ).createOrReplaceTempView(bsh)
+            sess.sql(
+                f"WITH shingled AS (SELECT * FROM {bsh}), "
+                f"sigs AS ({_minhash_sig_sql('spark')}), "
+                f"bands AS ({_band_sql('spark')}) SELECT * FROM bands"
+            ).createOrReplaceTempView(bb)
+            novel = f"""
+                WITH cand AS (
+                    SELECT DISTINCT n.doc_id AS new_id, h.doc_id AS hist_id
+                    FROM {bb} n JOIN {hb} h
+                      ON n.band_idx = h.band_idx AND n.band_sig = h.band_sig
+                ),
+                dup AS (
+                    SELECT DISTINCT c.new_id FROM cand c
+                    JOIN {bsh} sa ON sa.doc_id = c.new_id
+                    JOIN {hs} sb ON sb.doc_id = c.hist_id
+                    WHERE round({_jaccard_expr('spark', 'sa', 'sb')}, 6)
+                          >= {JACCARD_THRESHOLD}
+                ),
+                probed AS (SELECT DISTINCT doc_id FROM {bb}),
+                novel AS (
+                    SELECT p.doc_id FROM probed p
+                    LEFT JOIN dup d ON d.new_id = p.doc_id
+                    WHERE d.new_id IS NULL
+                )
+            """
+            # accounting FIRST (it reads the index pre-insert); exact
+            # engine-side counts, no driver materialization
+            sess.sql(
+                novel + f"""
+                SELECT CAST({batch_id} AS BIGINT) AS batch_id,
+                       CAST((SELECT COUNT(*) FROM probed) AS BIGINT)
+                           AS n_probed,
+                       CAST((SELECT COUNT(*) FROM novel) AS BIGINT)
+                           AS n_novel,
+                       CAST((SELECT COUNT(*)
+                             FROM {bb} n JOIN novel v ON v.doc_id = n.doc_id)
+                            AS BIGINT) AS rows_inserted
+                """
+            ).write.mode("append").parquet(acct)
+            # stage the inserts, then append the staged rows (never read and
+            # write the same index dir inside one job)
+            ins_b = os.path.join(work, f"insb_{tag}")
+            ins_s = os.path.join(work, f"inss_{tag}")
+            sess.sql(
+                novel
+                + f"SELECT n.* FROM {bb} n JOIN novel v ON v.doc_id = n.doc_id"
+            ).write.parquet(ins_b)
+            sess.sql(
+                novel
+                + f"SELECT s.* FROM {bsh} s JOIN novel v ON v.doc_id = s.doc_id"
+            ).write.parquet(ins_s)
+            sess.read.parquet(ins_b).write.mode("append").parquet(idx_bands)
+            sess.read.parquet(ins_s).write.mode("append").parquet(
+                idx_shingles
+            )
+            # the per-batch views are uuid-tagged; drop them or a long-lived
+            # session leaks 5 catalog entries per micro-batch (the ivf twin
+            # got this fix in round 10; the round-11 soak gate asserts it)
+            for v in (bv, bsh, bb, hb, hs):
+                sess.catalog.dropTempView(v)
+
+        stream = (
+            spark.readStream.schema("doc_id LONG, text STRING")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        q = (
+            stream.writeStream.foreachBatch(upsert)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        await_drained(q)
+        return spark.read.parquet(acct).localCheckpoint().orderBy("batch_id")
 
 
 def _stream_upsert_oracle() -> str:

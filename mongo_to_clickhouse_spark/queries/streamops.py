@@ -11,10 +11,6 @@ dual-write pipeline.
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -25,10 +21,8 @@ from mongo_to_clickhouse_spark.queries.streamruntime import (
     sink_down,
     stream_pipeline_cdc,
 )
-from mongo_to_clickhouse_spark.streaming.util import (
-    await_drained,
-    stage_events_source,
-)
+from mongo_to_clickhouse_spark.streaming.pipeline import EVENTS_SCHEMA
+from mongo_to_clickhouse_spark.streaming.util import drain_events_to_memory
 
 _DEC = "decimal(18,2)"
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
@@ -220,57 +214,25 @@ STREAM_SESSION_DYNAMIC_SQL = f"""
 # rows-only: true streaming runtime (availableNow) — no SQL equivalent
 # ---------------------------------------------------------------------------
 
-def _stage_sorted_stream_source(sf_dir: str) -> tuple[str, str]:
-    """Stage the events fixture SORTED by (ts, event_id) into a single
-    file, so arrival order into a first-wins stateful operator is the
-    event-time order — the determinism stream_dedup_by_key's oracle
-    needs (see its docstring)."""
-    import pyarrow.parquet as pq
-
-    from mongo_to_clickhouse_spark.io import table_path
-    from mongo_to_clickhouse_spark.streaming.util import normalize_events_ts
-
-    work = tempfile.mkdtemp(prefix=f"dd-{uuid.uuid4().hex[:8]}-")
-    src = os.path.join(work, "source")
-    os.makedirs(src)
-    table = normalize_events_ts(pq.read_table(table_path(sf_dir, "events")))
-    table = table.sort_by([("ts", "ascending"), ("event_id", "ascending")])
-    # one row group: pyarrow's default ~1Mi-row groups would let Spark
-    # split the file at larger fixtures, breaking the arrival-order pin
-    pq.write_table(table, os.path.join(src, "p0.parquet"),
-                   row_group_size=max(table.num_rows, 1))
-    return src, work
-
-
 def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming tumbling-window count with a 10-minute watermark — the
     late-data-drop configuration (append mode only emits finalized
     windows)."""
-    from mongo_to_clickhouse_spark.streaming.pipeline import EVENTS_SCHEMA
-
-    src, _ = stage_events_source(sf_dir)
-    name = f"wm_{uuid.uuid4().hex[:8]}"
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .parquet(src)
-        .withWatermark("ts", f"{_WM_MIN} minutes")
-        .groupBy(F.window("ts", f"{_WIN_H} hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.date_format("w.start", _TS_FMT).alias("window_start"),
-            "event_type",
-            "n",
+    def build(src: str) -> DataFrame:
+        return (
+            spark.readStream.schema(EVENTS_SCHEMA)
+            .parquet(src)
+            .withWatermark("ts", f"{_WM_MIN} minutes")
+            .groupBy(F.window("ts", f"{_WIN_H} hour").alias("w"), "event_type")
+            .agg(F.count("*").alias("n"))
+            .select(
+                F.date_format("w.start", _TS_FMT).alias("window_start"),
+                "event_type",
+                "n",
+            )
         )
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_drained(q)
-    return spark.table(name)
+
+    return drain_events_to_memory(sf_dir, build)
 
 
 # Horizon oracle (round 7): with the whole fixture staged as ONE
@@ -322,26 +284,16 @@ def stream_dedup_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle states it as the ROW_NUMBER()=1 row per key. In a
     production deployment the operator's contract stays first-arrival;
     the sort is a property of the test harness, not the operator."""
-    from mongo_to_clickhouse_spark.streaming.pipeline import EVENTS_SCHEMA
+    def build(src: str) -> DataFrame:
+        return (
+            spark.readStream.schema(EVENTS_SCHEMA)
+            .parquet(src)
+            .withWatermark("ts", "1 hour")
+            .dropDuplicates(["user_id", "event_type"])
+            .select("event_id", "user_id", "event_type")
+        )
 
-    src, _ = _stage_sorted_stream_source(sf_dir)
-    name = f"dd_{uuid.uuid4().hex[:8]}"
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .parquet(src)
-        .withWatermark("ts", "1 hour")
-        .dropDuplicates(["user_id", "event_type"])
-        .select("event_id", "user_id", "event_type")
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_drained(q)
-    return spark.table(name)
+    return drain_events_to_memory(sf_dir, build, sort=True)
 
 
 # first-arrival == earliest (ts, event_id) under the sorted single-file
@@ -376,50 +328,29 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     The multi-batch re-emission semantics (the part a closed-horizon
     SQL cannot state) stay pinned by tests/test_streaming_modes.py's
     staged two-batch fixture."""
-    from mongo_to_clickhouse_spark.streaming.pipeline import EVENTS_SCHEMA
+    def build(src: str) -> DataFrame:
+        return (
+            spark.readStream.schema(EVENTS_SCHEMA)
+            .parquet(src)
+            .withWatermark("ts", "1 hour")
+            .dropDuplicatesWithinWatermark(["user_id", "event_type"])
+            .select("event_id", "user_id", "event_type")
+        )
 
-    src, _ = _stage_sorted_stream_source(sf_dir)
-    name = f"ddw_{uuid.uuid4().hex[:8]}"
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .parquet(src)
-        .withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark(["user_id", "event_type"])
-        .select("event_id", "user_id", "event_type")
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_drained(q)
-    return spark.table(name)
+    return drain_events_to_memory(sf_dir, build, sort=True)
 
 
 def stream_stateful_running_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful operator (applyInPandasWithState): per-user running
     totals maintained in the state store across micro-batches."""
-    from mongo_to_clickhouse_spark.streaming.pipeline import EVENTS_SCHEMA
     from mongo_to_clickhouse_spark.streaming.stateful import running_user_totals
 
-    src, _ = stage_events_source(sf_dir)
-    name = f"st_{uuid.uuid4().hex[:8]}"
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .parquet(src)
+    return drain_events_to_memory(
+        sf_dir,
+        lambda src: running_user_totals(
+            spark.readStream.schema(EVENTS_SCHEMA).parquet(src)),
+        "update",
     )
-    q = (
-        running_user_totals(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_drained(q)
-    return spark.table(name)
 
 
 def stream_dlq_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -429,10 +360,11 @@ def stream_dlq_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo_to_clickhouse_spark.plans.pipeline import optout_active, optout_dim
     from mongo_to_clickhouse_spark.sinks.dlq import retry_failed_batches
 
-    tenant, _ = drain_staged(spark, sf_dir, "dlq", fail_injector=sink_down)
-    active = optout_active(optout_dim(load_table(spark, sf_dir, "customer")))
-    retry_failed_batches(spark, tenant, active)  # sink recovered
-    return spark.read.parquet(tenant.sink_main_path).drop("created_at", "batch_id")
+    with drain_staged(spark, sf_dir, "dlq", fail_injector=sink_down) as (tenant, _):
+        active = optout_active(optout_dim(load_table(spark, sf_dir, "customer")))
+        retry_failed_batches(spark, tenant, active)  # sink recovered
+        return (spark.read.parquet(tenant.sink_main_path)
+                .drop("created_at", "batch_id").localCheckpoint())
 
 
 def scalar_now(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -4,18 +4,27 @@ Structured-Streaming pipeline (availableNow) and returns a small relation
 describing the observed behavior — rows-only checks by nature (SQL cannot
 express "a checkpoint survived a restart").
 
+Every id here runs the same stage → drain → release lifecycle
+(``streaming/util.py``): it stages its source into a ``call_work_dir``,
+drains its query (``await_drained``; ``drain_staged`` for a tenant's
+``run_tenant_stream``, ``drain_to_memory`` for a memory sink), and
+returns a result that no longer reads the work dir — memory-sink rows,
+a ``localCheckpoint`` of what it read from the sinks, or driver-side
+counts — so the dir is removed before the call returns and no temp view
+is left behind. A timed-out drain keeps its dir and names it.
+
 These complement the pytest suite (tests/test_streaming*.py), which pins
 the same behaviors with assertions; here they are driver-visible.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
-import shutil
-import uuid
 from dataclasses import replace
+from typing import Iterator
 
-import pyarrow.parquet as pq
+import pyarrow as pa
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -23,9 +32,17 @@ from pyspark.sql.streaming import StreamingQuery
 from mongo_to_clickhouse_spark.config import TenantConfig
 from mongo_to_clickhouse_spark.io import load_table
 from mongo_to_clickhouse_spark.plans.pipeline import optout_active, optout_dim
-from mongo_to_clickhouse_spark.streaming.pipeline import run_tenant_stream
+from mongo_to_clickhouse_spark.streaming.pipeline import (
+    EVENTS_SCHEMA,
+    run_tenant_stream,
+)
 from mongo_to_clickhouse_spark.streaming.util import (
     await_drained,
+    call_work_dir,
+    drain_events_to_memory,
+    drain_to_memory,
+    events_table,
+    stage_batch_files,
     stage_events_source,
 )
 
@@ -37,30 +54,35 @@ OUTER_JOIN_WATERMARK_MIN = 30
 OUTER_JOIN_WINDOW_HOURS = 1
 
 
-def _tenant(work: str, name: str, source: str) -> TenantConfig:
+def _tenant(work: str, name: str) -> TenantConfig:
+    base = os.path.join(work, name)
     return TenantConfig(
         name=name,
-        source_path=source,
-        sink_main_path=os.path.join(work, "main"),
-        sink_optout_path=os.path.join(work, "optout"),
-        checkpoint_path=os.path.join(work, "ckpt"),
-        dlq_path=os.path.join(work, "dlq"),
+        source_path=os.path.join(base, "source"),
+        sink_main_path=os.path.join(base, "main"),
+        sink_optout_path=os.path.join(base, "optout"),
+        checkpoint_path=os.path.join(base, "ckpt"),
+        dlq_path=os.path.join(base, "dlq"),
         max_retries=2,
         initial_retry_delay_sec=0.01,
     )
 
 
+@contextlib.contextmanager
 def drain_staged(spark: SparkSession, sf_dir: str, name: str, parts: int = 1,
-                 **stream_kw) -> tuple[TenantConfig, StreamingQuery]:
-    """Stage the events fixture as ``parts`` files, build the tenant
-    ``name`` over them and drain its ``run_tenant_stream`` (availableNow,
-    ``stream_kw`` passed on). Returns the tenant and the drained query."""
-    src, work = stage_events_source(sf_dir, parts=parts, prefix=name)
-    tenant = _tenant(work, name, src)
-    q = run_tenant_stream(spark, tenant, load_table(spark, sf_dir, "customer"),
-                          available_now=True, **stream_kw)
-    await_drained(q)
-    return tenant, q
+                 **stream_kw) -> Iterator[tuple[TenantConfig, StreamingQuery]]:
+    """In a call work dir, stage the events fixture as ``parts`` files,
+    build the tenant ``name`` over them and drain its
+    ``run_tenant_stream`` (availableNow, ``stream_kw`` passed on). Yields
+    the tenant and the drained query; the dir goes when the block exits,
+    so read the sinks inside it."""
+    with call_work_dir(name) as work:
+        tenant = _tenant(work, name)
+        stage_events_source(sf_dir, tenant.source_path, parts=parts)
+        q = run_tenant_stream(spark, tenant, load_table(spark, sf_dir, "customer"),
+                              available_now=True, **stream_kw)
+        await_drained(q)
+        yield tenant, q
 
 
 def sink_down(df: DataFrame, batch_id: int) -> None:
@@ -73,6 +95,7 @@ def _batch_counts(spark: SparkSession, path: str) -> DataFrame:
         .groupBy("batch_id")
         .agg(F.count("*").alias("n_rows"))
         .orderBy("batch_id")
+        .localCheckpoint()
     )
 
 
@@ -81,8 +104,9 @@ def stream_pipeline_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     tail (readStream micro-batch source standing in for collection.watch,
     src/main.rs:313-360): readStream → anonymize → foreachBatch dual-write,
     then read the main sink back."""
-    tenant, _ = drain_staged(spark, sf_dir, "cs")
-    return spark.read.parquet(tenant.sink_main_path).drop("created_at", "batch_id")
+    with drain_staged(spark, sf_dir, "cs") as (tenant, _):
+        return (spark.read.parquet(tenant.sink_main_path)
+                .drop("created_at", "batch_id").localCheckpoint())
 
 
 def checkpoint_resume_token(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -90,43 +114,46 @@ def checkpoint_resume_token(spark: SparkSession, sf_dir: str) -> DataFrame:
     restart from the SAME checkpoint with file 2 present — only new data
     processed, nothing duplicated. Returns per-batch row counts (2 batches,
     disjoint, summing to the full join cardinality)."""
-    src, work = stage_events_source(sf_dir, parts=2, prefix="ck")
-    # the second half arrives after the first drain
-    second, held = os.path.join(src, "p1.parquet"), os.path.join(work, "p1")
-    os.rename(second, held)
-    tenant = _tenant(work, "ck", src)
-    customer = load_table(spark, sf_dir, "customer")
-    await_drained(run_tenant_stream(spark, tenant, customer, available_now=True))
-    os.rename(held, second)
-    # same checkpoint → resumes
-    await_drained(run_tenant_stream(spark, tenant, customer, available_now=True))
-    return _batch_counts(spark, tenant.sink_main_path)
+    with call_work_dir("ck") as work:
+        tenant = _tenant(work, "ck")
+        _, second = stage_events_source(sf_dir, tenant.source_path, parts=2)
+        # the second half arrives after the first drain
+        held = os.path.join(work, "held.parquet")
+        os.rename(second, held)
+        customer = load_table(spark, sf_dir, "customer")
+        await_drained(run_tenant_stream(spark, tenant, customer, available_now=True))
+        os.rename(held, second)
+        # same checkpoint → resumes
+        await_drained(run_tenant_stream(spark, tenant, customer, available_now=True))
+        return _batch_counts(spark, tenant.sink_main_path)
 
 
 def sink_dlq_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DLQ capture (src/main.rs:918-939): sink down → the serialized batch
     lands in the dead-letter table keyed by (tenant, batch_id). Returns the
     queued batches."""
-    tenant, _ = drain_staged(spark, sf_dir, "dlqlog", fail_injector=sink_down)
-    return (
-        spark.read.parquet(tenant.dlq_path)
-        .groupBy("tenant", "batch_id")
-        .agg(F.count("*").alias("n_rows"))
-    )
+    with drain_staged(spark, sf_dir, "dlqlog", fail_injector=sink_down) as (tenant, _):
+        return (
+            spark.read.parquet(tenant.dlq_path)
+            .groupBy("tenant", "batch_id")
+            .agg(F.count("*").alias("n_rows"))
+            .localCheckpoint()
+        )
 
 
 def metric_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Throughput metric (docs/sec — the reference's adaptive-batch input,
     src/main.rs:214-228): Spark's per-query progress counters, surfaced as
     a relation."""
-    _, q = drain_staged(spark, sf_dir, "tp")
+    with drain_staged(spark, sf_dir, "tp") as (_, q):
+        progress = q.recentProgress or []
     rows = [
         Row(
             batch_id=int(p["batchId"]),
             num_input_rows=int(p["numInputRows"]),
             processed_rows_per_second=float(p["processedRowsPerSecond"]),
         )
-        for p in (q.recentProgress or [])
+        for p in progress
         if p.get("numInputRows", 0) > 0
     ]
     return spark.createDataFrame(
@@ -138,8 +165,8 @@ def stream_microbatch_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Micro-batch assembly (count/timeout flush, src/main.rs:405-443):
     2 staged files × maxFilesPerTrigger=1 → 2 complete micro-batches.
     Returns per-batch row counts."""
-    tenant, _ = drain_staged(spark, sf_dir, "mb", parts=2)
-    return _batch_counts(spark, tenant.sink_main_path)
+    with drain_staged(spark, sf_dir, "mb", parts=2) as (tenant, _):
+        return _batch_counts(spark, tenant.sink_main_path)
 
 
 def stream_rate_limited_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -151,12 +178,11 @@ def stream_rate_limited_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap while total intake is invariant."""
     rows = []
     for rate in (2, 1):
-        tenant, _ = drain_staged(spark, sf_dir, f"rl{rate}", parts=4,
-                                 max_files_per_trigger=rate)
-        sink = spark.read.parquet(tenant.sink_main_path)
-        agg = sink.agg(
-            F.countDistinct("batch_id").alias("nb"), F.count("*").alias("nr")
-        ).first()
+        with drain_staged(spark, sf_dir, f"rl{rate}", parts=4,
+                          max_files_per_trigger=rate) as (tenant, _):
+            agg = spark.read.parquet(tenant.sink_main_path).agg(
+                F.countDistinct("batch_id").alias("nb"), F.count("*").alias("nr")
+            ).first()
         rows.append(
             Row(rate_limit=rate, n_batches=int(agg["nb"]), total_rows=int(agg["nr"]))
         )
@@ -175,52 +201,48 @@ def stream_cdc_state_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstruction — pinned by pytest (test_stateful.py); here the
     materialized result is the driver-visible relation (rows-only: SQL
     cannot express cross-micro-batch state)."""
-    import tempfile
-    import uuid
-
     from mongo_to_clickhouse_spark.queries.cdcops import _oplog_sql
     from mongo_to_clickhouse_spark.streaming.stateful import cdc_state_merge
 
-    work = tempfile.mkdtemp(prefix=f"cdcmerge-{uuid.uuid4().hex[:8]}-")
-    src = os.path.join(work, "source")
-    sink = os.path.join(work, "sink")
-    ckpt = os.path.join(work, "ckpt")
+    with call_work_dir("cdcmerge") as work:
+        src = os.path.join(work, "source")
+        sink = os.path.join(work, "sink")
 
-    events = load_table(spark, sf_dir, "events")
-    events.createOrReplaceTempView("cdc_stream_events_src")
-    oplog = spark.sql(_oplog_sql("cdc_stream_events_src"))
-    oplog.repartition(3).write.parquet(src)
+        events = load_table(spark, sf_dir, "events")
+        events.createOrReplaceTempView("cdc_stream_events_src")
+        oplog = spark.sql(_oplog_sql("cdc_stream_events_src"))
+        oplog.repartition(3).write.parquet(src)
 
-    stream = spark.readStream.schema(oplog.schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(src)
+        stream = spark.readStream.schema(oplog.schema).option(
+            "maxFilesPerTrigger", 1
+        ).parquet(src)
 
-    def _sink(df: DataFrame, batch_id: int) -> None:
-        df.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
-            sink
+        def _sink(df: DataFrame, batch_id: int) -> None:
+            df.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
+                sink
+            )
+
+        q = (
+            cdc_state_merge(stream)
+            .writeStream.outputMode("update")
+            .foreachBatch(_sink)
+            .option("checkpointLocation", os.path.join(work, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
         )
+        await_drained(q)
 
-    q = (
-        cdc_state_merge(stream)
-        .writeStream.outputMode("update")
-        .foreachBatch(_sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_drained(q)
-
-    emitted = spark.read.parquet(sink)
-    latest = (
-        emitted.groupBy("doc_id")
-        .agg(
-            F.max_by(
-                F.struct("field_a", "field_b", "n_ops", "deleted"), "batch_id"
-            ).alias("s")
+        latest = (
+            spark.read.parquet(sink).groupBy("doc_id")
+            .agg(
+                F.max_by(
+                    F.struct("field_a", "field_b", "n_ops", "deleted"), "batch_id"
+                ).alias("s")
+            )
+            .select("doc_id", "s.field_a", "s.field_b", "s.n_ops", "s.deleted")
         )
-        .select("doc_id", "s.field_a", "s.field_b", "s.n_ops", "s.deleted")
-    )
-    return latest.filter(~F.col("deleted")).drop("deleted").orderBy("doc_id")
+        return (latest.filter(~F.col("deleted")).drop("deleted")
+                .orderBy("doc_id").localCheckpoint())
 
 
 def stream_retry_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -228,16 +250,12 @@ def stream_retry_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     src/main.rs:39-42, 692-743): a sink that fails twice then recovers —
     the batch lands WITHOUT touching the DLQ. Returns (attempts_used,
     rows_written, dlq_rows)."""
-    import tempfile
-
     from mongo_to_clickhouse_spark.plans.pipeline import (
         anonymized_statements,
         statements_from_events,
     )
     from mongo_to_clickhouse_spark.sinks.writers import insert_batch
 
-    work = tempfile.mkdtemp(prefix=f"rb-{uuid.uuid4().hex[:8]}-")
-    tenant = replace(_tenant(work, "rb", work), max_retries=5)
     events = load_table(spark, sf_dir, "events")
     customer = load_table(spark, sf_dir, "customer")
     anon = anonymized_statements(statements_from_events(events, customer))
@@ -250,13 +268,15 @@ def stream_retry_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
             failures["left"] -= 1
             raise RuntimeError("transient sink error")
 
-    attempts = insert_batch(anon, 0, tenant, active, flaky)
-    written = spark.read.parquet(tenant.sink_main_path).count()
-    dlq_rows = (
-        spark.read.parquet(tenant.dlq_path).count()
-        if os.path.isdir(tenant.dlq_path)
-        else 0
-    )
+    with call_work_dir("rb") as work:
+        tenant = replace(_tenant(work, "rb"), max_retries=5)
+        attempts = insert_batch(anon, 0, tenant, active, flaky)
+        written = spark.read.parquet(tenant.sink_main_path).count()
+        dlq_rows = (
+            spark.read.parquet(tenant.dlq_path).count()
+            if os.path.isdir(tenant.dlq_path)
+            else 0
+        )
     return spark.createDataFrame(
         [Row(attempts_used=attempts, rows_written=written, dlq_rows=dlq_rows)]
     )
@@ -268,17 +288,16 @@ def stream_multitenant_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo_to_clickhouse_spark.streaming.pipeline import run_multi_tenant
 
     customer = load_table(spark, sf_dir, "customer")
-    tenants = []
-    for name in ("fan_a", "fan_b"):
-        src, work = stage_events_source(sf_dir, prefix=name)
-        tenants.append(_tenant(work, name, src))
-    queries = run_multi_tenant(spark, tenants, customer, available_now=True)
-    for q in queries:
-        await_drained(q)
-    rows = [
-        Row(tenant=t.name, n_rows=spark.read.parquet(t.sink_main_path).count())
-        for t in tenants
-    ]
+    with call_work_dir("fan") as work:
+        tenants = [_tenant(work, name) for name in ("fan_a", "fan_b")]
+        for t in tenants:
+            stage_events_source(sf_dir, t.source_path)
+        for q in run_multi_tenant(spark, tenants, customer, available_now=True):
+            await_drained(q)
+        rows = [
+            Row(tenant=t.name, n_rows=spark.read.parquet(t.sink_main_path).count())
+            for t in tenants
+        ]
     return spark.createDataFrame(rows)
 
 
@@ -291,28 +310,29 @@ def stream_cache_invalidate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo_to_clickhouse_spark.sinks.writers import dual_write_batch
     from mongo_to_clickhouse_spark.streaming.pipeline import streaming_statements
 
-    src, work = stage_events_source(sf_dir, parts=2, prefix="inv")
-    tenant = _tenant(work, "inv", src)
     customer = load_table(spark, sf_dir, "customer")
-    obs_path = os.path.join(work, "observed")
-    anon = streaming_statements(spark, src, customer)
     active = optout_active(optout_dim(customer))
+    with call_work_dir("inv") as work:
+        tenant = _tenant(work, "inv")
+        stage_events_source(sf_dir, tenant.source_path, parts=2)
+        obs_path = os.path.join(work, "observed")
+        anon = streaming_statements(spark, tenant.source_path, customer)
 
-    def _batch(df, batch_id):
-        n_dim = active.count()  # a fresh read, per batch
-        spark.createDataFrame([Row(batch_id=batch_id, dim_rows=n_dim)]).write.mode(
-            "append"
-        ).parquet(obs_path)
-        dual_write_batch(df, batch_id, tenant, active)
+        def _batch(df, batch_id):
+            n_dim = active.count()  # a fresh read, per batch
+            spark.createDataFrame([Row(batch_id=batch_id, dim_rows=n_dim)]).write.mode(
+                "append"
+            ).parquet(obs_path)
+            dual_write_batch(df, batch_id, tenant, active)
 
-    q = (
-        anon.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", tenant.checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_drained(q)
-    return spark.read.parquet(obs_path).orderBy("batch_id")
+        q = (
+            anon.writeStream.foreachBatch(_batch)
+            .option("checkpointLocation", tenant.checkpoint_path)
+            .trigger(availableNow=True)
+            .start()
+        )
+        await_drained(q)
+        return spark.read.parquet(obs_path).orderBy("batch_id").localCheckpoint()
 
 
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -329,45 +349,32 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ever late-dropped. The memory-sink contents therefore equal the
     batch inner join exactly, which is what STREAM_STREAM_JOIN_SQL
     states."""
-    from mongo_to_clickhouse_spark.streaming.pipeline import EVENTS_SCHEMA
 
-    src, _work = stage_events_source(sf_dir, prefix="ssj")
-
-    def _side(types, alias):
-        return (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .parquet(src)
-            .filter(F.col("event_type").isin(*types))
-            .selectExpr(
-                f"event_id AS {alias}_id",
-                "user_id",
-                f"ts AS {alias}_ts",
+    def build(src: str) -> DataFrame:
+        def _side(types, alias):
+            return (
+                spark.readStream.schema(EVENTS_SCHEMA)
+                .parquet(src)
+                .filter(F.col("event_type").isin(*types))
+                .selectExpr(
+                    f"event_id AS {alias}_id",
+                    "user_id",
+                    f"ts AS {alias}_ts",
+                )
+                .withWatermark(f"{alias}_ts", "30 minutes")
             )
-            .withWatermark(f"{alias}_ts", "30 minutes")
-        )
 
-    purchases = _side(["purchase"], "purchase")
-    clicks = _side(["click", "view", "signup", "error"], "click")
-    joined = purchases.join(
-        clicks,
-        (purchases.user_id == clicks.user_id)
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("click_ts") <= F.col("purchase_ts")),
-        "inner",
-    ).select("purchase_id", "click_id", purchases.user_id.alias("user_id"))
+        purchases = _side(["purchase"], "purchase")
+        clicks = _side(["click", "view", "signup", "error"], "click")
+        return purchases.join(
+            clicks,
+            (purchases.user_id == clicks.user_id)
+            & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 1 HOUR"))
+            & (F.col("click_ts") <= F.col("purchase_ts")),
+            "inner",
+        ).select("purchase_id", "click_id", purchases.user_id.alias("user_id"))
 
-    import uuid as _uuid
-
-    name = f"ssj_{_uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_drained(q)
-    return spark.table(name)
+    return drain_events_to_memory(sf_dir, build)
 
 
 def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -389,20 +396,13 @@ def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase's window; availableNow's trailing no-data micro-batch then
     flushes all remaining unmatched state. Batch-equivalence (== the
     batch LEFT JOIN) is pinned by tests/test_stream_stream_join.py."""
-    import uuid as _uuid
-
-    import pyarrow as pa
-
-    from mongo_to_clickhouse_spark.streaming.pipeline import EVENTS_SCHEMA
-
-    src, work = stage_events_source(sf_dir, prefix="ssoj")
     # A far-future sentinel pushes the final watermark past every real
     # purchase's join window; availableNow's trailing no-data micro-batch
     # then flushes all remaining unmatched state as null matches.
     # Hard-won staging constraints (each found by a failure):
     #
-    # - TWO physically distinct source dirs, one per side (hardlinked
-    #   data file + per-side sentinel): two readStreams of the SAME path
+    # - TWO physically distinct source dirs, one per side (data file +
+    #   per-side sentinel): two readStreams of the SAME path
     #   deduplicate into one shared file source, and under availableNow
     #   that shared source serves only its first file — the sentinels
     #   are never ingested. Distinct dirs = distinct sources, which is
@@ -419,9 +419,10 @@ def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     #   be pushed below the EventTimeWatermark and prune the sentinel
     #   row-groups at the parquet scan (min=max=-1 footer stats), which
     #   is exactly how an earlier version lost its clock advance;
-    # - sentinel mtimes sit just after the data file's (the file source
-    #   ignores files older than maxFileAge=7d relative to the newest).
-    table = pq.read_table(os.path.join(src, "p0.parquet"))
+    # - each sentinel is staged as the batch file after the data file
+    #   (the file source ignores files older than maxFileAge=7d relative
+    #   to the newest).
+    table = events_table(sf_dir)
     idx_ts = table.schema.get_field_index("ts")
     idx_et = table.schema.get_field_index("event_type")
     idx_uid = table.schema.get_field_index("user_id")
@@ -437,65 +438,46 @@ def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     window_us = OUTER_JOIN_WINDOW_HOURS * 3_600_000_000
     sentinel_ts_us = max_us + wm_us + window_us + 3_600_000_000
 
-    def _side_dir(side_type: str) -> str:
-        d = os.path.join(work, f"side_{side_type}")
-        os.makedirs(d)
-        try:
-            os.link(os.path.join(src, "p0.parquet"), os.path.join(d, "p0.parquet"))
-        except OSError:  # filesystems without hardlinks (overlay/remote tmpfs)
-            shutil.copy(os.path.join(src, "p0.parquet"), os.path.join(d, "p0.parquet"))
-        sent = table.slice(0, 1)
-        sent = sent.set_column(
-            idx_ts, "ts",
-            pa.array([sentinel_ts_us], pa.int64()).cast(pa.timestamp("us")),
-        )
-        sent = sent.set_column(idx_et, "event_type", pa.array([side_type]))
-        sent = sent.set_column(idx_uid, "user_id", pa.array([-1], pa.int64()))
-        path = os.path.join(d, "p1_sentinel.parquet")
-        pq.write_table(sent, path)
-        stamp = os.path.getmtime(os.path.join(d, "p0.parquet")) + 1
-        os.utime(path, (stamp, stamp))
-        return d
+    with call_work_dir("ssoj") as work:
 
-    def _side(types, alias):
-        return (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .parquet(_side_dir(types[0]))
-            .selectExpr(
-                f"event_id AS {alias}_id",
-                "user_id",
-                f"ts AS {alias}_ts",
-                "event_type",
+        def _side(types, alias):
+            sent = table.slice(0, 1)
+            sent = sent.set_column(
+                idx_ts, "ts",
+                pa.array([sentinel_ts_us], pa.int64()).cast(pa.timestamp("us")),
             )
-            # watermark BEFORE the type filter: the sentinel advances the
-            # event clock on this side, then drops out of the join input
-            .withWatermark(f"{alias}_ts", f"{OUTER_JOIN_WATERMARK_MIN} minutes")
-            .filter(F.col("event_type").isin(*types))
-            .drop("event_type")
-        )
+            sent = sent.set_column(idx_et, "event_type", pa.array([types[0]]))
+            sent = sent.set_column(idx_uid, "user_id", pa.array([-1], pa.int64()))
+            side_dir = os.path.join(work, f"side_{types[0]}")
+            stage_batch_files(side_dir, [table, sent])
+            return (
+                spark.readStream.schema(EVENTS_SCHEMA)
+                .parquet(side_dir)
+                .selectExpr(
+                    f"event_id AS {alias}_id",
+                    "user_id",
+                    f"ts AS {alias}_ts",
+                    "event_type",
+                )
+                # watermark BEFORE the type filter: the sentinel advances the
+                # event clock on this side, then drops out of the join input
+                .withWatermark(f"{alias}_ts", f"{OUTER_JOIN_WATERMARK_MIN} minutes")
+                .filter(F.col("event_type").isin(*types))
+                .drop("event_type")
+            )
 
-    purchases = _side(["purchase"], "purchase")
-    clicks = _side(["click"], "click")
-    joined = purchases.join(
-        clicks,
-        (purchases.user_id == clicks.user_id)
-        & (F.col("click_ts")
-           >= F.col("purchase_ts") - F.expr(f"INTERVAL {OUTER_JOIN_WINDOW_HOURS} HOUR"))
-        & (F.col("click_ts") <= F.col("purchase_ts")),
-        "left_outer",
-    ).select("purchase_id", "click_id", purchases.user_id.alias("user_id"))
-
-    name = f"ssoj_{_uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_drained(q)
-    # sentinel emissions dropped HERE, on the static sink read (see above)
-    return spark.table(name).filter(F.col("user_id") != -1)
+        purchases = _side(["purchase"], "purchase")
+        clicks = _side(["click"], "click")
+        joined = purchases.join(
+            clicks,
+            (purchases.user_id == clicks.user_id)
+            & (F.col("click_ts")
+               >= F.col("purchase_ts") - F.expr(f"INTERVAL {OUTER_JOIN_WINDOW_HOURS} HOUR"))
+            & (F.col("click_ts") <= F.col("purchase_ts")),
+            "left_outer",
+        ).select("purchase_id", "click_id", purchases.user_id.alias("user_id"))
+        # sentinel emissions dropped HERE, on the static sink read (see above)
+        return drain_to_memory(joined).filter(F.col("user_id") != -1)
 
 
 def stream_session_timeout_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -503,8 +485,8 @@ def stream_session_timeout_eviction(spark: SparkSession, sf_dir: str) -> DataFra
     (applyInPandasWithState + EventTimeTimeout) — the reference's
     flush-on-idle batch assembler as a Spark state-lifecycle feature.
 
-    Staging makes eviction deterministic in EVENT TIME: events are
-    range-partitioned by ts into 3 time-contiguous files (sessions
+    Staging makes eviction deterministic in EVENT TIME: events are cut
+    by ts into 3 time-contiguous slices, one file each (sessions
     accumulate state across micro-batches under maxFilesPerTrigger=1),
     then a far-future sentinel row (user_id=-1) whose event time pushes
     the watermark past every real user's `last_event + gap` deadline —
@@ -521,24 +503,11 @@ def stream_session_timeout_eviction(spark: SparkSession, sf_dir: str) -> DataFra
     (count, min ts, max ts) aggregate, stated as SQL. Multi-session
     eviction under a small gap stays pinned by tests/test_stateful.py.
 
-    Scale posture: staging is fully distributed —
-    ``repartitionByRange(3, ts).sortWithinPartitions(ts)`` + a parquet
-    write (range partitioner guarantees partition i's timestamps all
-    precede partition i+1's, so renaming part files in part-number order
-    yields time-contiguous micro-batches). The driver only touches
-    min/max (1-row agg) and file renames; no table rows ever reach it —
-    at 100× the data this stays an executor-side shuffle+write."""
-    import glob as _glob
-    import tempfile
-    import uuid as _uuid
-
-    import pyarrow as pa
-
+    Scale posture: each slice is a filtered scan written by one
+    executor task (``stage_batch_files``); the driver only touches
+    min/max (1-row agg) and file renames — no table rows ever reach it."""
     from mongo_to_clickhouse_spark.streaming.stateful import idle_session_close
 
-    work = tempfile.mkdtemp(prefix=f"sess-{_uuid.uuid4().hex[:8]}-")
-    src = os.path.join(work, "source")
-    os.makedirs(src)
     ev = (
         load_table(spark, sf_dir, "events")
         # ts is TIMESTAMP_NTZ; unix_micros needs TIMESTAMP — the cast is
@@ -563,42 +532,24 @@ def stream_session_timeout_eviction(spark: SparkSession, sf_dir: str) -> DataFra
     # passes every real user's deadline
     gap_ms = int(hi_us - lo_us) // 1000 + 3_600_000
     sentinel_us = int(hi_us) + (gap_ms + 10_000) * 1_000
-    staged = os.path.join(work, "staged")
-    (
-        ev.repartitionByRange(3, "ts_us")
-        .sortWithinPartitions("ts_us")
-        .write.parquet(staged)
-    )
-    parts = sorted(_glob.glob(os.path.join(staged, "part-*.parquet")))
-    for i, part in enumerate(parts):
-        path = os.path.join(src, f"b{i}.parquet")
-        os.rename(part, path)
-        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))  # batch order
-    sent_path = os.path.join(src, f"b{len(parts)}.parquet")
-    pq.write_table(
-        pa.table({"user_id": pa.array([-1], pa.int64()),
-                  "ts_us": pa.array([sentinel_us], pa.int64())}),
-        sent_path,
-    )
-    os.utime(sent_path, (1_700_000_000 + len(parts),) * 2)
+    width = int(hi_us - lo_us) // 3 + 1
+    slices = [
+        ev.where(F.expr(f"(ts_us - {int(lo_us)}) DIV {width}") == k)
+        for k in range(3)
+    ]
+    sentinel = pa.table({"user_id": pa.array([-1], pa.int64()),
+                         "ts_us": pa.array([sentinel_us], pa.int64())})
 
-    name = f"sess_{_uuid.uuid4().hex[:8]}"
-    stream = (
-        spark.readStream.schema("user_id bigint, ts_us bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .withColumn("ts", F.timestamp_micros("ts_us"))
-    )
-    q = (
-        idle_session_close(stream, gap_ms=gap_ms)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_drained(q)
-    return spark.table(name)
+    with call_work_dir("sess") as work:
+        src = os.path.join(work, "source")
+        stage_batch_files(src, [*slices, sentinel])
+        stream = (
+            spark.readStream.schema("user_id bigint, ts_us bigint")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+            .withColumn("ts", F.timestamp_micros("ts_us"))
+        )
+        return drain_to_memory(idle_session_close(stream, gap_ms=gap_ms), "update")
 
 
 def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -609,9 +560,6 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     op degrades to `running_user_totals_cents`, the applyInPandasWithState
     twin with identical projection, state, and output — either path must
     telescope to the batch aggregate the oracle computes."""
-    import tempfile
-    import uuid as _uuid
-
     from pyspark.sql.window import Window
 
     from mongo_to_clickhouse_spark.streaming.stateful import (
@@ -620,21 +568,7 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         tws_available,
     )
 
-    work = tempfile.mkdtemp(prefix=f"tws-{_uuid.uuid4().hex[:8]}-")
-    src = os.path.join(work, "source")
-    os.makedirs(src)
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    for i in range(3):
-        ev.where(F.col("event_id") % 3 == i).drop("event_id").write.parquet(
-            os.path.join(src, f"slice{i}"), mode="overwrite"
-        )
-        os.utime(os.path.join(src, f"slice{i}"))
-    name = f"tws_{_uuid.uuid4().hex[:8]}"
-    stream = (
-        spark.readStream.schema("user_id bigint, value double")
-        .option("maxFilesPerTrigger", 8)
-        .parquet(f"{src}/slice*")
-    )
     conf_key = "spark.sql.streaming.stateStore.providerClass"
     prior = spark.conf.get(conf_key, None)
     use_tws = tws_available()
@@ -645,16 +579,19 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             "RocksDBStateStoreProvider",
         )
     try:
-        op = running_user_totals_tws if use_tws else running_user_totals_cents
-        q = (
-            op(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_drained(q)
+        with call_work_dir("tws") as work:
+            src = os.path.join(work, "source")
+            stage_batch_files(src, [
+                ev.where(F.col("event_id") % 3 == i).drop("event_id")
+                for i in range(3)
+            ])
+            stream = (
+                spark.readStream.schema("user_id bigint, value double")
+                .option("maxFilesPerTrigger", 1)
+                .parquet(src)
+            )
+            op = running_user_totals_tws if use_tws else running_user_totals_cents
+            snap = drain_to_memory(op(stream), "update")
     finally:
         if use_tws:
             if prior is None:
@@ -663,7 +600,6 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark.conf.set(conf_key, prior)
     # final state per user = the max-n emission (totals are monotone in
     # n), which must equal the batch aggregate — oracle-checked
-    snap = spark.table(name)
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
         snap.withColumn("rn", F.row_number().over(w))
@@ -703,33 +639,24 @@ def stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     the correct production contract.) The emitted prefix is
     deterministic, so the memory-sink contents hash-match the oracle's
     closed-day rollup."""
-    from mongo_to_clickhouse_spark.streaming.pipeline import EVENTS_SCHEMA
 
-    src, _work = stage_events_source(sf_dir, prefix="chw")
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .parquet(src)
-        .withWatermark("ts", "1 hour")
-    )
-    hourly = stream.groupBy(
-        F.window("ts", "1 hour").alias("w"), "event_type"
-    ).agg(F.count("*").alias("n_hourly"))
-    daily = hourly.groupBy(
-        F.window(F.window_time("w"), "1 day").alias("d"), "event_type"
-    ).agg(
-        F.sum("n_hourly").cast("bigint").alias("n_daily"),
-        F.count("*").cast("bigint").alias("n_hours"),
-    )
-    name = f"chw_{uuid.uuid4().hex[:8]}"
-    q = (
-        daily.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_drained(q)
-    return spark.table(name).select(
+    def build(src: str) -> DataFrame:
+        stream = (
+            spark.readStream.schema(EVENTS_SCHEMA)
+            .parquet(src)
+            .withWatermark("ts", "1 hour")
+        )
+        hourly = stream.groupBy(
+            F.window("ts", "1 hour").alias("w"), "event_type"
+        ).agg(F.count("*").alias("n_hourly"))
+        return hourly.groupBy(
+            F.window(F.window_time("w"), "1 day").alias("d"), "event_type"
+        ).agg(
+            F.sum("n_hourly").cast("bigint").alias("n_daily"),
+            F.count("*").cast("bigint").alias("n_hours"),
+        )
+
+    return drain_events_to_memory(sf_dir, build).select(
         F.date_format("d.start", "yyyy-MM-dd").alias("day"),
         "event_type",
         "n_daily",

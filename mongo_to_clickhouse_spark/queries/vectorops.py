@@ -780,116 +780,99 @@ def stream_ivf_index_upsert(
     {_IVF_ASSIGN_BUCKETS} ways); the index is an append-only parquet
     table keyed by cent_id exactly like a production inverted-list
     store; every count is computed engine-side. Driver work is
-    control-plane only (staging + stream wiring + the
-    {_STREAM_IVF_BATCHES}-row accounting collect before tempdir
-    cleanup)."""
-    import shutil
-    import tempfile
+    control-plane only (staging + stream wiring); the
+    {_STREAM_IVF_BATCHES}-row accounting is ``localCheckpoint``-ed
+    before the call's work dir is removed."""
     import uuid
 
-    from mongo_to_clickhouse_spark.streaming.util import await_drained
+    from mongo_to_clickhouse_spark.streaming.util import (
+        await_drained,
+        call_work_dir,
+        stage_batch_files,
+    )
 
     # n_batches / work_dir are test knobs (the round-11 soak gate drives
-    # ~50 micro-batches and inspects the checkpoint before cleanup); the
+    # ~50 micro-batches and inspects the checkpoint after the call); the
     # registry id always runs the default so the unrolled oracle holds
     nb = n_batches or _STREAM_IVF_BATCHES
-    work = work_dir or tempfile.mkdtemp(
-        prefix=f"ivfup-{uuid.uuid4().hex[:8]}-"
-    )
-    src = os.path.join(work, "source")
-    cent_path = os.path.join(work, "centroids")
-    lists_path = os.path.join(work, "lists")
-    acct = os.path.join(work, "acct")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(src)
+    with call_work_dir("ivfup", given=work_dir) as work:
+        src = os.path.join(work, "source")
+        cent_path = os.path.join(work, "centroids")
+        lists_path = os.path.join(work, "lists")
+        acct = os.path.join(work, "acct")
+        ckpt = os.path.join(work, "ckpt")
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    cents = emb.filter(
-        F.col("vec_id") % _cent_stride(spark, sf_dir) == 0
-    ).select(F.col("vec_id").alias("cent_id"),
-             F.col("embedding").alias("cent_emb"))
-    cents.write.parquet(cent_path)
-
-    # seed the inverted lists with the historical split through the SAME
-    # kernel the stream uses (the centroid RELATION is written above from
-    # the full table, so whether a centroid's own vector is historical or
-    # streamed only changes WHEN it enters the lists, not the assignment)
-    hist = emb.filter(F.col("vec_id") % 10 != 3)
-    kernel_assign_frame(
-        hist, spark.read.parquet(cent_path)
-    ).write.parquet(lists_path)
-
-    new_vecs = emb.filter(F.col("vec_id") % 10 == 3)
-    base_t = 1_700_000_000
-    for k in range(nb):
-        tmp = os.path.join(work, f"stage{k}")
-        new_vecs.filter(
-            F.col("vec_id") % nb == k
-        ).coalesce(1).write.parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        dst = os.path.join(src, f"b{k}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (base_t + k, base_t + k))
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        tag = uuid.uuid4().hex[:8]
-        assigned = kernel_assign_frame(
-            batch_df.select("vec_id", "embedding"),
-            sess.read.parquet(cent_path),
+        emb = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
         )
-        # stage, then append (never read and write one dir in one job)
-        ins = os.path.join(work, f"ins_{tag}")
-        assigned.write.parquet(ins)
-        sess.read.parquet(ins).write.mode("append").parquet(lists_path)
-        lv, iv = f"ivf_l_{tag}", f"ivf_i_{tag}"
-        sess.read.parquet(lists_path).createOrReplaceTempView(lv)
-        sess.read.parquet(ins).createOrReplaceTempView(iv)
-        sess.sql(f"""
-            WITH per AS (
-                SELECT cent_id, CAST(COUNT(*) AS BIGINT) AS c
-                FROM {lv} GROUP BY cent_id
+        cents = emb.filter(
+            F.col("vec_id") % _cent_stride(spark, sf_dir) == 0
+        ).select(F.col("vec_id").alias("cent_id"),
+                 F.col("embedding").alias("cent_emb"))
+        cents.write.parquet(cent_path)
+
+        # seed the inverted lists with the historical split through the
+        # SAME kernel the stream uses (the centroid RELATION is written
+        # above from the full table, so whether a centroid's own vector is
+        # historical or streamed only changes WHEN it enters the lists,
+        # not the assignment)
+        hist = emb.filter(F.col("vec_id") % 10 != 3)
+        kernel_assign_frame(
+            hist, spark.read.parquet(cent_path)
+        ).write.parquet(lists_path)
+
+        new_vecs = emb.filter(F.col("vec_id") % 10 == 3)
+        stage_batch_files(src, [new_vecs.filter(F.col("vec_id") % nb == k)
+                                for k in range(nb)])
+
+        def upsert(batch_df: DataFrame, batch_id: int) -> None:
+            sess = batch_df.sparkSession
+            tag = uuid.uuid4().hex[:8]
+            assigned = kernel_assign_frame(
+                batch_df.select("vec_id", "embedding"),
+                sess.read.parquet(cent_path),
             )
-            SELECT CAST({batch_id} AS BIGINT) AS batch_id,
-                   CAST((SELECT COUNT(*) FROM {iv}) AS BIGINT)
-                       AS n_assigned,
-                   CAST((SELECT SUM(c) FROM per) AS BIGINT)
-                       AS n_index_total,
-                   CAST((SELECT SUM(c * c) FROM per) AS BIGINT)
-                       AS sum_list_sq,
-                   CAST((SELECT MAX(c) FROM per) AS BIGINT) AS max_list
-        """).write.mode("append").parquet(acct)
-        # the per-batch views are uuid-tagged; drop them so a long-lived
-        # session (bench reps, parity sweeps) doesn't accumulate catalog
-        # entries — 2 views per micro-batch otherwise (ADVICE r9)
-        sess.catalog.dropTempView(lv)
-        sess.catalog.dropTempView(iv)
+            # stage, then append (never read and write one dir in one job)
+            ins = os.path.join(work, f"ins_{tag}")
+            assigned.write.parquet(ins)
+            sess.read.parquet(ins).write.mode("append").parquet(lists_path)
+            lv, iv = f"ivf_l_{tag}", f"ivf_i_{tag}"
+            sess.read.parquet(lists_path).createOrReplaceTempView(lv)
+            sess.read.parquet(ins).createOrReplaceTempView(iv)
+            sess.sql(f"""
+                WITH per AS (
+                    SELECT cent_id, CAST(COUNT(*) AS BIGINT) AS c
+                    FROM {lv} GROUP BY cent_id
+                )
+                SELECT CAST({batch_id} AS BIGINT) AS batch_id,
+                       CAST((SELECT COUNT(*) FROM {iv}) AS BIGINT)
+                           AS n_assigned,
+                       CAST((SELECT SUM(c) FROM per) AS BIGINT)
+                           AS n_index_total,
+                       CAST((SELECT SUM(c * c) FROM per) AS BIGINT)
+                           AS sum_list_sq,
+                       CAST((SELECT MAX(c) FROM per) AS BIGINT) AS max_list
+            """).write.mode("append").parquet(acct)
+            # the per-batch views are uuid-tagged; drop them so a
+            # long-lived session (bench reps, parity sweeps) doesn't
+            # accumulate catalog entries — 2 views per micro-batch
+            # otherwise (ADVICE r9)
+            sess.catalog.dropTempView(lv)
+            sess.catalog.dropTempView(iv)
 
-    stream = (
-        spark.readStream.schema("vec_id LONG, embedding ARRAY<DOUBLE>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_drained(q)
-    rows = spark.read.parquet(acct).orderBy("batch_id").collect()
-    schema = spark.read.parquet(acct).schema
-    if work_dir is None:
-        shutil.rmtree(work, ignore_errors=True)
-    from mongo_to_clickhouse_spark.operators.literalrel import (
-        literal_rows_df,
-    )
-
-    return literal_rows_df(
-        spark, [tuple(r) for r in rows], schema
-    ).orderBy("batch_id")
+        stream = (
+            spark.readStream.schema("vec_id LONG, embedding ARRAY<DOUBLE>")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        q = (
+            stream.writeStream.foreachBatch(upsert)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        await_drained(q)
+        return spark.read.parquet(acct).localCheckpoint().orderBy("batch_id")
 
 
 def _stream_ivf_oracle() -> str:

@@ -220,12 +220,6 @@ _CONTROL_PLANE_WHITELIST = {
      "emb_covariance(spark, sf_dir).collect()"),
     # distinct failed batch ids in the DLQ: bounded by batch count, not rows
     ("sinks/dlq.py", 'dlq.select("batch_id").distinct().collect()'),
-    # stream upsert accounting: one row per micro-batch (3), collected so
-    # the tempfile work dir can be removed before returning
-    ("queries/dedupops.py",
-     'spark.read.parquet(acct).orderBy("batch_id").collect()'),
-    ("queries/vectorops.py",
-     'spark.read.parquet(acct).orderBy("batch_id").collect()'),
     # matrix-free PCA power iteration: per-round per-dim aggregates —
     # O(d) rows with d = 64 the fixed embedding dim, independent of
     # corpus size (the n-row work stays in the Arrow kernel)

@@ -308,3 +308,17 @@ def test_aqe_skew_join_engages_and_its_limits(spark):
     plan = j._jdf.queryExecution().executedPlan().toString()
     assert "skew=true" in plan, "AQE must split the hot partition"
     assert "skewed" in plan  # AQEShuffleRead marks the split read
+
+
+def test_ngram_sweep_plan_fingerprint_is_stable(spark, smoke_sf_dir):
+    """Two DISTINCT aggregates in one Aggregate make Catalyst's distinct
+    rewrite emit its Expand groups in a run-dependent order, so the
+    sweep's fingerprint changed between builds of one checkout."""
+    from mongo_to_clickhouse_spark.plans.meta import plan_fingerprint
+    from mongo_to_clickhouse_spark.queries.corpusops import (
+        decontaminate_ngram_sweep,
+    )
+
+    prints = {plan_fingerprint(decontaminate_ngram_sweep(spark, smoke_sf_dir))
+              for _ in range(4)}
+    assert len(prints) == 1

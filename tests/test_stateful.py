@@ -7,52 +7,37 @@ from __future__ import annotations
 
 import os
 
-import pyarrow.parquet as pq
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from mongo_to_clickhouse_spark.io import load_table
 from mongo_to_clickhouse_spark.streaming.pipeline import EVENTS_SCHEMA
 from mongo_to_clickhouse_spark.streaming.stateful import running_user_totals
-from mongo_to_clickhouse_spark.streaming.util import normalize_events_ts
+from mongo_to_clickhouse_spark.streaming.util import (
+    drain_to_memory,
+    stage_events_source,
+)
 
 SRC = "/root/testdata/sf0.001"
 
 
 def test_stateful_running_totals_across_batches(spark, tmp_path):
     src = os.path.join(str(tmp_path), "source")
-    os.makedirs(src)
-    table = normalize_events_ts(pq.read_table(os.path.join(SRC, "events.parquet")))
-    n = table.num_rows
-    for i in range(3):
-        pq.write_table(
-            table.slice(i * n // 3, (i + 1) * n // 3 - i * n // 3),
-            os.path.join(src, f"p{i}.parquet"),
-        )
+    stage_events_source(SRC, src, parts=3)
 
     stream = (
         spark.readStream.schema(EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = (
-        running_user_totals(stream)
-        .writeStream.format("memory")
-        .queryName("state_out")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+    state_out = drain_to_memory(running_user_totals(stream), "update")
 
     # latest emission per user == batch ground truth
-    out = spark.sql(
-        """
-        SELECT user_id, n_events, total_value FROM (
-            SELECT *, row_number() OVER (PARTITION BY user_id
-                                         ORDER BY n_events DESC) AS rn
-            FROM state_out
-        ) WHERE rn = 1
-        """
+    latest = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
+    out = (
+        state_out.withColumn("rn", F.row_number().over(latest))
+        .where("rn = 1")
+        .select("user_id", "n_events", "total_value")
     )
     truth = (
         load_table(spark, SRC, "events")
@@ -70,9 +55,7 @@ def test_stateful_running_totals_across_batches(spark, tmp_path):
         assert abs(got[k][1] - exp[k][1]) < 0.05
     # state really crossed micro-batches: some user must have been emitted
     # in more than one batch with growing counts
-    multi = spark.sql(
-        "SELECT user_id, COUNT(*) AS c FROM state_out GROUP BY user_id HAVING c > 1"
-    )
+    multi = state_out.groupBy("user_id").count().where("count > 1")
     assert multi.count() > 0
 
 

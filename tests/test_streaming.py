@@ -25,6 +25,7 @@ from mongo_to_clickhouse_spark.streaming.pipeline import (
     run_multi_tenant,
     run_tenant_stream,
 )
+from mongo_to_clickhouse_spark.streaming.util import stage_events_source
 
 SRC = "/root/testdata/sf0.001"
 
@@ -41,26 +42,6 @@ def _tenant(tmp, name="t1", source=None) -> TenantConfig:
         max_retries=2,
         initial_retry_delay_sec=0.01,
     )
-
-
-def _stage_events(dest_dir: str, parts: int = 1) -> list[str]:
-    """Copy the fixture events parquet into a staging dir, optionally split
-    into row-slices (one file per part) for incremental-arrival tests.
-    Normalized through the same seam as the production staging helper so a
-    fixture-encoding change cannot silently skew these tests."""
-    from mongo_to_clickhouse_spark.streaming.util import normalize_events_ts
-
-    os.makedirs(dest_dir, exist_ok=True)
-    table = normalize_events_ts(pq.read_table(os.path.join(SRC, "events.parquet")))
-    n = table.num_rows
-    paths = []
-    for i in range(parts):
-        lo = i * n // parts
-        hi = (i + 1) * n // parts
-        p = os.path.join(dest_dir, f"part{i}.parquet")
-        pq.write_table(table.slice(lo, hi - lo), p)
-        paths.append(p)
-    return paths
 
 
 def _expected_counts(spark):
@@ -104,7 +85,7 @@ def _job_descriptions(spark, first_job: int, writes_only: bool = False) -> list:
 
 def test_stream_drain_and_route(spark, tmp_path):
     t = _tenant(tmp_path)
-    staged = _stage_events(t.source_path)
+    staged = stage_events_source(SRC, t.source_path)
     customer = load_table(spark, SRC, "customer")
 
     first_job = spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
@@ -140,7 +121,7 @@ def test_stream_output_equals_batch_values(spark, tmp_path):
     from mongo_to_clickhouse_spark.plans.pipeline import cdc_transform
 
     t = _tenant(tmp_path, name="eq")
-    _stage_events(t.source_path)
+    stage_events_source(SRC, t.source_path)
     customer = load_table(spark, SRC, "customer")
     q = run_tenant_stream(spark, t, customer, available_now=True)
     q.awaitTermination(120)
@@ -161,7 +142,7 @@ def test_stream_output_equals_batch_values(spark, tmp_path):
 
 def test_dlq_capture_and_replay(spark, tmp_path, caplog):
     t = _tenant(tmp_path)
-    _stage_events(t.source_path)
+    stage_events_source(SRC, t.source_path)
     customer = load_table(spark, SRC, "customer")
 
     def always_fail(df, batch_id):
@@ -212,7 +193,7 @@ def test_dlq_requeue_after_checkpoint_loss_is_idempotent(spark, tmp_path):
     import shutil
 
     t = _tenant(tmp_path, name="requeue")
-    _stage_events(t.source_path)
+    stage_events_source(SRC, t.source_path)
     customer = load_table(spark, SRC, "customer")
 
     def always_fail(df, batch_id):
@@ -292,7 +273,7 @@ def test_micro_batch_writes_both_sinks_in_one_job(spark, tmp_path):
     """A one-file micro-batch lands both tables with ONE write job, tagged
     with the tenant and batch id, and leaves only the batch directories."""
     t = _tenant(tmp_path, name="onejob")
-    _stage_events(t.source_path)
+    stage_events_source(SRC, t.source_path)
     first_job = spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
     q = run_tenant_stream(spark, t, load_table(spark, SRC, "customer"),
                           available_now=True)
@@ -376,7 +357,7 @@ def test_dim_plan_built_once_per_stream(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(pipeline, "optout_dim", counted)
     t = _tenant(tmp_path, name="once")
-    _stage_events(t.source_path, parts=2)
+    stage_events_source(SRC, t.source_path, parts=2)
     q = run_tenant_stream(spark, t, load_table(spark, SRC, "customer"),
                           available_now=True)
     q.awaitTermination(120)
@@ -398,7 +379,7 @@ def test_tenant_salt_changes_hashes_not_routing(spark, tmp_path):
     sinks = {}
     for name, salt in (("plain", "fixture-salt"), ("salted", "s3cret")):
         t = replace(_tenant(tmp_path, name=name), encryption_salt=salt)
-        _stage_events(t.source_path)
+        stage_events_source(SRC, t.source_path)
         run_tenant_stream(spark, t, customer,
                           available_now=True).awaitTermination(120)
         sinks[name] = [
@@ -462,19 +443,18 @@ def test_insert_retry_backoff_policy(spark, tmp_path):
 
 def test_checkpoint_resume_no_duplicates(spark, tmp_path):
     t = _tenant(tmp_path)
-    os.makedirs(t.source_path, exist_ok=True)
     customer = load_table(spark, SRC, "customer")
 
     # stage only the first half, drain, stop
-    table = pq.read_table(os.path.join(SRC, "events.parquet"))
-    n = table.num_rows
-    pq.write_table(table.slice(0, n // 2), os.path.join(t.source_path, "a.parquet"))
+    _, second = stage_events_source(SRC, t.source_path, parts=2)
+    held = os.path.join(str(tmp_path), "held.parquet")
+    os.rename(second, held)
     q1 = run_tenant_stream(spark, t, customer, available_now=True)
     q1.awaitTermination(120)
     first = spark.read.parquet(t.sink_main_path).count()
 
     # second half arrives; restart from the SAME checkpoint
-    pq.write_table(table.slice(n // 2), os.path.join(t.source_path, "b.parquet"))
+    os.rename(held, second)
     q2 = run_tenant_stream(spark, t, customer, available_now=True)
     q2.awaitTermination(120)
 
@@ -490,7 +470,7 @@ def test_multi_tenant_fanout(spark, tmp_path):
     tenants = []
     for name in ("t1", "t2"):
         t = _tenant(tmp_path, name=name)
-        _stage_events(t.source_path)
+        stage_events_source(SRC, t.source_path)
         tenants.append(t)
     queries = run_multi_tenant(spark, tenants, customer, available_now=True)
     for q in queries:
@@ -506,7 +486,7 @@ def test_dlq_replay_after_full_drain_is_noop(spark, tmp_path):
     with zero parquet files returns 0 instead of raising
     UNABLE_TO_INFER_SCHEMA."""
     t = _tenant(tmp_path, name="drainloop")
-    _stage_events(t.source_path)
+    stage_events_source(SRC, t.source_path)
     customer = load_table(spark, SRC, "customer")
 
     def always_fail(df, batch_id):
@@ -532,7 +512,7 @@ def test_checkpoint_invalidation_recovery(spark, tmp_path):
     import shutil
 
     t = _tenant(tmp_path, name="ckptloss")
-    _stage_events(t.source_path)
+    stage_events_source(SRC, t.source_path)
     customer = load_table(spark, SRC, "customer")
 
     q1 = run_tenant_stream(spark, t, customer, available_now=True)
@@ -571,7 +551,7 @@ def test_rate_limited_trigger_batch_cap(spark, tmp_path):
     seen = {}
     for rate, want_batches in ((2, 2), (1, 4)):
         t = _tenant(tmp_path, name=f"rate{rate}")
-        _stage_events(t.source_path, parts=4)
+        stage_events_source(SRC, t.source_path, parts=4)
         q = run_tenant_stream(
             spark, t, customer, available_now=True, max_files_per_trigger=rate
         )
@@ -623,3 +603,68 @@ def test_dlq_mass_replay_job_count_is_independent_of_batch_count(spark, tmp_path
         f"replay job count grew with batch count ({j_small} -> {j_large}):"
         " the unioned-write path regressed to per-batch jobs"
     )
+
+
+@pytest.mark.parametrize("qid", [
+    "stream_watermark_late_drop",  # memory sink
+    "stream_pipeline_cdc",         # tenant drain
+    "stream_cdc_state_merge",      # foreachBatch sink
+])
+def test_run_on_call_id_releases_its_work_dir_and_views(
+        spark, tmp_path, monkeypatch, qid):
+    """A run-on-call id leaves no work dir in TMPDIR and no uuid-named
+    temp view behind, and what it returns still reads its rows."""
+    import re
+    import tempfile
+
+    from mongo_to_clickhouse_spark.queries import queries
+
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    monkeypatch.setattr(tempfile, "tempdir", None)  # re-read TMPDIR
+
+    def uuid_views():
+        return {t.name for t in spark.catalog.listTables()
+                if t.isTemporary and re.search(r"_[0-9a-f]{8,}$", t.name)}
+
+    views = uuid_views()
+    df = queries()[qid](spark, SRC)
+    # session-scoped caches (the checkpoint dir) may stay; per-call dirs not
+    assert [d for d in os.listdir(tmp_path)
+            if not d.startswith("spark-graft-ckpt-")] == []
+    assert uuid_views() == views
+    assert df.count() > 0
+
+
+def test_timed_out_drain_keeps_its_work_dir(tmp_path, monkeypatch):
+    """stop() returns while the last foreachBatch body may still write, so
+    a drain that timed out keeps its work dir and names it; any other
+    exit removes it."""
+    import tempfile
+
+    from mongo_to_clickhouse_spark.streaming.util import (
+        await_drained,
+        call_work_dir,
+    )
+
+    class Stuck:  # a query that never terminates
+        name, id, stopped = "stuck", "q0", False
+
+        def awaitTermination(self, timeout):
+            return False
+
+        def stop(self):
+            self.stopped = True
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    q = Stuck()
+    with pytest.raises(TimeoutError) as err:
+        with call_work_dir("stuck") as work:
+            await_drained(q, timeout_sec=0)
+    assert q.stopped and os.path.isdir(work) and work in str(err.value)
+    with pytest.raises(RuntimeError):
+        with call_work_dir("failed") as work:
+            raise RuntimeError("query failed")
+    assert not os.path.exists(work)
+    with call_work_dir("given", given=str(tmp_path)) as work:
+        pass
+    assert work == str(tmp_path) and os.path.isdir(work)

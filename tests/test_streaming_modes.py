@@ -8,11 +8,10 @@ import os
 import shutil
 import time
 
-import pyarrow.parquet as pq
-
 from mongo_to_clickhouse_spark.config import TenantConfig
 from mongo_to_clickhouse_spark.streaming.pipeline import run_tenant_stream
 from mongo_to_clickhouse_spark.io import load_table
+from mongo_to_clickhouse_spark.streaming.util import stage_events_source
 
 SRC = "/root/testdata/sf0.001"
 
@@ -32,16 +31,11 @@ def _tenant(tmp, name="live") -> TenantConfig:
     )
 
 
-def _stage(t: TenantConfig):
-    os.makedirs(t.source_path, exist_ok=True)
-    shutil.copy(os.path.join(SRC, "events.parquet"), t.source_path)
-
-
 def test_live_trigger_mode_processes_and_stops(spark, tmp_path):
     """processingTime cadence (the reference's flush timer): data flows
     without draining-and-stopping; graceful stop() completes the batch."""
     t = _tenant(tmp_path)
-    _stage(t)
+    stage_events_source(SRC, t.source_path)
     customer = load_table(spark, SRC, "customer")
     q = run_tenant_stream(spark, t, customer, available_now=False)
     try:
@@ -60,7 +54,7 @@ def test_checkpoint_loss_recovery_is_idempotent(spark, tmp_path):
     batch-keyed overwrite writes keep the sink exactly-once even though
     delivery degraded to at-least-once."""
     t = _tenant(tmp_path, name="ckloss")
-    _stage(t)
+    stage_events_source(SRC, t.source_path)
     customer = load_table(spark, SRC, "customer")
 
     q1 = run_tenant_stream(spark, t, customer, available_now=True)
@@ -85,15 +79,17 @@ def test_dedup_within_watermark_reemits_after_horizon(spark, tmp_path):
     import pyarrow as pa
 
     from mongo_to_clickhouse_spark.streaming.pipeline import EVENTS_SCHEMA
-    from mongo_to_clickhouse_spark.streaming.util import await_drained
+    from mongo_to_clickhouse_spark.streaming.util import (
+        drain_to_memory,
+        stage_batch_files,
+    )
 
     src = os.path.join(str(tmp_path), "src")
-    os.makedirs(src)
 
-    def _file(name, rows, mtime_off):
+    def _batch(rows):
         # rows = [(event_id, minutes_from_epoch_base, key)]
         base = 1_704_067_200_000_000  # 2024-01-01 00:00 in epoch-us
-        table = pa.table({
+        return pa.table({
             "event_id": pa.array([r[0] for r in rows], pa.int64()),
             "ts": pa.array(
                 [base + r[1] * 60_000_000 for r in rows], pa.int64()
@@ -103,9 +99,6 @@ def test_dedup_within_watermark_reemits_after_horizon(spark, tmp_path):
             "value": pa.array([1.0] * len(rows)),
             "props": pa.array(["{}"] * len(rows)),
         })
-        p = os.path.join(src, name)
-        pq.write_table(table, p)
-        os.utime(p, (time.time() + mtime_off,) * 2)
 
     # horizon = 10 min. t=0 'a' (emit), t=2 'a' dup (suppress), t=5 'b'
     # (emit). State expiry is WATERMARK-driven, and the watermark a batch
@@ -114,10 +107,12 @@ def test_dedup_within_watermark_reemits_after_horizon(spark, tmp_path):
     # the final batch's t=60 'a' re-emit (it would be suppressed if it
     # arrived while the state was still live, however far its own
     # event time is).
-    _file("f0.parquet", [(1, 0, "a"), (2, 2, "a"), (3, 5, "b")], 0)
-    _file("f1.parquet", [(5, 40, "c")], 1)
-    _file("f2.parquet", [(6, 45, "d")], 2)  # wm now t30: 'a' state evicts
-    _file("f3.parquet", [(4, 60, "a")], 3)
+    stage_batch_files(src, [
+        _batch([(1, 0, "a"), (2, 2, "a"), (3, 5, "b")]),
+        _batch([(5, 40, "c")]),
+        _batch([(6, 45, "d")]),  # wm now t30: 'a' state evicts
+        _batch([(4, 60, "a")]),
+    ])
 
     stream = (
         spark.readStream.schema(EVENTS_SCHEMA)
@@ -127,14 +122,5 @@ def test_dedup_within_watermark_reemits_after_horizon(spark, tmp_path):
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("event_id", "event_type")
     )
-    name = "ddw_sem"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_drained(q)
-    got = {(r["event_id"], r["event_type"]) for r in spark.table(name).collect()}
+    got = {(r["event_id"], r["event_type"]) for r in drain_to_memory(stream).collect()}
     assert got == {(1, "a"), (3, "b"), (5, "c"), (6, "d"), (4, "a")}, got

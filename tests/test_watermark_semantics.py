@@ -7,15 +7,17 @@ from __future__ import annotations
 import os
 
 import pyarrow as pa
-import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from mongo_to_clickhouse_spark.streaming.pipeline import EVENTS_SCHEMA
-from mongo_to_clickhouse_spark.streaming.util import await_drained
+from mongo_to_clickhouse_spark.streaming.util import (
+    drain_to_memory,
+    stage_batch_files,
+)
 
 
-def _events_file(path: str, rows: list[tuple[int, str]]) -> None:
-    """rows = [(event_id, iso_ts)] written with the fixture's column set."""
+def _events(rows: list[tuple[int, str]]) -> pa.Table:
+    """rows = [(event_id, iso_ts)] with the fixture's column set."""
     import datetime as dt
 
     ids = [r[0] for r in rows]
@@ -23,7 +25,7 @@ def _events_file(path: str, rows: list[tuple[int, str]]) -> None:
         int(dt.datetime.fromisoformat(r[1]).replace(tzinfo=dt.timezone.utc).timestamp() * 1_000_000)
         for r in rows
     ]
-    table = pa.table(
+    return pa.table(
         {
             "event_id": pa.array(ids, pa.int64()),
             "ts": pa.array(ts, pa.timestamp("us")),
@@ -33,29 +35,23 @@ def _events_file(path: str, rows: list[tuple[int, str]]) -> None:
             "props": pa.array(["{}"] * len(rows)),
         }
     )
-    pq.write_table(table, path)
 
 
 def test_late_rows_dropped_beyond_watermark(spark, tmp_path):
     """Spark applies the watermark with a one-batch lag (the watermark used
     by batch N is derived from data through batch N-1), so the too-late row
     is staged two batches after the event that advanced the clock."""
-    import time
-
     src = os.path.join(str(tmp_path), "src")
-    os.makedirs(src)
-    # batch 0: events up to 12:00 → watermark (for batch 1+) = 11:50
-    _events_file(
-        os.path.join(src, "a.parquet"),
-        [(1, "2024-01-01T10:05"), (2, "2024-01-01T10:20"), (3, "2024-01-01T12:00")],
-    )
-    time.sleep(1.05)  # file-source ordering is by modification time
-    # batch 1: benign row — watermark 11:50 now definitely in force
-    _events_file(os.path.join(src, "b.parquet"), [(4, "2024-01-01T12:05")])
-    time.sleep(1.05)
-    # batch 2: too-late row — its [10:00, 11:00) window end is below the
-    # 11:50 watermark → must be dropped
-    _events_file(os.path.join(src, "c.parquet"), [(5, "2024-01-01T10:30")])
+    stage_batch_files(src, [
+        # batch 0: events up to 12:00 → watermark (for batch 1+) = 11:50
+        _events([(1, "2024-01-01T10:05"), (2, "2024-01-01T10:20"),
+                 (3, "2024-01-01T12:00")]),
+        # batch 1: benign row — watermark 11:50 now definitely in force
+        _events([(4, "2024-01-01T12:05")]),
+        # batch 2: too-late row — its [10:00, 11:00) window end is below
+        # the 11:50 watermark → must be dropped
+        _events([(5, "2024-01-01T10:30")]),
+    ])
 
     stream = (
         spark.readStream.schema(EVENTS_SCHEMA)
@@ -66,16 +62,7 @@ def test_late_rows_dropped_beyond_watermark(spark, tmp_path):
         .agg(F.count("*").alias("n"))
         .select(F.date_format("w.start", "yyyy-MM-dd HH:mm").alias("ws"), "n")
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("wm_sem")
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(str(tmp_path), "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_drained(q)
-    out = {r["ws"]: r["n"] for r in spark.table("wm_sem").collect()}
+    out = {r["ws"]: r["n"] for r in drain_to_memory(stream).collect()}
 
     # the late 10:30 row must NOT appear in the finalized 10:00 window
     assert out.get("2024-01-01 10:00") == 2, out
